@@ -118,10 +118,10 @@ class EngineConfig:
     # (content: bytes, max_pixels: int) -> decoded image exposing
     # .h .w .crop(y0,y1,x0,x1) .view() .full(), raising
     # codecs.ImageTooLarge / codecs.ImageDecodeError on bad input;
-    # None = the built-in format-sniffing dispatch (codecs.decode_image_lazy).
-    # The production 100 TB path swaps in a native (libjpeg-turbo-class)
-    # decoder here — JPEG decode IS the hot path at that scale, and the
-    # reference's own precedent is its dual PIL/OpenCV load path
+    # None = the built-in format-sniffing dispatch (codecs.decode_image_lazy),
+    # which decodes JPEG through the system libjpeg.  Kept as the seam
+    # tests use to inject fake decoders (tests/test_budget_decoder.py);
+    # the reference's own precedent is its dual PIL/OpenCV load path
     # (src/preprocess.py:335-361, dup src/ocr_engine.py:214-240).
     # Contract-tested end-to-end through the Spark pipeline. ---
     codec: object = None
@@ -144,7 +144,10 @@ class EngineConfig:
 
     # --- Spark-side knobs ---
     arrow_max_records: int = 64  # images inflate ~10x decoded; keep batches small
-    salt_partitions: int = 0     # 0 = derive from spark.sql.shuffle.partitions
+    # 0 = operators.extract.kernel_partitions: one kernel task per core
+    # under a local[...] master, spark.sql.shuffle.partitions under any
+    # other; cluster deployments tune the latter (or set this)
+    salt_partitions: int = 0
 
     @property
     def seal_units_h(self) -> int:

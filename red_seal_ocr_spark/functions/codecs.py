@@ -11,7 +11,10 @@ one unified error surface for the kernel's fault-isolation path:
   (lineage ``failure_kind='decode_error'``)
 
 PNG stays on the lazy scanline-buffer path (``png.py``); JPEG/BMP decode
-to a materialized array behind the same crop/view interface.
+to a materialized array behind the same crop/view interface.  JPEG goes
+through the system libjpeg (``jpeg_native.py``, the same library family
+PIL uses) and falls back to the pure-numpy ``jpeg.py`` where no C
+compiler or libjpeg is available.
 """
 
 from __future__ import annotations
@@ -19,7 +22,8 @@ from __future__ import annotations
 import numpy as np
 
 from .bmp import BmpError, BmpTooLarge, decode_bmp
-from .jpeg import JpegError, JpegTooLarge, decode_jpeg
+from .jpeg import JpegError, JpegTooLarge
+from .jpeg_native import decode_jpeg
 from .png import PngError, PngTooLarge, decode_png_lazy
 
 __all__ = [

@@ -1,9 +1,12 @@
-"""Baseline JPEG codec (pure numpy + stdlib — no PIL/libjpeg).
+"""Baseline JPEG codec (pure numpy + stdlib).
 
 The reference accepts ``jpg/jpeg/png/bmp`` uploads (``main.py:218-226``)
-and decodes them with PIL/OpenCV (``src/preprocess.py:335-361``).  Neither
-library exists in this container, so the engine carries its own baseline
-(ITU-T T.81 sequential DCT, Huffman) codec:
+and decodes them with PIL/OpenCV (``src/preprocess.py:335-361``).  The
+kernel's dispatch decodes JPEG through the system libjpeg
+(``jpeg_native.py``); this module is its fallback where no C compiler or
+libjpeg is available, the test oracle for it, the MJPEG frame decoder of
+the video tier, and the only JPEG *encoder* (fixture synthesis).  It is a
+baseline (ITU-T T.81 sequential DCT, Huffman) codec:
 
 decoder
     SOF0/SOF1 frames, grayscale or YCbCr, sampling factors 1-2 in each
@@ -24,7 +27,7 @@ encoder
     formula), standard Annex-K Huffman tables (shipped in DHT, so any
     spec decoder — including this module's — reads them from the file),
     4:4:4 or 4:2:0, optional restart interval.  Exists to synthesize
-    fixtures: the container has no other way to produce a JPEG.
+    fixtures: libjpeg is linked for decoding only.
 
 The DCT pair is the exact orthonormal DCT-II (verified in tests against a
 naive O(n^4) transform written straight from the T.81 formula), so a

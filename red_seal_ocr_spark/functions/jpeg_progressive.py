@@ -27,9 +27,10 @@ so a progressive re-encode of a baseline fixture must decode bit-equal
 to its baseline twin — that equality is the correctness pin.
 
 This is the format-coverage path, not the hot path: the per-coefficient
-Python refinement loops cost more than the baseline batched loop, and
-the production 100 TB answer remains an injected native decoder (see
-EngineConfig.codec).
+Python refinement loops cost more than the baseline batched loop.  The
+codec dispatch decodes progressive JPEG through the system libjpeg
+(``jpeg_native.py``) and falls back here only when that shim cannot be
+built.
 """
 
 from __future__ import annotations

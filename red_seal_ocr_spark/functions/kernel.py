@@ -108,8 +108,8 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     try:
         # format-sniffing dispatch: png/jpeg/bmp, matching the reference's
         # accepted upload formats (main.py:218-226).  cfg.codec injects a
-        # replacement decoder (native libjpeg-turbo-class at 100 TB) under
-        # the same error contract — the S2 twin of the F10 decoder swap.
+        # replacement decoder under the same error contract — the S2 twin
+        # of the F10 decoder swap.
         src = (cfg.codec or decode_image_lazy)(bytes(content), cfg.max_pixels)
     except ImageTooLarge:
         # deterministic per-item cost budget (header check, O(1)): the

@@ -10,7 +10,10 @@ Plan shape (all public DataFrame API, no RDDs, no custom Catalyst rules):
             salting: media-heavy documents are sprayed across partitions,
             so one hot doc can never pin a partition — SURVEY.md section 4
             item 1; also guards the broadcast-join case where the join
-            would otherwise preserve doc-clustered scan partitioning)
+            would otherwise preserve doc-clustered scan partitioning).
+            Sized by kernel_partitions: one task per core under a
+            local master, spark.sql.shuffle.partitions elsewhere,
+            cfg.salt_partitions when set
          -> mapInPandas(kernel)                   (F1-F13, Arrow batches)
          -> groupBy(doc_id): offset->text map of extracted snippets
       -> map-side splice: left-join the snippet maps onto INTACT document
@@ -31,6 +34,7 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -113,6 +117,31 @@ def _kernel_udf(cfg: EngineConfig):
     return run
 
 
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def kernel_partitions(spark: SparkSession, cfg: EngineConfig = DEFAULT_CONFIG) -> int:
+    """Partition count of the salted kernel exchange.
+
+    ``cfg.salt_partitions`` wins when set.  Under a ``local[...]`` master
+    the default is one task per core (``defaultParallelism``, exactly the
+    N of ``local[N]``): each Python task costs a fixed ~0.2 s on a 4-core
+    VM however few images it holds, which dominates commits of a few
+    dozen media per core (and local[4] measured no slower than 32 or 128
+    tasks on a 2331-media commit).  Any other master keeps
+    ``spark.sql.shuffle.partitions``: there ``defaultParallelism`` counts
+    only the executors registered so far (as low as 2 right after start-up
+    or under dynamic allocation), and a count-based repartition is never
+    split by AQE.
+    """
+    if cfg.salt_partitions:
+        return cfg.salt_partitions
+    sc = spark.sparkContext
+    if _LOCAL_MASTER.fullmatch(sc.master):
+        return sc.defaultParallelism
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def extract_documents(
     spark: SparkSession,
     docs: DataFrame,
@@ -151,7 +180,7 @@ def extract_documents(
     joined = media_spans.join(media, on="media_ref", how="left")
 
     # explicit skew handling: salt by span identity, not doc_id
-    salt_n = cfg.salt_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    salt_n = kernel_partitions(spark, cfg)
     salted = joined.repartition(salt_n, F.xxhash64("doc_id", "offset"))
 
     extracted = salted.mapInPandas(

@@ -93,9 +93,12 @@ def lsh_signature(vec_col, planes: list[list[float]], bits_per_band: int = 4):
     """
     if len(planes) % bits_per_band:
         raise ValueError("n_bits must be divisible by bits_per_band")
+    # exact values, not their hash: a hash collision would hand back
+    # another plane set's signature.  len(planes) keeps two shapes of the
+    # same flattened values apart
     cache_key = (
-        str(vec_col), bits_per_band,
-        hash(tuple(v for p in planes for v in p)),
+        str(vec_col), bits_per_band, len(planes),
+        tuple(float(v) for p in planes for v in p),
     )
     cached = _SIG_EXPR_CACHE.get(cache_key)
     if cached is not None:
@@ -122,7 +125,7 @@ def lsh_signature(vec_col, planes: list[list[float]], bits_per_band: int = 4):
         # bit-identical to the F.lit form (asserted in
         # test_dedup_similarity).
         lit = F.expr(
-            "array(" + ",".join(f"{v!r}D" for v in plane) + ")"
+            "array(" + ",".join(f"{float(v)!r}D" for v in plane) + ")"
         )
         dot = F.aggregate(
             F.zip_with(vec_col, lit, lambda x, y: x * y),

@@ -826,9 +826,8 @@ def q50_mixed_format_extract(spark, sf):
     (deterministic ~50/20/15/15 png/jpeg/progressive-jpeg/bmp mix via
     datagen.media_format), including in-format corrupt/truncated bytes.
     Same output shape as q20; oracled by reference_extract over the same
-    mixed bytes (tools/gen_oracles.py).  Kept to 12 docs: the pure-python
-    JPEG entropy decode (~0.4 s/Mpx) exists for format coverage — the PNG
-    lazy scanline path remains the throughput path."""
+    mixed bytes (tools/gen_oracles.py).  Kept to 12 docs: its oracle is
+    a pinned VALUES literal at that size."""
     from ..operators.extract import extract_documents
     from ..sources.spark_tables import documents_df, media_df
 

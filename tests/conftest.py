@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -26,3 +27,24 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(scope="session")
+def jpeg_decode_paths():
+    """Both JPEG paths of ``codecs.decode_image_lazy`` as context managers:
+    ``"native"`` decodes through the libjpeg shim, ``"numpy"`` forces the
+    ``jpeg.decode_jpeg`` fallback.  Where the shim cannot be built, both
+    run the fallback."""
+    from red_seal_ocr_spark.functions import jpeg_native
+
+    @contextlib.contextmanager
+    def forced(lib):
+        saved = jpeg_native._lib
+        jpeg_native._lib = lib
+        try:
+            yield
+        finally:
+            jpeg_native._lib = saved
+
+    native = jpeg_native._library() or False
+    return {"native": lambda: forced(native), "numpy": lambda: forced(False)}

@@ -38,7 +38,16 @@ def _png_with_header(w: int, h: int, idat: bytes) -> bytes:
     return SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
-def test_huge_dimensions_rejected_before_decode():
+def _jpeg_with_header(w: int, h: int) -> bytes:
+    """A small JPEG re-headed to claim w x h, with a garbage entropy tail."""
+    from red_seal_ocr_spark.functions.jpeg import encode_jpeg
+
+    data = encode_jpeg(np.full((16, 16, 3), 200, dtype=np.uint8), 90)
+    at = data.find(b"\xff\xc0") + 5  # SOF0 marker, length, precision
+    return data[:at] + struct.pack(">HH", h, w) + data[at + 4 : -30] + bytes(30)
+
+
+def test_huge_dimensions_rejected_before_decode(jpeg_decode_paths):
     bomb = _png_with_header(50_000, 50_000, zlib.compress(b"\x00" * 16))
     t0 = time.perf_counter()
     with pytest.raises(PngTooLarge):
@@ -46,6 +55,14 @@ def test_huge_dimensions_rejected_before_decode():
     assert time.perf_counter() - t0 < 0.2  # header-time rejection, no inflate
     r = process_image(bomb)
     assert r.status == TOO_LARGE and r.text is None
+    # the same for a JPEG header, on both JPEG decode paths
+    jbomb = _jpeg_with_header(50_000, 50_000)
+    for path in jpeg_decode_paths.values():
+        with path():
+            t0 = time.perf_counter()
+            r = process_image(jbomb)
+            assert time.perf_counter() - t0 < 0.2
+            assert r.status == TOO_LARGE and r.text is None
 
 
 def test_zlib_bomb_inflate_is_bounded():
@@ -58,11 +75,19 @@ def test_zlib_bomb_inflate_is_bounded():
     assert time.perf_counter() - t0 < 1.0
 
 
-def test_config_pixel_budget_applies():
+def test_config_pixel_budget_applies(jpeg_decode_paths):
+    from red_seal_ocr_spark.functions.jpeg import encode_jpeg
+
     img = np.full((20, 30, 3), 255, dtype=np.uint8)
     content = encode_png(img)
     assert process_image(content).status == OK
     assert process_image(content, EngineConfig(max_pixels=100)).status == TOO_LARGE
+    jpg = encode_jpeg(img, 90)
+    for path in jpeg_decode_paths.values():
+        with path():
+            assert process_image(jpg).status == OK
+            for data in (jpg, jpg[:-30] + bytes(30)):  # corrupt tail too
+                assert process_image(data, EngineConfig(max_pixels=100)).status == TOO_LARGE
 
 
 def test_too_large_passes_through_batch_unharmed(spark):

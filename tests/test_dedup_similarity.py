@@ -1324,3 +1324,47 @@ def test_curate_with_gopher_stage(spark):
     assert not ({98, 99} & kept_ids) and len(kept_ids) == 10
     # downstream schema unchanged: no flag columns leak out
     assert "gopher_pass" not in kept_on.columns
+
+
+def _numpy_bands(planes, vec, bits_per_band):
+    import numpy as np
+
+    bits = (np.asarray(planes, dtype=np.float64) @ np.asarray(vec) >= 0).astype(int)
+    return [
+        int(sum(bits[b * bits_per_band + r] << r for r in range(bits_per_band)))
+        for b in range(len(bits) // bits_per_band)
+    ]
+
+
+def test_lsh_signature_cache_keys_on_shape_and_exact_values(spark):
+    """Plane sets with the same flattened values but different shapes must
+    not share a memoized signature Column."""
+    from red_seal_ocr_spark.operators.similarity import lsh_signature
+
+    flat = [0.5, -1.0, 0.25, 2.0, -0.75, 1.5, 0.125, -2.0]
+    wide = [flat[:4], flat[4:]]                     # 2 planes of dim 4
+    tall = [flat[i : i + 2] for i in range(0, 8, 2)]  # 4 planes of dim 2
+    sig_wide = lsh_signature(F.col("v"), wide, 2)
+    sig_tall = lsh_signature(F.col("v"), tall, 2)
+    assert sig_tall is not sig_wide
+    assert lsh_signature(F.col("v"), [list(p) for p in tall], 2) is sig_tall
+
+    v2 = [1.0, -0.5]
+    got = spark.createDataFrame([(v2,)], "v array<double>").select(sig_tall).first()[0]
+    assert list(got) == _numpy_bands(tall, v2, 2)
+
+
+def test_lsh_signature_accepts_numpy_planes(spark):
+    """numpy scalars reach the literal as exact float reprs, so np.float64
+    and np.float32 planes parse and band like the same values as floats."""
+    import numpy as np
+
+    from red_seal_ocr_spark.operators.similarity import lsh_signature
+
+    rng = np.random.Generator(np.random.PCG64(5))
+    vec = [0.3, -1.2, 0.7, 2.0]
+    df = spark.createDataFrame([(vec,)], "v array<double>")
+    for dtype in (np.float64, np.float32):
+        planes = rng.standard_normal((8, 4)).astype(dtype)
+        got = df.select(lsh_signature(F.col("v"), planes, 4)).first()[0]
+        assert list(got) == _numpy_bands(planes, vec, 4), dtype

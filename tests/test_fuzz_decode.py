@@ -5,7 +5,8 @@ garbage; the kernel's contract is that arbitrary bytes either decode or
 surface as a counted failure — never an unhandled exception, never a
 hang.  These properties drive random corruptions (truncation, byte
 flips, junk splices, pure noise) through all three codecs and the full
-kernel.
+kernel.  JPEG inputs run through both decode paths of the dispatch: the
+libjpeg shim and the numpy fallback.
 """
 
 from __future__ import annotations
@@ -54,15 +55,17 @@ def _encoded(seed: int, fmt: int) -> bytes:
     fmt=st.integers(0, 4),
     cut=st.floats(0.01, 0.999),
 )
-def test_truncation_never_escapes_the_error_contract(seed, fmt, cut):
+def test_truncation_never_escapes_the_error_contract(jpeg_decode_paths, seed, fmt, cut):
     data = _encoded(seed, fmt)
     trunc = data[: max(1, int(len(data) * cut))]
-    try:
-        out = decode_image_lazy(trunc)
-        # a prefix that still decodes must be a fully intact image
-        assert out.full().shape[2] == 3
-    except ImageDecodeError:
-        pass  # the ONLY allowed failure type
+    for path in jpeg_decode_paths.values():
+        with path():
+            try:
+                out = decode_image_lazy(trunc)
+                # a prefix that still decodes must be a fully intact image
+                assert out.full().shape[2] == 3
+            except ImageDecodeError:
+                pass  # the ONLY allowed failure type
 
 
 @settings(max_examples=120, deadline=None)
@@ -72,37 +75,45 @@ def test_truncation_never_escapes_the_error_contract(seed, fmt, cut):
     flips=st.lists(st.tuples(st.floats(0, 0.999), st.integers(0, 255)),
                    min_size=1, max_size=8),
 )
-def test_byte_flips_never_escape_the_error_contract(seed, fmt, flips):
+def test_byte_flips_never_escape_the_error_contract(jpeg_decode_paths, seed, fmt, flips):
     data = bytearray(_encoded(seed, fmt))
     for pos_frac, val in flips:
         data[int(pos_frac * len(data))] = val
-    try:
-        out = decode_image_lazy(bytes(data))
-        assert out.full().dtype == np.uint8
-    except ImageDecodeError:
-        pass
+    for path in jpeg_decode_paths.values():
+        with path():
+            try:
+                out = decode_image_lazy(bytes(data))
+                assert out.full().dtype == np.uint8
+            except ImageDecodeError:
+                pass
 
 
 @settings(max_examples=80, deadline=None)
 @given(junk=st.binary(min_size=0, max_size=256))
-def test_pure_noise_is_a_counted_decode_failure(junk):
-    r = process_image(junk)
-    assert r.status in (DECODE_ERROR, TOO_LARGE)
-    assert r.text is None
+def test_pure_noise_is_a_counted_decode_failure(jpeg_decode_paths, junk):
+    # behind a JPEG magic too, so the noise reaches the JPEG decoders
+    for data in (junk, b"\xff\xd8\xff" + junk):
+        for path in jpeg_decode_paths.values():
+            with path():
+                r = process_image(data)
+                assert r.status in (DECODE_ERROR, TOO_LARGE)
+                assert r.text is None
 
 
 @settings(max_examples=60, deadline=None)
 @given(seed=st.integers(0, 2**16), fmt=st.integers(0, 4),
        cut=st.floats(0.05, 0.95))
-def test_kernel_never_raises_on_corrupt_media(seed, fmt, cut):
+def test_kernel_never_raises_on_corrupt_media(jpeg_decode_paths, seed, fmt, cut):
     """The full kernel path: corrupt bytes -> ImageResult with a failure
     status (the span passes through unchanged upstream), never an
     exception."""
     data = _encoded(seed, fmt)
-    r = process_image(data[: int(len(data) * cut)])
-    assert r.status in (OK, DECODE_ERROR, TOO_LARGE)
-    r2 = process_image(data)
-    assert r2.status == OK  # the uncorrupted original always decodes
+    for path in jpeg_decode_paths.values():
+        with path():
+            r = process_image(data[: int(len(data) * cut)])
+            assert r.status in (OK, DECODE_ERROR, TOO_LARGE)
+            r2 = process_image(data)
+            assert r2.status == OK  # the uncorrupted original always decodes
 
 
 # ---------------------------------------------------------------------------

@@ -17,6 +17,7 @@ import pytest
 
 from red_seal_ocr_spark.functions.codecs import (
     ImageDecodeError,
+    ImageTooLarge,
     decode_image_lazy,
 )
 from red_seal_ocr_spark.functions.jpeg import (
@@ -79,13 +80,30 @@ def test_progressive_gray_twin_equality():
     assert prog.shape == (25, 33, 3)
 
 
-def test_progressive_through_the_codecs_dispatch():
-    """The kernel path sees progressive bytes through decode_image_lazy."""
+def test_progressive_through_the_codecs_dispatch(jpeg_decode_paths):
+    """The kernel path sees progressive bytes through decode_image_lazy;
+    the numpy fallback is decode_jpeg bit for bit."""
     img = _gradient(32, 48)
     data = encode_jpeg_progressive(img, 95, "420")
-    out = decode_image_lazy(data)
+    with jpeg_decode_paths["numpy"]():
+        out = decode_image_lazy(data)
     assert out.full().shape == (32, 48, 3)
     assert np.array_equal(out.full(), decode_jpeg(data))
+
+
+@pytest.mark.parametrize("sub", ["444", None])
+def test_progressive_through_the_native_dispatch(jpeg_decode_paths, sub):
+    """Through the libjpeg shim, q100 fixtures (the datagen setting)
+    decode within 2 levels of decode_jpeg: libjpeg's integer IDCT against
+    jpeg.py's exact float one."""
+    img = _gradient(32, 48) if sub else _gradient(32, 48)[:, :, 0]
+    for data in (encode_jpeg_progressive(img, 100, sub or "444"),
+                 encode_jpeg(img, 100, sub or "444")):
+        with jpeg_decode_paths["native"]():
+            out = decode_image_lazy(data).full()
+        want = decode_jpeg(data)
+        assert out.shape == want.shape
+        assert np.abs(out.astype(np.int16) - want).max() <= 2
 
 
 def test_progressive_dimensions_header_time():
@@ -93,13 +111,18 @@ def test_progressive_dimensions_header_time():
     assert jpeg_dimensions(data) == (60, 40)
 
 
-def test_progressive_pixel_budget_at_header_time():
+def test_progressive_pixel_budget_at_header_time(jpeg_decode_paths):
     data = encode_jpeg_progressive(_gradient(64, 64), 90, "444")
     with pytest.raises(JpegTooLarge):
         decode_jpeg(data, max_pixels=1000)
     # corrupt the entropy tail: the budget check must still fire first
     with pytest.raises(JpegTooLarge):
         decode_jpeg(data[:-30] + bytes(30), max_pixels=1000)
+    for path in jpeg_decode_paths.values():
+        with path():
+            for blob in (data, data[:-30] + bytes(30)):
+                with pytest.raises(ImageTooLarge):
+                    decode_image_lazy(blob, max_pixels=1000)
 
 
 # ---------------------------------------------------------------------------
@@ -107,30 +130,34 @@ def test_progressive_pixel_budget_at_header_time():
 # ---------------------------------------------------------------------------
 
 
-def test_progressive_truncation_fails_loudly():
+def test_progressive_truncation_fails_loudly(jpeg_decode_paths):
     data = encode_jpeg_progressive(_gradient(48, 48), 90, "444")
-    saw_error = False
-    for cut in (0.15, 0.35, 0.55, 0.75, 0.95):
-        trunc = data[: int(len(data) * cut)]
-        try:
-            out = decode_jpeg(trunc)
-            assert out.shape[2] == 3  # a decodable prefix is a full image
-        except JpegError:
-            saw_error = True
-    assert saw_error  # at least the early cuts must fail
+    for path in jpeg_decode_paths.values():
+        saw_error = False
+        with path():
+            for cut in (0.15, 0.35, 0.55, 0.75, 0.95):
+                trunc = data[: int(len(data) * cut)]
+                try:
+                    out = decode_image_lazy(trunc).full()
+                    assert out.shape[2] == 3  # a decodable prefix is a full image
+                except ImageDecodeError:
+                    saw_error = True
+        assert saw_error  # at least the early cuts must fail
 
 
-def test_progressive_byte_flips_stay_inside_contract():
+def test_progressive_byte_flips_stay_inside_contract(jpeg_decode_paths):
     data = encode_jpeg_progressive(_gradient(32, 32), 90, "420")
     rng = np.random.Generator(np.random.PCG64(3))
     for _ in range(60):
         mut = bytearray(data)
         for _ in range(int(rng.integers(1, 4))):
             mut[int(rng.integers(2, len(mut)))] = int(rng.integers(0, 256))
-        try:
-            decode_image_lazy(bytes(mut))
-        except ImageDecodeError:
-            pass  # the ONLY allowed failure type
+        for path in jpeg_decode_paths.values():
+            with path():
+                try:
+                    decode_image_lazy(bytes(mut))
+                except ImageDecodeError:
+                    pass  # the ONLY allowed failure type
 
 
 def test_progressive_scan_header_validation():

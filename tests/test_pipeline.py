@@ -1,10 +1,13 @@
 """Spark pipeline tests: span equality vs oracle, splice plumbing, skew salt
 invariance (SURVEY.md section 5, test strategies #2 and #4)."""
 
+import re
+from types import SimpleNamespace
+
 import pytest
 
 from red_seal_ocr_spark.config import EngineConfig
-from red_seal_ocr_spark.operators.extract import extract_documents
+from red_seal_ocr_spark.operators.extract import extract_documents, kernel_partitions
 from red_seal_ocr_spark.oracle import extract_failure_count, reference_extract
 from red_seal_ocr_spark.sources.datagen import build_local
 from red_seal_ocr_spark.sources.spark_tables import documents_df, media_df
@@ -52,21 +55,66 @@ def test_metric_columns_consistent(spark_out):
         assert row.n_failures == sum(1 for s in row.spans if s.kind == "media")
 
 
+def _kernel_exchange_partitions(df) -> set[int]:
+    """Partition counts of the salted kernel exchange in the executed
+    (final and initial adaptive) plan; Spark plans one salt partition as
+    a SinglePartition exchange."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    counts = {int(n) for n in re.findall(
+        r"Exchange hashpartitioning\(xxhash64\(doc_id#\d+, offset#\d+, 42\), (\d+)\)",
+        plan,
+    )}
+    if "Exchange SinglePartition, REPARTITION_BY_NUM" in plan:
+        counts.add(1)
+    return counts
+
+
 def test_salt_partition_invariance(spark, oracle_out):
-    """Output is identical under degenerate and fine salting (SURVEY.md
-    hard-parts list: salting must not leak into grouping)."""
+    """Output is identical under degenerate, fine and default salting
+    (SURVEY.md hard-parts list: salting must not leak into grouping).  The
+    default under a local master sizes the kernel exchange to one task per
+    core, not to spark.sql.shuffle.partitions; an explicit salt_partitions
+    wins."""
     spans_want, _ = oracle_out
     docs = documents_df(spark, 8)
     media = media_df(spark, 8)
-    for salt_n in (1, 7):
-        out = extract_documents(
-            spark, docs, media, EngineConfig(salt_partitions=salt_n)
-        ).collect()
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for cfg, want_n in ((EngineConfig(salt_partitions=1), 1),
+                        (EngineConfig(salt_partitions=7), 7),
+                        (EngineConfig(), cores)):
+        df = extract_documents(spark, docs, media, cfg)
+        out = df.collect()
+        assert _kernel_exchange_partitions(df) == {want_n}, cfg.salt_partitions
         for row in out:
             want = [(s["kind"], s["text"], s["media_ref"], s["offset"])
                     for s in spans_want[row["doc_id"]]]
             got = [(s.kind, s.text, s.media_ref, s.offset) for s in row.spans]
-            assert got == want, (salt_n, row["doc_id"])
+            assert got == want, (cfg.salt_partitions, row["doc_id"])
+
+
+def _fake_session(master: str, cores: int = 2, shuffle: int = 64):
+    conf = {"spark.sql.shuffle.partitions": str(shuffle)}
+    return SimpleNamespace(
+        sparkContext=SimpleNamespace(master=master, defaultParallelism=cores),
+        conf=SimpleNamespace(get=conf.__getitem__),
+    )
+
+
+def test_kernel_partitions_follow_the_master():
+    """One kernel task per core only under a local[...] master.  Elsewhere
+    defaultParallelism counts just the executors registered so far (low
+    right after start-up or under dynamic allocation), so the kernel
+    exchange keeps spark.sql.shuffle.partitions; salt_partitions wins
+    everywhere."""
+    for master in ("local", "local[4]", "local[*]", "local[4,2]"):
+        assert kernel_partitions(_fake_session(master)) == 2, master
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:6443",
+                   "local-cluster[2,1,1024]"):
+        assert kernel_partitions(_fake_session(master)) == 64, master
+    for master in ("local[4]", "yarn"):
+        got = kernel_partitions(_fake_session(master), EngineConfig(salt_partitions=7))
+        assert got == 7, master
 
 
 def test_dangling_media_ref_counts_as_failure(spark):

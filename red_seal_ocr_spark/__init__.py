@@ -12,3 +12,10 @@ that maps every reference operator to its Spark-first implementation.
 """
 
 __version__ = "0.1.0"
+
+# Every engine UDF imports this package in its Python worker, so the
+# worker's per-task importlib.invalidate_caches() stops re-reading Spark's
+# zips from the next task on (worker_imports module docstring).
+from .worker_imports import install as _install_lazy_zip_invalidation
+
+_install_lazy_zip_invalidation()

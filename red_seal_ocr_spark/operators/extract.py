@@ -22,10 +22,16 @@ Plan shape (all public DataFrame API, no RDDs, no custom Catalyst rules):
       -> write data + lineage, atomic snapshot commit
 
 Scale notes (100 TB / 10^12 docs):
-- the text corpus never shuffles: only (kind, media_ref, offset) tuples,
-  media bytes, and extracted snippets move; the one corpus-sized join
-  input (the docs side of the splice) vanishes when the documents table
-  is bucketed by doc_id (tests/test_bucketing.py).
+- what moves per commit: the salted exchange carries (doc_id, offset,
+  media_ref) tuples with their media bytes, and the snippet aggregate
+  carries extracted snippets.  The text corpus moves too: the splice
+  join's docs side, the whole documents table with span text, is
+  hash-partitioned by doc_id (spark.sql.shuffle.partitions ways) in the
+  first shuffle stage of every commit.  AQE usually turns the join into a
+  broadcast of the snippet side over a local read afterwards, but only
+  once that stage has already written the corpus.  Bucketing the
+  documents table by doc_id removes this shuffle
+  (tests/test_bucketing.py); it is the remedy at corpus scale.
 - the kernel is the bottleneck by design: everything around it is
   column-pruned (the media path never reads span text).
 - failed media spans pass through unchanged and are counted per partition
@@ -125,10 +131,11 @@ def kernel_partitions(spark: SparkSession, cfg: EngineConfig = DEFAULT_CONFIG) -
 
     ``cfg.salt_partitions`` wins when set.  Under a ``local[...]`` master
     the default is one task per core (``defaultParallelism``, exactly the
-    N of ``local[N]``): each Python task costs a fixed ~0.2 s on a 4-core
-    VM however few images it holds, which dominates commits of a few
-    dozen media per core (and local[4] measured no slower than 32 or 128
-    tasks on a 2331-media commit).  Any other master keeps
+    N of ``local[N]``): each Python task still costs ~60 ms of a core
+    however few images it holds (4-core VM, engine worker, trivial
+    ``mapInPandas``), which adds up over commits of a few dozen media per
+    core (and local[4] measured no slower than 32 or 128 tasks on a
+    2331-media commit).  Any other master keeps
     ``spark.sql.shuffle.partitions``: there ``defaultParallelism`` counts
     only the executors registered so far (as low as 2 right after start-up
     or under dynamic allocation), and a count-based repartition is never
@@ -154,34 +161,32 @@ def extract_documents(
     n_media, n_failures`` — per-doc metric columns feed the lineage
     aggregation after the write (no recompute, SURVEY.md section 4).
     """
+    # Every expression below is a SQL string (selectExpr / F.expr): the
+    # analyzer builds the same plan as the equivalent Column-API trees,
+    # but from one py4j call per expression instead of one per node,
+    # which keeps plan building at ~0.1 s per commit.
+    #
     # media path: this branch never needs span.text, but Generate blocks
     # nested-schema pruning for struct-typed explodes — extracting the
     # needed fields with GetArrayStructFields (arrays_zip of direct field
-    # paths) BEFORE the explode restores it: the scan's ReadSchema drops
-    # text (verified via .explain), which at 10^12-doc scale removes the
-    # dominant column from this branch's I/O.
-    slim = docs.select(
-        "doc_id",
-        F.arrays_zip(
-            F.col("spans.kind").alias("kind"),
-            F.col("spans.media_ref").alias("media_ref"),
-            F.col("spans.offset").alias("offset"),
-        ).alias("mspans"),
-    )
+    # paths, which names the zipped fields kind/media_ref/offset) BEFORE
+    # the explode restores it: the scan's ReadSchema drops text
+    # (tests/test_pipeline.py::test_media_branch_scan_prunes_span_text),
+    # which at 10^12-doc scale removes the dominant column from this
+    # branch's I/O.
     media_spans = (
-        slim.select("doc_id", F.explode("mspans").alias("span"))
-        .filter(F.col("span.kind") == "media")
-        .select(
-            "doc_id",
-            F.col("span.offset").alias("offset"),
-            F.col("span.media_ref").alias("media_ref"),
+        docs.selectExpr(
+            "doc_id", "arrays_zip(spans.kind, spans.media_ref, spans.offset) AS mspans"
         )
+        .selectExpr("doc_id", "explode(mspans) AS span")
+        .where("span.kind = 'media'")
+        .selectExpr("doc_id", "span.offset AS offset", "span.media_ref AS media_ref")
     )
     joined = media_spans.join(media, on="media_ref", how="left")
 
     # explicit skew handling: salt by span identity, not doc_id
     salt_n = kernel_partitions(spark, cfg)
-    salted = joined.repartition(salt_n, F.xxhash64("doc_id", "offset"))
+    salted = joined.repartition(salt_n, F.expr("xxhash64(doc_id, offset)"))
 
     extracted = salted.mapInPandas(
         _kernel_udf(cfg),
@@ -193,57 +198,43 @@ def extract_documents(
     # only the extracted snippets — offset -> text for successful media
     # spans, tiny relative to the corpus — are grouped per doc and joined
     # back onto the INTACT document rows; a transform over the original
-    # spans array splices them in place.  Text spans never leave their
-    # scan partition's row; original array order (offset-ascending per
-    # the input_hint contract) is preserved by construction.  At cluster
-    # scale the docs side of this join can additionally be bucketed by
-    # doc_id to avoid shuffling the corpus at all (see tests/test_bucketing).
+    # spans array splices them in place.  Original array order
+    # (offset-ascending per the input_hint contract) is preserved by
+    # construction.
     aggs = [
         # collect_list drops nulls, so failed spans contribute nothing
         # to the splice map but still feed the watchdog metric below
-        F.map_from_entries(
-            F.collect_list(F.when(F.col("ok"), F.struct("offset", "text")))
-        ).alias("extracted_map"),
-        F.min(F.when(F.col("ok"), F.col("confidence"))).alias("min_ocr_confidence"),
-        F.max("kernel_ms").alias("max_kernel_ms"),
+        "map_from_entries(collect_list(CASE WHEN ok THEN struct(offset, text) END))"
+        " AS extracted_map",
+        "min(CASE WHEN ok THEN confidence END) AS min_ocr_confidence",
+        "max(kernel_ms) AS max_kernel_ms",
     ]
     if cfg.emit_bboxes:
         # F12 metric payload: offset -> per-component [y0, x0, y1, x1];
         # rides the same snippets-only aggregate, never touches spans
         aggs.append(
-            F.map_from_entries(
-                F.collect_list(F.when(F.col("ok"), F.struct("offset", "bboxes")))
-            ).alias("seal_bboxes")
+            "map_from_entries(collect_list(CASE WHEN ok THEN struct(offset, bboxes) END))"
+            " AS seal_bboxes"
         )
-    results = extracted.groupBy("doc_id").agg(*aggs)
+    results = extracted.groupBy("doc_id").agg(*map(F.expr, aggs))
 
-    spliced = docs.join(results, on="doc_id", how="left").select(
+    n_media = "size(filter(spans, s -> s.kind = 'media'))"
+    spliced = docs.join(results, on="doc_id", how="left").selectExpr(
         "doc_id",
-        F.transform(
-            "spans",
-            lambda s: F.when(
-                (s["kind"] == "media")
-                & F.col("extracted_map").isNotNull()
-                & F.col("extracted_map")[s["offset"]].isNotNull(),
-                F.struct(
-                    F.lit("text").alias("kind"),
-                    F.col("extracted_map")[s["offset"]].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                    s["offset"].alias("offset"),
-                ),
-            ).otherwise(s),
-        ).alias("spans"),
-        F.size("spans").alias("n_spans"),
-        F.size(F.filter("spans", lambda s: s["kind"] == "media")).alias("n_media"),
-        (
-            F.size(F.filter("spans", lambda s: s["kind"] == "media"))
-            - F.coalesce(F.size(F.map_keys("extracted_map")), F.lit(0))
-        ).alias("n_failures"),
-        F.col("min_ocr_confidence"),
+        "transform(spans, s -> CASE"
+        " WHEN s.kind = 'media' AND extracted_map IS NOT NULL"
+        " AND extracted_map[s.offset] IS NOT NULL"
+        " THEN struct('text' AS kind, extracted_map[s.offset] AS text,"
+        " s.media_ref AS media_ref, s.offset AS offset)"
+        " ELSE s END) AS spans",
+        "size(spans) AS n_spans",
+        f"{n_media} AS n_media",
+        f"{n_media} - coalesce(size(map_keys(extracted_map)), 0) AS n_failures",
+        "min_ocr_confidence",
         # watchdog: slowest kernel item per doc (metric only — never part
         # of the span-equality tuple; feeds the lineage aggregation)
-        F.col("max_kernel_ms"),
-        *([F.col("seal_bboxes")] if cfg.emit_bboxes else []),
+        "max_kernel_ms",
+        *(["seal_bboxes"] if cfg.emit_bboxes else []),
     )
     return spliced
 
@@ -298,9 +289,11 @@ def run_extract(
     lineage_files: list[str] = []
     if data_files:
         # per-partition lineage from the files just written (column-pruned
-        # read of the metric columns only; zero recompute of the kernel)
+        # read of the metric columns only; zero recompute of the kernel).
+        # The files' schema is the plan's, so passing it skips the parquet
+        # footer-inference job a schema-less read would start.
         lineage = (
-            spark.read.parquet(*data_files)
+            spark.read.schema(result.schema).parquet(*data_files)
             .groupBy(F.input_file_name().alias("partition_file"))
             .agg(
                 F.count("*").alias("docs"),

@@ -93,6 +93,31 @@ def test_salt_partition_invariance(spark, oracle_out):
             assert got == want, (cfg.salt_partitions, row["doc_id"])
 
 
+def test_media_branch_scan_prunes_span_text(spark, tmp_path):
+    """Nested-schema pruning of the media branch: its scan of the
+    documents table reads (kind, media_ref, offset) of each span but never
+    span.text; only the splice side reads the full spans.  Checked on the
+    physical plan, so no job runs beyond writing the inputs."""
+    docs_dir, media_dir = str(tmp_path / "docs"), str(tmp_path / "media")
+    documents_df(spark, 4).write.parquet(docs_dir)
+    media_df(spark, 4).write.parquet(media_dir)
+    out = extract_documents(
+        spark, spark.read.parquet(docs_dir), spark.read.parquet(media_dir)
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    docs_scans = {
+        m.group(1)
+        for line in plan.splitlines()
+        if "FileScan parquet" in line and docs_dir in line
+        for m in [re.search(r"ReadSchema: (\S+)", line)]
+    }
+    assert docs_scans == {
+        "struct<doc_id:string,spans:array<struct<kind:string,media_ref:string,offset:int>>>",
+        "struct<doc_id:string,spans:array<struct<kind:string,text:string,"
+        "media_ref:string,offset:int>>>",
+    }
+
+
 def _fake_session(master: str, cores: int = 2, shuffle: int = 64):
     conf = {"spark.sql.shuffle.partitions": str(shuffle)}
     return SimpleNamespace(

@@ -10,11 +10,11 @@ per-record operator chain (``src/ocr_engine.py:284-450``; SURVEY.md 2.3):
     -> downscale cap (F9) -> per-component normalized crop + template OCR
        (F10/F11) -> bbox rescale (F12) -> text concat (F13)
 
-plus the input-stats probe (F15) surfaced as metrics.  The batch wrapper
-:func:`extract_texts_batch` is what the Spark pandas UDF calls: it loops
-images inside one Arrow batch (images are variable-size, so cross-image
-vectorization is impossible; all per-image math is vectorized numpy — no
-per-pixel Python, satisfying the no-per-row-Python invariant).
+plus the input-stats probe (F15) surfaced as metrics.  The Spark side
+(``operators.extract._kernel_udf``, a ``mapInPandas`` function) calls it
+once per image inside each Arrow batch (images are variable-size, so
+cross-image vectorization is impossible; all per-image math is vectorized
+numpy — no per-pixel Python, satisfying the no-per-row-Python invariant).
 
 Fault isolation follows the reference (``main.py:132-137``): a bad image
 never kills the batch — the north rule maps it to "media span passes
@@ -211,21 +211,3 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     return ImageResult("".join(texts), OK, len(kept), red_px, mean, std,
                        confidence, tuple(boxes))
 
-
-def extract_texts_batch(
-    contents, cfg: EngineConfig = DEFAULT_CONFIG
-) -> tuple[list, list, list]:
-    """Batch wrapper for Arrow batches: bytes iterable -> (texts, ok, n_comp).
-
-    ``texts[i]`` is None when decode failed (the span passes through
-    unchanged); otherwise the concatenated seal text for that media span.
-    """
-    texts: list = []
-    oks: list = []
-    ncomp: list = []
-    for content in contents:
-        r = process_image(content, cfg)
-        texts.append(r.text)
-        oks.append(r.status == OK)
-        ncomp.append(r.n_components)
-    return texts, oks, ncomp

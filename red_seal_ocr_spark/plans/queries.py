@@ -4,9 +4,11 @@ Each query exercises operators from the SURVEY.md section 2 inventory on
 the driver-provided neutral tables (region nation customer supplier part
 orders lineitem events documents embeddings), plus the training-data
 pipeline operators (dedup, similarity search, text analysis).  Keys map
-1:1 between ``SPARK_QUERIES`` and ``ORACLE_SQL``; queries without an
-oracle entry are genuinely non-SQL-expressible (the extraction pipeline)
-and get the driver's rows-only check.
+1:1 between ``SPARK_QUERIES`` and ``ORACLE_SQL``.  Queries whose Spark
+expressions have no DuckDB builtin twin (the extraction flagship, the
+hashing, float-fold and UDF operators) take their oracle from
+``generated_oracles.py``: values computed by independent pure-Python
+mirrors and pinned as ``VALUES`` literals.
 
 Determinism rules for hash-stable comparison:
 - prefer integer/string outputs; money as bigint cents;
@@ -16,82 +18,10 @@ Determinism rules for hash-stable comparison:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-# Tables whose scans are re-spread when the file layout under-splits
-# (guide section 2.5 "input skew: one huge unsplittable file ...
-# repartition immediately after the read").  The driver testdata writes
-# each table as ONE parquet file with ~1M-row row groups, so a
-# `documents` scan at any bench sf is 1-2 tasks and every expensive
-# row-local stage (tokenize/regex/md5/pandas UDF) single-threads until
-# the first exchange.  The repartition is SCALE-ADAPTIVE: it fires only
-# when the scan yields fewer splits than 2x the cluster parallelism —
-# at production input sizes (thousands of row groups) the condition is
-# false and the plan is untouched.  Excluded on purpose:
-# - orders: q92's approx_percentile sketch merge is partitioning-
-#   sensitive and its generated oracle pins the round-start layout;
-# - lineitem: q01 rounds corpus-sized double sums to 2 decimals; the
-#   few-row-group layout already splits, and re-ordering that sum for a
-#   ~1s query is not worth the boundary-flip risk.
-# table -> unique id column: the re-spread hash-partitions on the id
-# rather than round-robin, because keyless repartition pays a local
-# sort of every input row (spark.sql.execution.sortBeforeRepartition,
-# needed for retry determinism — guide 2.5) that costs more than the
-# spread buys on cheap-scan queries; hashing the unique id is
-# deterministic without the sort, spreads evenly, and bonus: the
-# resulting HashPartitioning(id) satisfies any downstream
-# groupBy(id, ...) clustering, so per-document aggregates after the
-# spread need no further exchange.  `events` is deliberately absent:
-# its queries' first stages are cheap projections and the spread was
-# measured pure overhead there (+2 s each at sf1.0).
-_SPREAD_TABLES = {"documents": "doc_id", "embeddings": "vec_id"}
-_SPREAD_CACHE: dict[str, int] = {}
-
-# Below this input size the re-spread exchange costs more than the
-# parallelism buys (measured by interleaved A/B: at the 0.6 MB sf0.1
-# documents file the spread was +0.5..+2.1 s on the same queries where
-# the 5.9 MB sf1.0 file made it -1..-10 s) — the exchange's fixed cost
-# is flat while the single-task first-stage work it parallelizes scales
-# with bytes.  Size-gating keeps the decision input-adaptive at every
-# scale: tiny inputs stay single-stage, mid-size single-file inputs
-# spread, production inputs already split and skip the branch on the
-# partition-count test alone.
-_SPREAD_MIN_BYTES = 4 << 20
-
-
-def _spread(spark: SparkSession, df: DataFrame, path: str,
-            key: str) -> DataFrame:
-    import os as _os
-
-    target = 2 * spark.sparkContext.defaultParallelism
-    parts = _SPREAD_CACHE.get(path)
-    if parts is None:
-        parts = df.rdd.getNumPartitions()
-        _SPREAD_CACHE[path] = parts
-    if parts >= target:
-        return df
-    try:
-        size = _os.path.getsize(path.removeprefix("file:"))
-    except OSError:
-        size = None  # non-local path: partition-count test already ran
-    if size is not None and size < _SPREAD_MIN_BYTES:
-        return df
-    return df.repartition(target, F.col(key))
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       spread: bool = True) -> DataFrame:
-    """``spread=False`` opts a call site out of the scan re-spread:
-    queries that immediately filter to a few hundred rows (doc_id < k
-    gate corpora) gain nothing from repartitioning — the filter pushes
-    into the scan, and the extra exchange is pure stage overhead."""
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if spread and name in _SPREAD_TABLES:
-        df = _spread(spark, df, path, _SPREAD_TABLES[name])
-    return df
+from .queries2 import ORACLE_SQL_2, SPARK_QUERIES_2, _t
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +228,7 @@ def q15_dedup_fingerprint(spark, sf):
     """Exact dedup via normalized md5 fingerprint (hash-groupBy dedup)."""
     from ..operators.dedup import normalized_fingerprint
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     fp = normalized_fingerprint("text")
     return d.select(fp.alias("fingerprint")).groupBy().agg(
         F.count("*").alias("n_docs"),
@@ -324,7 +254,7 @@ def q16_token_stats(spark, sf):
 
 def q17_doc_quality(spark, sf):
     """Quality scoring: char/token ratios per source (length heuristics)."""
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     toks = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     return (
         d.select(
@@ -387,7 +317,7 @@ def q19_ngram_overlap_pairs(spark, sf):
     Same-language doc pairs among doc_id < 60; emits pairs sharing >= 20
     distinct tokens — the n-gram-Jaccard dedup shape at test scale.
     """
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 60)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 60)
     toks = F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
     t = d.select("doc_id", "lang", toks.alias("toks"))
     a = t.select(
@@ -408,7 +338,7 @@ def q19_ngram_overlap_pairs(spark, sf):
 
 
 # ---------------------------------------------------------------------------
-# flagship (non-SQL-expressible -> rows-only check)
+# flagship (non-SQL-expressible -> pinned oracle in generated_oracles.py)
 # ---------------------------------------------------------------------------
 
 
@@ -430,8 +360,6 @@ def q20_extract_flagship(spark, sf):
         F.to_json("spans").alias("spans_json"),
     ).orderBy("doc_id")
 
-
-from .queries2 import ORACLE_SQL_2, SPARK_QUERIES_2  # noqa: E402
 
 SPARK_QUERIES = {
     "q01_pricing_summary": q01_pricing_summary,
@@ -625,6 +553,7 @@ ORACLE_SQL = {
         WHERE len(list_intersect(a.toks, b.toks)) >= 20
         ORDER BY a_id, b_id
     """,
-    # q20_extract_flagship: non-SQL-expressible (image kernel) -> rows-only
+    # q20_extract_flagship: non-SQL-expressible (image kernel) -> pinned
+    # oracle in generated_oracles.py, merged in through ORACLE_SQL_2
     **ORACLE_SQL_2,
 }

@@ -14,20 +14,9 @@ from pyspark.sql import functions as F
 from ..operators.textops import LANG_MARKERS, language_id, quality_score
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str,
-       spread: bool = True) -> DataFrame:
-    # shares the scale-adaptive scan spread with queries.py (see the
-    # _SPREAD_TABLES note there): single-row-group driver files
-    # otherwise single-thread every expensive row-local stage.
-    # ``spread=False`` opts out call sites that filter to a few hundred
-    # rows immediately (the extra exchange is pure overhead there).
-    from .queries import _SPREAD_TABLES, _spread
-
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if spread and name in _SPREAD_TABLES:
-        df = _spread(spark, df, path, _SPREAD_TABLES[name])
-    return df
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one driver table, ``<sf_dir>/<name>.parquet``."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -141,39 +130,39 @@ def _q22_oracle() -> str:
 
 
 # ---------------------------------------------------------------------------
-# dedup / similarity operators (hash-based -> rows-only checks)
+# dedup / similarity operators (hash-based -> pinned generated oracles)
 # ---------------------------------------------------------------------------
 
 
 def q23_minhash_lsh(spark, sf):
-    """MinHash+LSH near-dup candidates over documents (rows-only: the
-    xxhash64 permutation family has no DuckDB equivalent)."""
+    """MinHash+LSH near-dup candidates over documents (pinned generated
+    oracle: the xxhash64 permutation family has no DuckDB equivalent)."""
     from ..operators.dedup import minhash_lsh_candidates
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 200)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     return minhash_lsh_candidates(d).orderBy("a_id", "b_id")
 
 
 def q24_simhash(spark, sf):
-    """SimHash values + band buckets (rows-only; deterministic)."""
+    """SimHash values + band buckets (pinned generated oracle)."""
     from ..operators.dedup import simhash64
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 100)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 100)
     return d.select("doc_id", simhash64("text").alias("simhash")).orderBy("doc_id")
 
 
 def q25_winnowing(spark, sf):
-    """Winnowing fingerprint counts per doc (rows-only; deterministic)."""
+    """Winnowing fingerprint counts per doc (pinned generated oracle)."""
     from ..operators.textops import winnowing_fingerprints
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 100)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 100)
     return winnowing_fingerprints(d).select(
         "doc_id", F.size("fingerprints").alias("n_fingerprints")
     ).orderBy("doc_id")
 
 
 def q26_lsh_ann_recall(spark, sf):
-    """LSH ANN vs exact top-k recall per query (rows-only self-check;
+    """LSH ANN vs exact top-k recall per query (pinned generated oracle;
     integer outputs)."""
     from ..operators.similarity import cosine_topk, lsh_topk
 
@@ -238,16 +227,17 @@ def q34_ivf_ann_recall(spark, sf):
 
 def q35_curate_funnel(spark, sf):
     """Composed curation pipeline funnel over the documents table
-    (rows-only; deterministic)."""
+    (pinned generated oracle)."""
     from ..operators.curate import curate_documents
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 150)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 150)
     _, funnel = curate_documents(d, min_quality_pct=30, near_dup_jaccard_pct=80)
     return funnel.orderBy("stage")
 
 
 def q27_multimodal_meta(spark, sf):
-    """Multimodal plumbing over self-synthesized media (rows-only):
+    """Multimodal plumbing over self-synthesized media (pinned generated
+    oracle):
     image metadata + decode-failure accounting."""
     from ..operators.multimodal import image_metadata
     from ..sources.spark_tables import media_df
@@ -312,15 +302,7 @@ def q71_date_parts(spark, sf):
 
 def q31_json_extract(spark, sf):
     """JSON prop extraction from the events props column."""
-    from .queries import _spread
-
-    # per-query events re-spread: the JSON parse is the one events first
-    # stage heavy enough to beat the exchange cost (2.4 -> 1.0 s at
-    # sf1.0, identical rows — avg over ints is an exact long sum);
-    # events stays out of the global spread set because every other
-    # events query measured the exchange as pure overhead
-    e = _spread(spark, _t(spark, sf, "events"),
-                f"{sf}/events.parquet", "user_id")
+    e = _t(spark, sf, "events")
     k = F.get_json_object("props", "$.k").cast("int")
     return (
         e.select("event_type", k.alias("k"))
@@ -628,7 +610,7 @@ def q41_exact_dedup_groups(spark, sf):
     documents table unioned with a re-keyed copy of itself)."""
     from ..operators.dedup import exact_dedup
 
-    d = _t(spark, sf, "documents", spread=False).select("doc_id", "text").filter(F.col("doc_id") < 100)
+    d = _t(spark, sf, "documents").select("doc_id", "text").filter(F.col("doc_id") < 100)
     doubled = d.unionByName(
         d.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     )
@@ -665,7 +647,7 @@ def q42_html_strip(spark, sf):
     entity decode + whitespace squash, fully SQL-mirrored."""
     from ..operators.html_extract import strip_tags_col
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 200)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     html = F.concat(
         F.lit("<html><body><nav><a href='/'>Home &amp; more</a></nav><p>"),
         F.col("text"),
@@ -685,11 +667,12 @@ def q42_html_strip(spark, sf):
 
 def q43_main_content(spark, sf):
     """DOM-heuristic main-content extraction over synthetic pages built
-    from the documents table (rows-only: stdlib HTML parser in the UDF);
+    from the documents table (pinned generated oracle: stdlib HTML parser
+    in the UDF);
     emits exact-match flags vs the known article text."""
     from ..operators.html_extract import extract_main_content, synth_html_page
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 100)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 100)
 
     def build(batches):
         import pandas as pd
@@ -750,16 +733,7 @@ def q44_percentiles(spark, sf):
     per-group state) — it exists here as the quantile_cont-parity oracle;
     the 100 TB path is ``approx_percentile`` (see q49_percentiles_approx,
     the bounded-state twin)."""
-    from .queries import _spread
-
-    # exact percentile is value-count based: partial buffers merge into
-    # one exact count map per group, so its result is partitioning-
-    # INSENSITIVE (unlike q92's approx sketch, whose merge order is
-    # pinned) — re-spreading the 1-2-row-group orders scan parallelizes
-    # the buffering stage (measured ~4.5 -> ~3.1 s at sf1.0, identical
-    # rows)
-    o = _spread(spark, _t(spark, sf, "orders"),
-                f"{sf}/orders.parquet", "o_orderkey")
+    o = _t(spark, sf, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -804,7 +778,7 @@ def q45_embedding_near_dups(spark, sf):
     an independent IEEE-fold float mirror (tools/gen_oracles.py)."""
     from ..operators.similarity import embedding_near_dups
 
-    e = _t(spark, sf, "embeddings", spread=False).filter(F.col("vec_id") < 150)
+    e = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 150)
     base = e.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
@@ -852,7 +826,7 @@ def q76_stratified_sample(spark, sf):
     mirrors the md5-threshold predicate verbatim."""
     from ..operators.sampling import stratified_hash_sample
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     rates = {"src0": 10_000, "src1": 5_000, "src2": 2_500, "src3": 0}
     kept = stratified_hash_sample(d, "doc_id", "source", rates, default_bps=1_000)
     return (
@@ -888,7 +862,7 @@ def q47_decontamination(spark, sf):
     Fully live DuckDB oracle (md5 shingle keys mirror verbatim)."""
     from ..operators.decontam import contamination_pairs
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     train = d.filter(F.col("doc_id") < 150)
     bench = (
         d.filter((F.col("doc_id") >= 100) & (F.col("doc_id") < 130))
@@ -1122,7 +1096,7 @@ def q16b_sequence_packing(spark, sf):
     counts — fully independent of the Python fill loop."""
     from ..operators.packing import pack_sequences, packing_stats
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 300)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 300)
     packed = pack_sequences(d, budget=512, shards=4)
     return packing_stats(packed, budget=512)
 
@@ -1182,7 +1156,7 @@ def q33b_leakage_safe_split(spark, sf):
     the construction verbatim in SQL."""
     from ..operators.sampling import leakage_safe_split
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     s = leakage_safe_split(d, {"train": 8000, "val": 1000, "test": 1000})
     per_split = s.groupBy("split").agg(
         F.count("*").alias("n_docs"),
@@ -1257,7 +1231,7 @@ def q22b_repetition_filter(spark, sf):
     bigrams) — independent of the Spark expression/explode construction."""
     from ..operators.textops import repetition_scores
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 200)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     return repetition_scores(d).orderBy("doc_id")
 
 
@@ -1310,7 +1284,7 @@ def q45b_near_dups_gemm(spark, sf):
     generation is checked in the same float regime, not assumed."""
     from ..operators.similarity import embedding_near_dups
 
-    e = _t(spark, sf, "embeddings", spread=False).filter(F.col("vec_id") < 150)
+    e = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 150)
     base = e.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
@@ -1457,7 +1431,7 @@ def q23b_lsh_capped(spark, sf):
 
     hot_text = ("subscribe to our newsletter terms of service privacy policy "
                 "all rights reserved cookie settings contact us")
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 200).select(
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     )
     hot = spark.range(30).select(
@@ -1534,7 +1508,7 @@ def q42b_site_template(spark, sf):
     generation step."""
     from ..operators.html_extract import site_template_strip
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 150)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 150)
     return site_template_strip(d).orderBy("doc_id")
 
 
@@ -1589,7 +1563,7 @@ def q15b_paragraph_dedup(spark, sf):
     aggregate + ordered string_agg)."""
     from ..operators.textops import repeated_paragraph_dedup
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 150).select(
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 150).select(
         "doc_id", "text"
     )
     return (
@@ -1649,7 +1623,7 @@ def q23c_incremental_lsh(spark, sf):
     (tools/gen_oracles.py)."""
     from ..operators.dedup import incremental_lsh_candidates
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     corpus = d.filter(F.col("doc_id") < 150)
     new = d.filter((F.col("doc_id") >= 150) & (F.col("doc_id") < 200))
     return incremental_lsh_candidates(new, corpus).orderBy("a_id", "b_id")
@@ -1667,7 +1641,7 @@ def q21b_pii_redaction(spark, sf):
     classes + bounded repeats + word boundaries only)."""
     from ..operators.textops import redact_pii
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 200)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 200)
     aug = d.select(
         "doc_id",
         F.concat(
@@ -1802,7 +1776,7 @@ def _q19_pair_graph(spark, sf):
     definition, so the two gates' premise ("identical graph, two
     algorithms, identical oracle") is enforced by construction rather
     than by keeping two copies in sync."""
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 60)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 60)
     toks = F.array_distinct(F.split(F.trim(F.col("text")), r"\s+"))
     t = d.select("doc_id", "lang", toks.alias("toks"))
     a = t.select(F.col("doc_id").alias("a_id"), F.col("lang").alias("a_lang"),
@@ -2000,7 +1974,7 @@ def q21c_lm_surprisal(spark, sf):
     SQL; milli-nat rounding keeps the comparison integer."""
     from ..operators.textops import unigram_surprisal
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 100)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 100)
     return unigram_surprisal(d).orderBy("doc_id")
 
 
@@ -2039,7 +2013,7 @@ def q44b_host_cap(spark, sf):
     engines."""
     from ..operators.sampling import cap_per_host
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     return (
         cap_per_host(d, host_col="source", max_per_host=8)
         .select("doc_id", "source", F.col("host_rank").cast("int").alias("host_rank"))
@@ -2072,7 +2046,7 @@ def q33c_domain_mix(spark, sf):
     verbatim."""
     from ..operators.sampling import mix_to_target
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     return (
         mix_to_target(
             d,
@@ -2339,7 +2313,7 @@ def q16d_bpe_encode(spark, sf):
         word_frequencies,
     )
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     wf = word_frequencies(d)
     vocab_chars = wf.select(F.split("word", "").alias("symbols"), "freq")
     merges = (
@@ -2455,11 +2429,7 @@ def q21d_bigram_lm(spark, sf):
     probed in pytest."""
     from ..operators.textops import bigram_surprisal
 
-    # spread=False (measured): bigram_surprisal's plan replicates the
-    # cheap tokenize subtree ~8x; adding the re-spread exchange under
-    # every copy costs more in shuffle-read + stage overhead than the
-    # parallel scan gains (4.2 s vs 5.8 s at sf1.0 local[32])
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     return bigram_surprisal(d).orderBy("doc_id")
 
 
@@ -2516,7 +2486,7 @@ def q45c_semantic_dedup(spark, sf):
     row-preserving (vec_id, list_id, keep)."""
     from ..operators.similarity import semantic_dedup
 
-    e = _t(spark, sf, "embeddings", spread=False).filter(F.col("vec_id") < 150)
+    e = _t(spark, sf, "embeddings").filter(F.col("vec_id") < 150)
     base = e.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("embedding")
     )
@@ -2604,7 +2574,7 @@ def q18c_tfidf_pairs(spark, sf):
     engine-exactness discipline."""
     from ..operators.similarity import tfidf_similarity_pairs
 
-    d = _t(spark, sf, "documents", spread=False).filter(F.col("doc_id") < 120)
+    d = _t(spark, sf, "documents").filter(F.col("doc_id") < 120)
     return (
         tfidf_similarity_pairs(d, min_cos_bps=8500)
         .orderBy("a_id", "b_id")
@@ -2706,7 +2676,7 @@ def q94_token_mix(spark, sf):
     verbatim."""
     from ..operators.sampling import mix_to_token_budget
 
-    d = _t(spark, sf, "documents", spread=False).withColumn(
+    d = _t(spark, sf, "documents").withColumn(
         "toks",
         F.when(F.col("text").isNull(), F.lit(0)).otherwise(
             F.size(F.split(F.trim(F.col("text")), r"\s+"))
@@ -2764,7 +2734,7 @@ def q95_train_shards(spark, sf):
     — the LIVE oracle states the identical expressions."""
     from ..operators.sampling import shuffle_and_shard
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     return (
         shuffle_and_shard(d, n_shards=8)
         .select("doc_id", "shard", "shard_pos")
@@ -2808,7 +2778,7 @@ def q96_url_dedup(spark, sf):
     under it (probed: 0 codegen ERRORs on this exact plan)."""
     from ..operators.urls import url_dedup
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     m = (F.col("doc_id") % 50).cast("string")
     h = (F.col("doc_id") % 50 % 7).cast("string")
     v = F.expr("(doc_id div 50) % 5")
@@ -2934,7 +2904,7 @@ def q98_pagerank_hosts(spark, sf):
     match is bit-exact — float PageRank could never cross-engine-hash."""
     from ..operators.graph import pagerank
 
-    d = _t(spark, sf, "documents", spread=False).select("doc_id")
+    d = _t(spark, sf, "documents").select("doc_id")
     e1 = d.select(
         (F.col("doc_id") % 53).alias("src"),
         ((F.col("doc_id") * 7 + 3) % 53).alias("dst"),
@@ -3004,7 +2974,7 @@ def q99_blocked_hosts(spark, sf):
     deliberately NOT what the operator does)."""
     from ..operators.urls import filter_blocked_hosts
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     m = (F.col("doc_id") % 11).cast("string")
     v = F.col("doc_id") % 4
     url = (
@@ -3060,7 +3030,7 @@ def q9a_compression_ratio(spark, sf):
     Integer ratio_milli keeps the comparison order-free exact."""
     from ..operators.textops import compression_ratio
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     return (
         compression_ratio(d)
         .select(
@@ -3083,8 +3053,7 @@ def q9b_perplexity_buckets(spark, sf):
     the q21d recurrence + the same NTILE window."""
     from ..operators.textops import perplexity_buckets
 
-    # spread=False: same multi-branch bigram subtree as q21d (see there)
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     return (
         perplexity_buckets(d)
         .select("doc_id", "lang", "bi_surprisal_milli",
@@ -3268,7 +3237,7 @@ def q9d_inlink_anchors(spark, sf):
     (count DESC, anchor ASC) tie rule."""
     from ..operators.graph import inlink_anchor_stats
 
-    d = _t(spark, sf, "documents", spread=False).select("doc_id")
+    d = _t(spark, sf, "documents").select("doc_id")
     edges = d.select(
         (F.col("doc_id") % 97).alias("src"),
         F.expr("(doc_id * 13 + (doc_id % 31)) % 97").alias("dst"),
@@ -3323,7 +3292,7 @@ def q9e_host_reputation(spark, sf):
     from ..operators.graph import pagerank
     from ..operators.textops import gopher_quality_flags
 
-    d = _t(spark, sf, "documents", spread=False)
+    d = _t(spark, sf, "documents")
     flags = gopher_quality_flags(d).withColumn(
         "host", F.col("doc_id") % 53)
     content = flags.groupBy("host").agg(

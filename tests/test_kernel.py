@@ -1,12 +1,14 @@
 """End-to-end kernel tests: render -> extract roundtrip, fault isolation."""
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from red_seal_ocr_spark.config import DEFAULT_CONFIG as CFG
 from red_seal_ocr_spark.config import EngineConfig
-from red_seal_ocr_spark.functions.kernel import DECODE_ERROR, OK, extract_texts_batch, process_image
+from red_seal_ocr_spark.functions.kernel import DECODE_ERROR, OK, process_image
 from red_seal_ocr_spark.functions.png import encode_png
+from red_seal_ocr_spark.operators.extract import _kernel_udf
 from red_seal_ocr_spark.sources.datagen import (
     BLACK,
     GRAY,
@@ -69,12 +71,23 @@ def test_decode_failure_paths():
 
 
 def test_fault_isolation_in_batch():
-    """One bad image never kills the batch (reference main.py:132-137)."""
+    """One bad image never kills the batch (reference main.py:132-137):
+    the Spark kernel function maps each failure to its kind and keeps
+    going."""
     good = render_media("m-00000004-00")
-    texts, oks, ncomp = extract_texts_batch([good, b"junk", None, good])
-    assert oks == [True, False, False, True]
+    batch = pd.DataFrame({
+        "doc_id": ["d0", "d1", "d2", "d3"],
+        "offset": [0, 1, 2, 3],
+        "media_ref": ["m0", "m1", "m2", "m3"],
+        "content": [good, b"junk", None, good],
+    })
+    (out,) = list(_kernel_udf(CFG)(iter([batch])))
+    assert out["ok"].tolist() == [True, False, False, True]
+    assert out["failure_kind"].tolist() == [None, "decode_error", "missing_media", None]
+    texts = out["text"].tolist()
     assert texts[1] is None and texts[2] is None
     assert texts[0] == texts[3] is not None
+    assert texts[0] == "".join(media_seal_texts("m-00000004-00"))
 
 
 def test_multi_seal_reading_order():

@@ -80,12 +80,12 @@ def test_query_matches_duckdb(spark, duck, name, qfn, sql):
     assert got == want, f"{name}: value mismatch\nspark: {got[:3]}\nduck:  {want[:3]}"
 
 
-def test_rows_only_queries_run(spark):
+def test_rows_only_queries_run():
+    """Every query has an oracle, so no query is left to a rows-only check
+    (tools/check_correctness.py counts a missing oracle as a failure)."""
     from red_seal_ocr_spark.plans.queries import ORACLE_SQL, SPARK_QUERIES
 
-    for name in sorted(set(SPARK_QUERIES) - set(ORACLE_SQL)):
-        df = SPARK_QUERIES[name](spark, SF_DIR)
-        assert df.count() >= 0, name
+    assert set(SPARK_QUERIES) == set(ORACLE_SQL)
 
 
 def test_entry_smoke(spark):

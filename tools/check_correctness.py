@@ -1,11 +1,12 @@
 """Local driver-style correctness gate: run every __spark_entry__ query
-against its DuckDB oracle at sf0.01 and write a CORRECTNESS-shaped JSON.
+against its DuckDB oracle on the tables in ``--sf-dir`` and, when ``--out``
+is given, write a CORRECTNESS-shaped JSON there.
 
 Mirrors the driver's compare (row count + schema family + order-
 insensitive value hash with columns sorted by name).  Usage::
 
     python tools/check_correctness.py [--sf-dir /root/testdata/sf0.01]
-                                      [--out BENCH/correctness_local.json]
+                                      [--out results.json]
 """
 
 from __future__ import annotations
@@ -40,7 +41,7 @@ def _rows_hash(rows, cols) -> str:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--out", default="BENCH/correctness_local.json")
+    ap.add_argument("--out", help="write per-query results as JSON here")
     args = ap.parse_args()
 
     import importlib.util
@@ -101,12 +102,13 @@ def main() -> int:
     finally:
         spark.stop()
 
-    Path(args.out).write_text(json.dumps(results, indent=1))
+    if args.out:
+        Path(args.out).write_text(json.dumps(results, indent=1))
     total = len(results)
     oracled = sum(1 for r in results.values() if r["hash_match"] is not None)
     green = sum(1 for r in results.values() if r["hash_match"])
     print(f"\n{green}/{oracled} oracled hash-green of {total} queries; "
-          f"{fails} failures -> {args.out}")
+          f"{fails} failures" + (f" -> {args.out}" if args.out else ""))
     return 1 if fails else 0
 
 

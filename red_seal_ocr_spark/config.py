@@ -37,7 +37,6 @@ class EngineConfig:
     val_min: int = 50
 
     # --- morphology (reference hardcodes 2x2 open x1; north star adds close)
-    morph_kernel: int = 2
     morph_iterations: int = 1
 
     # --- connected-component area filter (reference preprocess.py:397-403)
@@ -62,11 +61,9 @@ class EngineConfig:
 
     # --- enhancement (reference preprocess.py:33-92) ---
     # Denoise is real NL-means (imageops.nl_means_denoise — the reference's
-    # algorithm, pure numpy); 'box' selects the cheap 3x3 box-blur
-    # substitute of rounds 1-2.  The reference applies denoise only to
+    # algorithm, pure numpy).  The reference applies denoise only to
     # low-quality inputs; this whole branch is gated by the thresholds
     # above (default off).
-    denoise_method: str = "nl_means"  # 'nl_means' | 'box'
     nlm_h: float = 10.0  # cv2 fastNlMeansDenoisingColored default h
     nlm_template: int = 7  # cv2 default templateWindowSize
     nlm_search: int = 11  # cv2 default is 21; 11 bounds the gated branch's cost
@@ -116,7 +113,7 @@ class EngineConfig:
 
     # --- image codec swap-in point (S2): callable
     # (content: bytes, max_pixels: int) -> decoded image exposing
-    # .h .w .crop(y0,y1,x0,x1) .view() .full(), raising
+    # .h .w and .full() (the HxWx3 uint8 frame), raising
     # codecs.ImageTooLarge / codecs.ImageDecodeError on bad input;
     # None = the built-in format-sniffing dispatch (codecs.decode_image_lazy),
     # which decodes JPEG through the system libjpeg.  Kept as the seam
@@ -143,7 +140,6 @@ class EngineConfig:
     cell_h: int = 7
 
     # --- Spark-side knobs ---
-    arrow_max_records: int = 64  # images inflate ~10x decoded; keep batches small
     # 0 = operators.extract.kernel_partitions: one kernel task per core
     # under a local[...] master, spark.sql.shuffle.partitions under any
     # other; cluster deployments tune the latter (or set this)

@@ -10,11 +10,11 @@ one unified error surface for the kernel's fault-isolation path:
 - :class:`ImageDecodeError` — anything else malformed/unsupported
   (lineage ``failure_kind='decode_error'``)
 
-PNG stays on the lazy scanline-buffer path (``png.py``); JPEG/BMP decode
-to a materialized array behind the same crop/view interface.  JPEG goes
-through the system libjpeg (``jpeg_native.py``, the same library family
-PIL uses) and falls back to the pure-numpy ``jpeg.py`` where no C
-compiler or libjpeg is available.
+Every decoder returns the whole frame as one C-contiguous ``HxWx3`` uint8
+array, wrapped in :class:`DecodedImage`.  JPEG goes through the system
+libjpeg (``jpeg_native.py``, the same library family PIL uses) and falls
+back to the pure-numpy ``jpeg.py`` where no C compiler or libjpeg is
+available.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ import numpy as np
 from .bmp import BmpError, BmpTooLarge, decode_bmp
 from .jpeg import JpegError, JpegTooLarge
 from .jpeg_native import decode_jpeg
-from .png import PngError, PngTooLarge, decode_png_lazy
+from .png import PngError, PngTooLarge, decode_png
 
 __all__ = [
     "ImageDecodeError",
@@ -43,19 +43,14 @@ class ImageTooLarge(ImageDecodeError):
 
 
 class DecodedImage:
-    """Materialized decoded image behind the PngImage crop interface."""
+    """A decoded frame: its size from ``.h``/``.w``, its pixels from
+    ``.full()``."""
 
     __slots__ = ("arr", "h", "w")
 
     def __init__(self, arr: np.ndarray) -> None:
         self.arr = arr
         self.h, self.w = arr.shape[:2]
-
-    def crop(self, y0: int, y1: int, x0: int, x1: int) -> np.ndarray:
-        return self.arr[y0:y1, x0:x1]
-
-    def view(self) -> np.ndarray:
-        return self.arr
 
     def full(self) -> np.ndarray:
         return self.arr
@@ -73,7 +68,13 @@ def sniff_format(data: bytes) -> str | None:
 
 
 def decode_image_lazy(data: bytes, max_pixels: int = 64_000_000):
-    """Sniff + decode to an object with ``.h .w .crop() .view() .full()``.
+    """Sniff + decode to a :class:`DecodedImage` (``.h .w .full()``).
+
+    The decode is complete when this returns; "lazy" in the name is
+    historical.  The name and the wrapper stay because they are the decode
+    seam that the layer profiler (``perfbench/trace.py``) patches on
+    ``functions.kernel``: it reads ``.h``/``.w`` and books ``.full()``
+    as decode time.
 
     Raises :class:`ImageTooLarge` (budget) or :class:`ImageDecodeError`.
     """
@@ -85,7 +86,7 @@ def decode_image_lazy(data: bytes, max_pixels: int = 64_000_000):
 
     try:
         if fmt == "png":
-            return decode_png_lazy(data, max_pixels)
+            return DecodedImage(decode_png(data, max_pixels))
         if fmt == "jpeg":
             return DecodedImage(decode_jpeg(data, max_pixels))
         if fmt == "bmp":

@@ -202,8 +202,8 @@ def rgb_red_mask(
     cost in the kernel)."""
     shape = img.shape[:-1]
     n = int(np.prod(shape))
-    # channel planes may be strided views (PngImage.view()) — every op
-    # below is elementwise or a fancy gather, so no copy is ever forced
+    # channel planes are strided views of the interleaved frame — every
+    # op below is elementwise or a fancy gather, so no copy is ever forced
     r8, g8, b8 = img[..., 0], img[..., 1], img[..., 2]
     # Exact candidate screen: any pixel whose hue falls in the red bands
     # (H in [0,10] U [156,180], i.e. degrees < 30 or > 312) has V == R, so
@@ -676,16 +676,11 @@ def enhance_image(img: np.ndarray, cfg) -> np.ndarray:
 
     Denoise is real NL-means (:func:`nl_means_denoise` — the reference's
     algorithm, pure numpy) blended ``denoise_blend_orig`` original /
-    rest denoised; ``cfg.denoise_method='box'`` selects the cheap 3x3
-    box-blur substitute of rounds 1-2.  Then contrast
+    rest denoised.  Then contrast
     convertScaleAbs(1.1) and unsharp masking (Gaussian sigma=2,
     1.5*img - 0.5*blur, blended 0.6/0.4).
     """
-    if getattr(cfg, "denoise_method", "nl_means") == "nl_means":
-        den_raw = nl_means_denoise(img, cfg.nlm_h, cfg.nlm_template,
-                                   cfg.nlm_search)
-    else:
-        den_raw = box_blur3(img)
+    den_raw = nl_means_denoise(img, cfg.nlm_h, cfg.nlm_template, cfg.nlm_search)
     den = blend(img, den_raw, cfg.denoise_blend_orig)
     con = convert_scale_abs(den, cfg.contrast_alpha, cfg.contrast_beta)
     g = gaussian_blur(con, cfg.unsharp_sigma, cfg.unsharp_ksize)

@@ -48,26 +48,6 @@ DECODE_ERROR = 1
 TOO_LARGE = 2  # per-item pixel budget breached (reference reinit-on-hang analog)
 
 
-class _ArrayImage:
-    """Adapter giving a materialized ndarray the PngImage crop interface
-    (used when the F1 enhancement path must transform the whole frame)."""
-
-    __slots__ = ("arr", "h", "w")
-
-    def __init__(self, arr: np.ndarray) -> None:
-        self.arr = arr
-        self.h, self.w = arr.shape[:2]
-
-    def crop(self, y0: int, y1: int, x0: int, x1: int) -> np.ndarray:
-        return self.arr[y0:y1, x0:x1]
-
-    def view(self) -> np.ndarray:
-        return self.arr
-
-    def full(self) -> np.ndarray:
-        return self.arr
-
-
 @dataclass
 class ImageResult:
     text: str | None  # None on failure
@@ -121,19 +101,17 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     except ImageDecodeError:
         return ImageResult(None, DECODE_ERROR)
     h, w = src.h, src.w
+    img = src.full()
 
-    # F1: enhancement only for low-quality inputs (full-frame transform,
-    # so this config-gated path materializes the image; default gate off)
+    # F1: enhancement only for low-quality inputs (full-frame transform;
+    # default gate off)
     if is_low_quality(len(content), h, w, cfg):
-        src = _ArrayImage(enhance_image(src.full(), cfg))
+        img = enhance_image(img, cfg)
 
-    # F2/F3: fused HSV + dual-band red mask over one contiguous frame
-    # (strided-view compute measured ~2x slower than memcpy + SIMD ops;
-    # scratch-buffer reuse inside rgb_red_mask keeps the pass
+    # F2/F3: fused HSV + dual-band red mask over the contiguous frame
+    # (scratch-buffer reuse inside rgb_red_mask keeps the pass
     # allocation-free).  F15 stats on a deterministic 4x4 stride sample
     # (probe metric, never part of span equality).
-    img = src.full()
-    src = _ArrayImage(img)
     mask0 = rgb_red_mask(img, cfg.hue_band1, cfg.hue_band2, cfg.sat_min, cfg.val_min)
     mean, std = uint8_stats(np.ascontiguousarray(img[::4, ::4]))
 
@@ -189,7 +167,7 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
         boxes.append((y0, x0, y1, x1))
         comp_mask = paint_runs((y1 - y0, x1 - x0), run_sets[i], origin=(y0, x0))
         red_px += st["area"]
-        crop = np.where(comp_mask[..., None], src.crop(y0, y1, x0, x1), np.uint8(255))
+        crop = np.where(comp_mask[..., None], img[y0:y1, x0:x1], np.uint8(255))
         # F8a/F8b: red enhancement passes under the mask
         crop = enhance_red_pass1(crop, comp_mask, cfg)
         crop = enhance_red_pass2(crop, comp_mask, cfg)

@@ -3,9 +3,9 @@
 The reference decodes images with PIL/OpenCV (``src/preprocess.py:335-361``,
 ``util/image_downloader.py:84-96``).  Neither library exists in this
 environment, so the engine carries its own small codec: 8-bit RGB (color
-type 2) and 8-bit grayscale (color type 0), no interlacing.  The encoder
-always emits filter 0 scanlines; the decoder understands all five standard
-filters so externally produced baseline PNGs also decode.
+type 2) and 8-bit grayscale (color type 0), plain or Adam7-interlaced.
+The encoders always emit filter 0 scanlines; the decoder understands all
+five standard filters so externally produced PNGs also decode.
 
 Decode failures raise ``PngError`` — the kernel maps that to the
 per-item fault-isolation path (failure counted, span passed through
@@ -111,10 +111,9 @@ def encode_png_interlaced(img: np.ndarray) -> bytes:
 def _deinterlace(decompressed: bytes, h: int, w: int, channels: int) -> np.ndarray:
     """Adam7 reassembly: unfilter each pass's own scanlines (filters are
     per-pass — the previous scanline is the previous scanline of the SAME
-    pass), then scatter pass pixels to their final grid positions.
-    Returns the full h x (1 + w*channels) scanline buffer (filter column
-    zeroed) the lazy PngImage expects."""
-    raw_full = np.zeros((h, 1 + w * channels), dtype=np.uint8)
+    pass), then write pass pixels to their final grid positions.
+    Returns the (h, w, channels) pixel array."""
+    out = np.empty((h, w, channels), dtype=np.uint8)
     off = 0
     buf = memoryview(decompressed)
     for x0, y0, dx, dy, pw, ph in _adam7_passes(h, w):
@@ -128,12 +127,8 @@ def _deinterlace(decompressed: bytes, h: int, w: int, channels: int) -> np.ndarr
             px = sub[:, 1:]
         else:
             px = _unfilter(sub, ph, pw, channels)
-        px = px.reshape(ph, pw, channels)
-        rows = y0 + np.arange(ph) * dy
-        cols = 1 + (x0 + np.arange(pw) * dx) * channels
-        for ch in range(channels):
-            raw_full[np.ix_(rows, cols + ch)] = px[:, :, ch]
-    return raw_full
+        out[y0::dy, x0::dx] = px.reshape(ph, pw, channels)
+    return out
 
 
 def _unfilter(raw: np.ndarray, h: int, w: int, channels: int) -> np.ndarray:
@@ -170,59 +165,9 @@ def _unfilter(raw: np.ndarray, h: int, w: int, channels: int) -> np.ndarray:
     return out
 
 
-class PngImage:
-    """Lazily-materialized decoded PNG.
-
-    Holds the unfiltered scanline buffer (``h x (1 + w*channels)``, the
-    filter-byte column still in place) and materializes RGB pixels only
-    for requested regions.  The extraction kernel computes its red mask in
-    row tiles straight off this buffer and copies out only seal-sized
-    crops — the full HxWx3 image never exists, which roughly halves the
-    kernel's memory traffic (the scaling-efficiency bottleneck at high
-    core counts).
-    """
-
-    __slots__ = ("raw", "h", "w", "channels")
-
-    def __init__(self, raw: np.ndarray, h: int, w: int, channels: int) -> None:
-        self.raw = raw
-        self.h = h
-        self.w = w
-        self.channels = channels
-
-    def crop(self, y0: int, y1: int, x0: int, x1: int) -> np.ndarray:
-        """Contiguous (y1-y0, x1-x0, 3) uint8 RGB copy of a region."""
-        c = self.channels
-        block = self.raw[y0:y1, 1 + x0 * c : 1 + x1 * c]
-        out = np.ascontiguousarray(block).reshape(y1 - y0, x1 - x0, c)
-        if c == 1:
-            out = np.repeat(out, 3, axis=2)
-        return out
-
-    def view(self) -> np.ndarray:
-        """Zero-copy strided (h, w, 3) view over the scanline buffer.
-
-        Row stride skips the filter byte; grayscale broadcasts the single
-        channel with a 0 stride.  Read-only by construction — ufuncs read
-        it directly, so full-frame passes never copy the image.
-        """
-        c = self.channels
-        base = self.raw.reshape(-1)[1:]
-        ch_stride = 1 if c == 3 else 0
-        return np.lib.stride_tricks.as_strided(
-            base,
-            shape=(self.h, self.w, 3),
-            strides=(1 + self.w * c, c, ch_stride),
-            writeable=False,
-        )
-
-    def full(self) -> np.ndarray:
-        return self.crop(0, self.h, 0, self.w)
-
-
-def decode_png_lazy(data: bytes, max_pixels: int = 64_000_000) -> PngImage:
-    """Decode PNG bytes to a :class:`PngImage` (pixels stay in the
-    scanline buffer until a region is requested).
+def decode_png(data: bytes, max_pixels: int = 64_000_000) -> np.ndarray:
+    """Decode PNG bytes to a C-contiguous HxWx3 uint8 RGB array (gray is
+    broadcast to three channels).
 
     ``max_pixels`` is the per-item cost budget: header dimensions above it
     raise :class:`PngTooLarge` before any inflate work, and the inflate
@@ -291,16 +236,11 @@ def decode_png_lazy(data: bytes, max_pixels: int = 64_000_000) -> PngImage:
     if len(decompressed) != expected:
         raise PngError("bad data length")
     if interlace:
-        return PngImage(_deinterlace(decompressed, h, w, channels),
-                        h, w, channels)
-    raw = np.frombuffer(decompressed, dtype=np.uint8).reshape(h, 1 + w * channels)
-    if not np.all(raw[:, 0] == 0):
-        unfiltered = _unfilter(raw, h, w, channels)
-        raw = np.zeros((h, 1 + w * channels), dtype=np.uint8)
-        raw[:, 1:] = unfiltered
-    return PngImage(raw, h, w, channels)
-
-
-def decode_png(data: bytes) -> np.ndarray:
-    """Decode PNG bytes to an HxWx3 uint8 RGB array (gray is broadcast)."""
-    return decode_png_lazy(data).full()
+        px = _deinterlace(decompressed, h, w, channels)
+    else:
+        raw = np.frombuffer(decompressed, dtype=np.uint8).reshape(h, 1 + w * channels)
+        if np.all(raw[:, 0] == 0):
+            px = np.ascontiguousarray(raw[:, 1:]).reshape(h, w, channels)
+        else:
+            px = _unfilter(raw, h, w, channels).reshape(h, w, channels)
+    return np.repeat(px, 3, axis=2) if channels == 1 else px

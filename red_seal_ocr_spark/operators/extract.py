@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..sources.snapshot import commit_snapshot, list_run_files, read_table
+from ..sources.snapshot import drop_empty_files as _drop_empty_files
 
 KERNEL_OUT_SCHEMA = (
     "doc_id string, offset int, media_ref string, text string, "
@@ -237,25 +238,6 @@ def extract_documents(
         *(["seal_bboxes"] if cfg.emit_bboxes else []),
     )
     return spliced
-
-
-def _drop_empty_files(files: list[str]) -> list[str]:
-    """Never commit zero-row part files (Spark emits them for empty write
-    partitions): they carry no data, and dropping them keeps the manifest
-    <-> lineage invariant exact (every committed data file has a lineage
-    row).  Footer-only check, O(files) driver-side per commit — bounded
-    per batch at any scale."""
-    import os as _os
-
-    import pyarrow.parquet as pq
-
-    kept = []
-    for f in files:
-        if pq.ParquetFile(f).metadata.num_rows > 0:
-            kept.append(f)
-        else:
-            _os.remove(f)
-    return kept
 
 
 def run_extract(

@@ -25,7 +25,9 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
+from contextlib import contextmanager
 from pathlib import Path
 
 
@@ -40,6 +42,26 @@ def current_snapshot(table_dir: str) -> dict | None:
         return None
     name = cur.read_text().strip()
     return json.loads((_snap_dir(table_dir) / name).read_text())
+
+
+@contextmanager
+def _commit_lock(table: Path, timeout_sec: float):
+    """Hold the table's commit lock: an mkdir lock (atomic on POSIX),
+    waited for up to ``timeout_sec`` (then ``TimeoutError``)."""
+    lock = table / "_commit.lock"
+    deadline = time.time() + timeout_sec
+    while True:
+        try:
+            os.mkdir(lock)
+            break
+        except FileExistsError:
+            if time.time() > deadline:
+                raise TimeoutError(f"commit lock held too long: {lock}") from None
+            time.sleep(0.05)
+    try:
+        yield
+    finally:
+        os.rmdir(lock)
 
 
 def commit_snapshot(table_dir: str, data_files: list[str],
@@ -60,21 +82,9 @@ def commit_snapshot(table_dir: str, data_files: list[str],
     shape — Iceberg's rewrite_data_files).  Lineage history is always
     carried forward.
     """
-    import time
-
     table = Path(table_dir)
     table.mkdir(parents=True, exist_ok=True)
-    lock = table / "_commit.lock"
-    deadline = time.time() + lock_timeout_sec
-    while True:
-        try:
-            os.mkdir(lock)
-            break
-        except FileExistsError:
-            if time.time() > deadline:
-                raise TimeoutError(f"commit lock held too long: {lock}") from None
-            time.sleep(0.05)
-    try:
+    with _commit_lock(table, lock_timeout_sec):
         parent = current_snapshot(table_dir)
         snap_id = (parent["snapshot_id"] + 1) if parent else 0
         manifest = {
@@ -98,8 +108,6 @@ def commit_snapshot(table_dir: str, data_files: list[str],
         tmp.write_text(name)
         os.rename(tmp, table / "_current")  # atomic publish
         return manifest
-    finally:
-        os.rmdir(lock)
 
 
 def list_run_files(run_dir: str) -> list[str]:
@@ -108,6 +116,23 @@ def list_run_files(run_dir: str) -> list[str]:
     if not p.exists():
         return []
     return sorted(str(f) for f in p.rglob("*.parquet") if f.is_file())
+
+
+def drop_empty_files(files: list[str]) -> list[str]:
+    """Never commit zero-row part files (Spark emits them for empty write
+    partitions): they carry no data, and dropping them keeps the manifest
+    <-> lineage invariant exact (every committed data file has a lineage
+    row).  Deletes them and returns the rest.  Footer-only check,
+    O(files) driver-side per commit — bounded per batch at any scale."""
+    import pyarrow.parquet as pq
+
+    kept = []
+    for f in files:
+        if pq.ParquetFile(f).metadata.num_rows > 0:
+            kept.append(f)
+        else:
+            os.remove(f)
+    return kept
 
 
 def read_snapshot(table_dir: str, snapshot_id: int) -> dict | None:
@@ -304,14 +329,7 @@ def compact_table(spark, table_dir: str,
     df = spark.read.parquet(*snap["data_files"])
     out_dir = f"{table_dir}/data/run-compact-{uuid.uuid4().hex[:12]}"
     df.repartition(n_out).write.parquet(out_dir)
-    files = []
-    for f in list_run_files(out_dir):  # never commit zero-row part files
-        import pyarrow.parquet as pq
-
-        if pq.ParquetFile(f).metadata.num_rows > 0:
-            files.append(f)
-        else:
-            os.remove(f)
+    files = drop_empty_files(list_run_files(out_dir))
     return commit_snapshot(
         table_dir, files, [], f"compact-{snap['snapshot_id']}",
         extra={"compaction_of": snap["snapshot_id"],
@@ -331,22 +349,9 @@ def expire_snapshots(table_dir: str, keep_last: int = 2,
     snapshot referencing files being deleted.  Returns
     ``{"expired": [ids], "deleted_files": n, "kept": [ids]}``.
     """
-    import time
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    table = Path(table_dir)
-    lock = table / "_commit.lock"
-    deadline = time.time() + lock_timeout_sec
-    while True:
-        try:
-            os.mkdir(lock)
-            break
-        except FileExistsError:
-            if time.time() > deadline:
-                raise TimeoutError(f"commit lock held too long: {lock}") from None
-            time.sleep(0.05)
-    try:
+    with _commit_lock(Path(table_dir), lock_timeout_sec):
         cur = current_snapshot(table_dir)
         if cur is None:
             return {"expired": [], "deleted_files": 0, "kept": []}
@@ -373,8 +378,6 @@ def expire_snapshots(table_dir: str, keep_last: int = 2,
             os.remove(sd / f"snap-{i}.json")
         return {"expired": expired_ids, "deleted_files": deleted,
                 "kept": sorted(kept_ids)}
-    finally:
-        os.rmdir(lock)
 
 
 def snapshot_diff(spark, table_dir: str, from_snapshot_id: int | None,

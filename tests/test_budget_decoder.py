@@ -21,7 +21,7 @@ from red_seal_ocr_spark.functions.kernel import OK, TOO_LARGE, process_image
 from red_seal_ocr_spark.functions.png import (
     PngError,
     PngTooLarge,
-    decode_png_lazy,
+    decode_png,
     encode_png,
 )
 
@@ -51,7 +51,7 @@ def test_huge_dimensions_rejected_before_decode(jpeg_decode_paths):
     bomb = _png_with_header(50_000, 50_000, zlib.compress(b"\x00" * 16))
     t0 = time.perf_counter()
     with pytest.raises(PngTooLarge):
-        decode_png_lazy(bomb)
+        decode_png(bomb)
     assert time.perf_counter() - t0 < 0.2  # header-time rejection, no inflate
     r = process_image(bomb)
     assert r.status == TOO_LARGE and r.text is None
@@ -71,7 +71,7 @@ def test_zlib_bomb_inflate_is_bounded():
     bomb = _png_with_header(4, 4, zlib.compress(b"\x00" * 50_000_000))
     t0 = time.perf_counter()
     with pytest.raises(PngError):
-        decode_png_lazy(bomb)
+        decode_png(bomb)
     assert time.perf_counter() - t0 < 1.0
 
 
@@ -175,7 +175,7 @@ class _CountingCodec:
     """Stub codec: wraps the built-in dispatch, tags every decode.  At
     100 TB the production swap-in here is a native libjpeg-turbo-class
     decoder; the contract is (bytes, max_pixels) -> image object with
-    .h .w .crop .view .full raising ImageTooLarge/ImageDecodeError."""
+    .h .w .full() raising ImageTooLarge/ImageDecodeError."""
 
     def __call__(self, content, max_pixels):
         from red_seal_ocr_spark.functions.codecs import decode_image_lazy

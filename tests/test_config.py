@@ -28,10 +28,13 @@ def test_kwarg_overrides_beat_file(tmp_path):
 
 
 def test_unknown_key_rejected(tmp_path):
-    p = tmp_path / "cfg.json"
-    p.write_text(json.dumps({"definitely_not_a_key": 1}))
-    with pytest.raises(ValueError, match="definitely_not_a_key"):
-        load_config(str(p))
+    # removed fields must fail loudly, not be silently ignored
+    for key in ("definitely_not_a_key", "arrow_max_records", "morph_kernel",
+                "denoise_method"):
+        p = tmp_path / "cfg.json"
+        p.write_text(json.dumps({key: 1}))
+        with pytest.raises(ValueError, match=key):
+            load_config(str(p))
 
 
 def test_yaml_if_available(tmp_path):

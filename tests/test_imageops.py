@@ -326,18 +326,6 @@ def test_nl_means_deterministic_and_shapes():
     assert nl_means_denoise(g).shape == g.shape
 
 
-def test_enhance_image_uses_nl_means_by_default_box_as_option():
-    from red_seal_ocr_spark.config import EngineConfig
-    from red_seal_ocr_spark.functions.imageops import enhance_image
-
-    rng = np.random.Generator(np.random.PCG64(12))
-    img = rng.integers(0, 256, (40, 40, 3), dtype=np.uint8)
-    nlm = enhance_image(img, EngineConfig())
-    box = enhance_image(img, EngineConfig(denoise_method="box"))
-    assert nlm.shape == box.shape == img.shape
-    assert not np.array_equal(nlm, box)  # genuinely different denoisers
-
-
 def test_nl_means_output_ndim_mirrors_input_ndim():
     """ADVICE r03: an HxWx1 3D input must come back 3D (only genuinely
     2D callers get a 2D result)."""

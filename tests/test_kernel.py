@@ -136,3 +136,20 @@ def test_deterministic():
     data = render_media("m-00000007-00")
     r1, r2 = process_image(data, CFG), process_image(data, CFG)
     assert r1.text == r2.text and r1.n_components == r2.n_components
+
+
+def test_layer_profiler_kernel_replay_times_every_format():
+    """perfbench.trace.kernel_replay patches functions.kernel by name (the
+    decode seam decode_image_lazy and every stage function), so renaming
+    one breaks the layer profiler; pin that here for all five formats."""
+    from perfbench.trace import KERNEL_STAGES, kernel_replay
+
+    ref = "m-00000038-00"  # smallest clean datagen medium: fast JPEG encodes
+    formats = ("png", "png_interlaced", "jpeg", "jpeg_progressive", "bmp")
+    items = [(f, render_media(ref, 42, fmt=f)) for f in formats]
+    records = kernel_replay(items, lambda f: f)
+    assert [r["fmt"] for r in records] == list(formats)
+    for (fmt, content), rec in zip(items, records):
+        assert rec["stages"]["decode"] > 0, fmt
+        assert rec["status"] == process_image(content, CFG).status == OK, fmt
+        assert set(KERNEL_STAGES) <= set(rec["stages"]), fmt

@@ -123,18 +123,6 @@ def test_interlaced_decodes_equal_to_plain_twin():
                               decode_png(encode_png_interlaced(img))), shape
 
 
-def test_interlaced_lazy_crop_and_view():
-    import numpy as np
-
-    from red_seal_ocr_spark.functions.png import decode_png_lazy, encode_png_interlaced
-
-    rng = np.random.Generator(np.random.PCG64(22))
-    img = rng.integers(0, 256, (40, 60, 3), dtype=np.uint8)
-    li = decode_png_lazy(encode_png_interlaced(img))
-    assert np.array_equal(li.crop(5, 20, 10, 30), img[5:20, 10:30])
-    assert np.array_equal(np.asarray(li.view()), img)
-
-
 def test_interlaced_per_pass_scanline_filters():
     """Filters are per-pass (the 'previous scanline' is the previous line
     of the SAME pass): re-filter each pass with Sub (1) and Up (2) by

@@ -127,6 +127,25 @@ def test_concurrent_commits_no_lost_update(tmp_path):
     assert set(cur["data_files"]) == {f"file-{i}" for i in range(8)}
 
 
+def test_held_commit_lock_times_out(tmp_path):
+    """While the commit lock is held, commit and expire both give up after
+    lock_timeout_sec and leave the lock and the snapshot untouched."""
+    from red_seal_ocr_spark.sources.snapshot import expire_snapshots
+
+    table = str(tmp_path / "locked")
+    commit_snapshot(table, ["file-0"], [], "run-0")
+    lock = tmp_path / "locked" / "_commit.lock"
+    lock.mkdir()
+    with pytest.raises(TimeoutError, match="commit lock"):
+        commit_snapshot(table, ["file-1"], [], "run-1", lock_timeout_sec=0.2)
+    with pytest.raises(TimeoutError, match="commit lock"):
+        expire_snapshots(table, keep_last=1, lock_timeout_sec=0.2)
+    assert lock.is_dir()
+    assert current_snapshot(table)["data_files"] == ["file-0"]
+    lock.rmdir()
+    assert commit_snapshot(table, ["file-1"], [], "run-1")["snapshot_id"] == 1
+
+
 def test_many_sequential_commits_and_time_travel(spark, tmp_path):
     """Snapshot chain stress: 12 runs, every historical snapshot readable
     with the exact cumulative doc count."""

@@ -73,8 +73,16 @@ def decode_bmp(data: bytes, max_pixels: int = 64_000_000) -> np.ndarray:
             raise BmpError("truncated pixel array")
         rows = np.frombuffer(data, dtype=np.uint8, count=row_bytes * h,
                              offset=offset).reshape(h, row_bytes)
-        img = rows[:, : w * 3].reshape(h, w, 3)[:, :, ::-1]  # BGR -> RGB
-    elif bpp == 8:
+        bgr = rows[:, : w * 3].reshape(h, w, 3)
+        if not top_down:
+            bgr = bgr[::-1]
+        # BGR -> RGB one plane at a time (a reversed-channel view copies
+        # element by element)
+        img = np.empty((h, w, 3), dtype=np.uint8)
+        for c in range(3):
+            img[:, :, c] = bgr[:, :, 2 - c]
+        return img
+    if bpp == 8:
         palette_off = 14 + hdr_size
         n_colors = struct.unpack("<I", data[46:50])[0] or 256
         pal_end = palette_off + 4 * n_colors
@@ -93,9 +101,5 @@ def decode_bmp(data: bytes, max_pixels: int = 64_000_000) -> np.ndarray:
             raise BmpError("truncated pixel array")
         idx = np.frombuffer(data, dtype=np.uint8, count=row_bytes * h,
                             offset=offset).reshape(h, row_bytes)[:, :w]
-        img = pal[idx]
-    else:
-        raise BmpError(f"unsupported bpp {bpp}")
-    if not top_down:
-        img = img[::-1]
-    return np.ascontiguousarray(img)
+        return pal[idx if top_down else idx[::-1]]
+    raise BmpError(f"unsupported bpp {bpp}")

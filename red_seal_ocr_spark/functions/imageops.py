@@ -2,8 +2,11 @@
 
 Every operator here is the engine's re-expression of a reference stage
 (SURVEY.md section 2.3); all are pure functions over uint8/bool numpy
-arrays, deterministic, and loop-free per pixel (the only Python loops are
-over PNG filter rows, run-length segments, and fixed tap counts).
+arrays, deterministic, and loop-free per pixel and per run (the only
+Python loops are over components, colour channels, fixed tap and offset
+counts, and the few rounds of label propagation).  Where a stage rounds
+to uint8 between float steps, the float formula is tabulated once per
+process over its uint8 inputs, so the tables give the same bits.
 
 Reference mapping:
 
@@ -26,7 +29,19 @@ module (SURVEY.md section 7 risk list).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
+
+
+def _to_u8(x: np.ndarray) -> np.ndarray:
+    """``saturate_cast<uint8>(rint(x))`` of a float array, rounding ``x``
+    in place (same values as ``np.clip(np.rint(x), 0, 255)``)."""
+    np.rint(x, out=x)
+    np.maximum(x, 0.0, out=x)
+    np.minimum(x, 255.0, out=x)
+    return x.astype(np.uint8)
+
 
 # ---------------------------------------------------------------------------
 # color conversions
@@ -74,6 +89,7 @@ _XYZ_M = np.array(
     dtype=np.float32,
 )
 _XYZ_WHITE = np.array([0.950456, 1.0, 1.088754], dtype=np.float32)
+_XYZ_M_INV_T = np.linalg.inv(_XYZ_M).T.astype(np.float32)
 
 
 def rgb_to_lab_cv(img: np.ndarray) -> np.ndarray:
@@ -86,9 +102,9 @@ def rgb_to_lab_cv(img: np.ndarray) -> np.ndarray:
     a = 500.0 * (ft[..., 0] - ft[..., 1]) + 128.0
     b = 200.0 * (ft[..., 1] - ft[..., 2]) + 128.0
     out = np.empty(img.shape, dtype=np.uint8)
-    out[..., 0] = np.clip(np.rint(l * 255.0 / 100.0), 0, 255).astype(np.uint8)
-    out[..., 1] = np.clip(np.rint(a), 0, 255).astype(np.uint8)
-    out[..., 2] = np.clip(np.rint(b), 0, 255).astype(np.uint8)
+    out[..., 0] = _to_u8(l * 255.0 / 100.0)
+    out[..., 1] = _to_u8(a)
+    out[..., 2] = _to_u8(b)
     return out
 
 
@@ -107,8 +123,8 @@ def lab_to_rgb_cv(lab: np.ndarray) -> np.ndarray:
 
     y = np.where(l > 903.3 * 0.008856, fy ** 3, l / 903.3)
     xyz = np.stack([_finv(fx), y, _finv(fz)], axis=-1) * _XYZ_WHITE
-    rgb = xyz @ np.linalg.inv(_XYZ_M).T.astype(np.float32)
-    return np.clip(np.rint(rgb * 255.0), 0, 255).astype(np.uint8)
+    rgb = xyz @ _XYZ_M_INV_T
+    return _to_u8(rgb * 255.0)
 
 
 # ---------------------------------------------------------------------------
@@ -264,31 +280,24 @@ def rgb_red_mask(
     return out
 
 
-def uint8_stats(img: np.ndarray) -> tuple[float, float]:
-    """Mean/std of a uint8 array via one float32 pass + BLAS dot (the
-    numpy two-pass float64 std costs ~5x more; F15 input-stats probe —
-    a metric, never part of the span-equality surface)."""
-    x = img.reshape(-1).astype(np.float32)
-    n = x.size
-    if n == 0:
-        return 0.0, 0.0
-    s1 = float(x.sum(dtype=np.float64))
-    s2 = float(np.dot(x, x))
-    mean = s1 / n
-    var = max(s2 / n - mean * mean, 0.0)
-    return mean, var**0.5
-
-
 def erode2(mask: np.ndarray) -> np.ndarray:
-    """Binary erosion with a 2x2 kernel, anchor (1,1), border=True (cv2-style)."""
-    p = np.pad(mask, ((1, 0), (1, 0)), constant_values=True)
-    return p[:-1, :-1] & p[:-1, 1:] & p[1:, :-1] & p[1:, 1:]
+    """Binary erosion with a 2x2 kernel, anchor (1,1), border=True (cv2-style):
+    ``out[y, x] = m[y-1, x-1] & m[y-1, x] & m[y, x-1] & m[y, x]``."""
+    a = mask.copy()
+    a[:, 1:] &= mask[:, :-1]
+    out = a.copy()
+    out[1:] &= a[:-1]
+    return out
 
 
 def dilate2(mask: np.ndarray) -> np.ndarray:
-    """Binary dilation with a 2x2 kernel, anchor (1,1), border=False."""
-    p = np.pad(mask, ((0, 1), (0, 1)), constant_values=False)
-    return p[:-1, :-1] | p[:-1, 1:] | p[1:, :-1] | p[1:, 1:]
+    """Binary dilation with a 2x2 kernel, anchor (1,1), border=False:
+    ``out[y, x] = m[y, x] | m[y, x+1] | m[y+1, x] | m[y+1, x+1]``."""
+    a = mask.copy()
+    a[:, :-1] |= mask[:, 1:]
+    out = a.copy()
+    out[:-1] |= a[1:]
+    return out
 
 
 def morph_open(mask: np.ndarray, iterations: int = 1) -> np.ndarray:
@@ -306,106 +315,108 @@ def morph_close(mask: np.ndarray, iterations: int = 1) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# connected components (run-length union-find; 8-connectivity)
+# connected components (run-length label propagation; 8-connectivity)
 # ---------------------------------------------------------------------------
 
 
 def _runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Horizontal runs of True pixels: (row, col_start, col_end_exclusive)."""
+    """Horizontal runs of True pixels: (row, col_start, col_end_exclusive),
+    in (row, col) order."""
     h, w = mask.shape
-    padded = np.zeros((h, w + 1), dtype=np.int8)
-    padded[:, :w] = mask
+    padded = np.zeros((h, w + 2), dtype=bool)
+    padded[:, 1:-1] = mask
     flat = padded.ravel()
-    d = np.diff(np.concatenate(([0], flat)))
-    starts = np.flatnonzero(d == 1)
-    ends = np.flatnonzero(d == -1)
-    rows = starts // (w + 1)
-    return rows, starts % (w + 1), (ends - 1) % (w + 1) + 1
+    # every row is framed by False, so the edges alternate start, end
+    edges = np.flatnonzero(flat[1:] != flat[:-1]) + 1
+    starts, ends = edges[0::2], edges[1::2]
+    rows = starts // (w + 2)
+    row0 = rows * (w + 2) + 1
+    return rows, starts - row0, ends - row0
 
 
-class _UnionFind:
-    __slots__ = ("parent",)
+def _label(rows: np.ndarray, c0: np.ndarray, c1: np.ndarray, w: int) -> np.ndarray:
+    """Per run, the smallest run index of its 8-connected component.
 
-    def __init__(self, n: int) -> None:
-        self.parent = list(range(n))
-
-    def find(self, i: int) -> int:
-        p = self.parent
-        root = i
-        while p[root] != root:
-            root = p[root]
-        while p[i] != root:
-            p[i], i = root, p[i]
-        return root
-
-    def union(self, a: int, b: int) -> None:
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            self.parent[max(ra, rb)] = min(ra, rb)
+    Run ``j`` on row ``r+1`` touches run ``i`` on row ``r`` iff
+    ``c0[j] <= c1[i] and c1[j] >= c0[i]``; runs are in (row, col) order, so
+    both ends are ascending under the key ``row * (w+1) + col`` and each
+    run's touching runs are one ``searchsorted`` range.  Labels then
+    propagate to the minimum by hooking roots (``np.minimum.at``) and
+    pointer jumping (``lab = lab[lab]``) until every pair agrees.
+    """
+    n = len(rows)
+    key = rows * (w + 1)
+    below = key + (w + 1)
+    lo = np.searchsorted(key + c1, below + c0, side="left")
+    hi = np.searchsorted(key + c0, below + c1, side="right")
+    cnt = hi - lo
+    ii = np.repeat(np.arange(n), cnt)
+    jj = np.arange(len(ii)) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    lab = np.arange(n)
+    while True:
+        # lab is idempotent here: every label is the root of its tree
+        li, lj = lab[ii], lab[jj]
+        split = li != lj
+        if not split.any():
+            return lab
+        ii, jj, li, lj = ii[split], jj[split], li[split], lj[split]
+        lo_ = np.minimum(li, lj)
+        np.minimum.at(lab, li, lo_)
+        np.minimum.at(lab, lj, lo_)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
 
 
 def connected_components(mask: np.ndarray):
-    """8-connected labeling via run-length union-find.
+    """8-connected labeling of the mask's runs.
 
     Returns ``(comp_runs, stats)`` where ``comp_runs`` is a list (one entry
-    per component, deterministically ordered by (y0, x0) per SURVEY.md O3)
-    of ``(rows, c0, c1)`` run arrays, and ``stats`` is a list of dicts
-    ``{area, y0, x0, y1, x1}`` (bbox is half-open).  Work is proportional
-    to the number of runs, not pixels, so sparse masks are cheap.
+    per component, deterministically ordered by (y0, x0) per SURVEY.md O3,
+    ties by first run) of ``(rows, c0, c1)`` run arrays in (row, col)
+    order, and ``stats`` is a list of dicts ``{area, y0, x0, y1, x1}``
+    (bbox is half-open).  Work is proportional to the number of runs, not
+    pixels, so sparse masks are cheap.
     """
     rows, c0, c1 = _runs(mask)
     n = len(rows)
     if n == 0:
         return [], []
-    uf = _UnionFind(n)
-    # per-row slices (rows is sorted ascending)
-    row_break = np.flatnonzero(np.diff(rows)) + 1
-    slice_starts = np.concatenate(([0], row_break))
-    slice_ends = np.concatenate((row_break, [n]))
-    row_vals = rows[slice_starts]
-    for k in range(len(row_vals) - 1):
-        if row_vals[k + 1] != row_vals[k] + 1:
-            continue
-        i, i_end = slice_starts[k], slice_ends[k]
-        j, j_end = slice_starts[k + 1], slice_ends[k + 1]
-        while i < i_end and j < j_end:
-            # 8-connectivity: diagonal touch counts -> compare with slack 0
-            if c0[j] <= c1[i] and c1[j] >= c0[i]:
-                uf.union(i, j)
-            if c1[i] <= c1[j]:
-                i += 1
-            else:
-                j += 1
-    roots = np.array([uf.find(i) for i in range(n)])
-    comp_ids, inv = np.unique(roots, return_inverse=True)
-    comps = []
-    for ci in range(len(comp_ids)):
-        sel = inv == ci
-        rr, aa, bb = rows[sel], c0[sel], c1[sel]
-        comps.append(
-            (
-                (rr, aa, bb),
-                {
-                    "area": int(np.sum(bb - aa)),
-                    "y0": int(rr.min()),
-                    "x0": int(aa.min()),
-                    "y1": int(rr.max()) + 1,
-                    "x1": int(bb.max()),
-                },
-            )
-        )
-    comps.sort(key=lambda c: (c[1]["y0"], c[1]["x0"]))
-    return [c[0] for c in comps], [c[1] for c in comps]
+    lab = _label(rows, c0, c1, mask.shape[1])
+    # group runs by component; a stable sort keeps each group in run order
+    order = np.argsort(lab, kind="stable")
+    rows, c0, c1, lab = rows[order], c0[order], c1[order], lab[order]
+    first = np.flatnonzero(np.concatenate(([True], lab[1:] != lab[:-1])))
+    last = np.append(first[1:], n)
+    area = np.add.reduceat(c1 - c0, first)
+    y0, y1 = rows[first], rows[last - 1] + 1
+    x0 = np.minimum.reduceat(c0, first)
+    x1 = np.maximum.reduceat(c1, first)
+    comp_runs, stats = [], []
+    # groups are in root order, and lexsort is stable: ties keep it
+    for k in np.lexsort((x0, y0)).tolist():
+        a, b = first[k], last[k]
+        comp_runs.append((rows[a:b], c0[a:b], c1[a:b]))
+        stats.append({"area": int(area[k]), "y0": int(y0[k]), "x0": int(x0[k]),
+                      "y1": int(y1[k]), "x1": int(x1[k])})
+    return comp_runs, stats
 
 
 def paint_runs(shape: tuple[int, int], run_sets, origin: tuple[int, int] = (0, 0)) -> np.ndarray:
     """Rasterize run arrays into a bool mask (optionally bbox-local via origin)."""
-    out = np.zeros(shape, dtype=bool)
+    h, w = shape
+    if not run_sets:
+        return np.zeros(shape, dtype=bool)
     oy, ox = origin
-    for rows, c0, c1 in run_sets:
-        for r, a, b in zip(rows.tolist(), c0.tolist(), c1.tolist()):
-            out[r - oy, a - ox : b - ox] = True
-    return out
+    rows = np.concatenate([r for r, _, _ in run_sets]) - oy
+    base = rows * w - ox
+    starts = base + np.concatenate([a for _, a, _ in run_sets])
+    ends = base + np.concatenate([b for _, _, b in run_sets])
+    # +1 at each run start, -1 at each end: the running sum is the cover
+    edge = np.bincount(starts, minlength=h * w + 1) - np.bincount(ends, minlength=h * w + 1)
+    return (np.cumsum(edge[: h * w]) > 0).reshape(shape)
 
 
 def filled_components(mask: np.ndarray):
@@ -419,8 +430,6 @@ def filled_components(mask: np.ndarray):
     Cost is proportional to run count, never pixels.
     """
     comp_runs, stats = connected_components(mask)
-    if not comp_runs:
-        return [], []
     run_sets = []
     out_stats = []
     # hole filling is bbox-local: labeling the inverse of the *global*
@@ -431,32 +440,15 @@ def filled_components(mask: np.ndarray):
     for (rows, c0, c1), st in zip(comp_runs, stats):
         y0, x0, y1, x1 = st["y0"], st["x0"], st["y1"], st["x1"]
         ch, cw = y1 - y0, x1 - x0
-        local = paint_runs((ch, cw), [(rows, c0, c1)], origin=(y0, x0))
-        inv = ~local
-        if (
-            local[0].all()
-            and local[-1].all()
-            and local[:, 0].all()
-            and local[:, -1].all()
-        ):
-            # perimeter fully foreground (e.g. a seal plate): every interior
-            # background pixel is enclosed -> all inverse runs are holes;
-            # skips the inverse union-find entirely (the dominant labeling
-            # cost — glyph-bearing crops have ~1k background runs)
-            hr, ha, hb = _runs(inv)
-            hole_runs = [(hr + y0, ha + x0, hb + x0)] if hr.size else []
-            hole_area = int(inv.sum())
-        else:
-            inv_runs, inv_stats = connected_components(inv)
-            hole_runs = [
-                (r_ + y0, a_ + x0, b_ + x0)
-                for (r_, a_, b_), hst in zip(inv_runs, inv_stats)
-                if hst["y0"] > 0 and hst["x0"] > 0 and hst["y1"] < ch and hst["x1"] < cw
-            ]
-            hole_area = sum(int(np.sum(b_ - a_)) for _, a_, b_ in hole_runs)
+        hr, ha, hb = _runs(~paint_runs((ch, cw), [(rows, c0, c1)], origin=(y0, x0)))
+        lab = _label(hr, ha, hb, cw)
+        border = np.zeros(len(hr), dtype=bool)
+        border[lab[(hr == 0) | (hr == ch - 1) | (ha == 0) | (hb == cw)]] = True
+        hole = ~border[lab]
+        hr, ha, hb = hr[hole], ha[hole], hb[hole]
         st = dict(st)
-        st["area"] = st["area"] + hole_area
-        run_sets.append([(rows, c0, c1)] + hole_runs)
+        st["area"] += int(np.sum(hb - ha))
+        run_sets.append([(rows, c0, c1), (hr + y0, ha + x0, hb + x0)])
         out_stats.append(st)
     return run_sets, out_stats
 
@@ -609,8 +601,9 @@ def convert_scale_abs(img: np.ndarray, alpha: float, beta: float) -> np.ndarray:
 
 def blend(a: np.ndarray, b: np.ndarray, wa: float) -> np.ndarray:
     """cv2.addWeighted(a, wa, b, 1-wa, 0) with uint8 saturation."""
-    out = a.astype(np.float64) * wa + b.astype(np.float64) * (1.0 - wa)
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+    out = a.astype(np.float64) * wa
+    out += b.astype(np.float64) * (1.0 - wa)
+    return _to_u8(out)
 
 
 # ---------------------------------------------------------------------------
@@ -621,49 +614,56 @@ def blend(a: np.ndarray, b: np.ndarray, wa: float) -> np.ndarray:
 def clahe(channel: np.ndarray, clip_limit: float, grid: int) -> np.ndarray:
     """Contrast-limited adaptive histogram equalization on a uint8 channel.
 
-    Tile grid ``grid x grid``; per-tile clipped histogram -> CDF LUT;
-    bilinear interpolation between the four neighboring tile LUTs (cv2
-    createCLAHE semantics; uniform redistribution of clipped excess).
+    Tile grid ``grid x grid`` over the edge-replicated frame; per-tile
+    clipped histogram -> CDF LUT; bilinear interpolation between the four
+    neighboring tile LUTs (cv2 createCLAHE semantics; uniform
+    redistribution of clipped excess).
     """
     h, w = channel.shape
     th = -(-h // grid)  # ceil
     tw = -(-w // grid)
-    ph, pw = th * grid, tw * grid
-    padded = np.pad(channel, ((0, ph - h), (0, pw - w)), mode="edge")
-    tiles = padded.reshape(grid, th, grid, tw).transpose(0, 2, 1, 3).reshape(grid, grid, th * tw)
-    # histograms: (grid, grid, 256)
-    hist = np.zeros((grid, grid, 256), dtype=np.float64)
-    for gy in range(grid):
-        for gx in range(grid):
-            hist[gy, gx] = np.bincount(tiles[gy, gx], minlength=256)
+    # all tile histograms in one bincount over tile * 256 + value, the
+    # frame edge-replicated to grid*th x grid*tw by index
+    py, px = np.arange(th * grid), np.arange(tw * grid)
+    padded = channel.take(np.minimum(py, h - 1), 0).take(np.minimum(px, w - 1), 1)
+    key = (py // th * (grid * 256))[:, None] + (px // tw * 256)[None, :]
+    key += padded
+    hist = np.bincount(key.ravel(), minlength=grid * grid * 256)
+    hist = hist.reshape(grid, grid, 256).astype(np.float64)
     tile_area = th * tw
     clip = max(clip_limit * tile_area / 256.0, 1.0)
     excess = np.sum(np.maximum(hist - clip, 0.0), axis=-1, keepdims=True)
-    hist = np.minimum(hist, clip) + excess / 256.0
-    cdf = np.cumsum(hist, axis=-1)
-    lut = np.clip(np.rint(cdf * 255.0 / tile_area), 0, 255)  # (grid, grid, 256)
-    # bilinear interpolation between tile LUTs
-    yy = (np.arange(ph, dtype=np.float64) + 0.5) / th - 0.5
-    xx = (np.arange(pw, dtype=np.float64) + 0.5) / tw - 0.5
+    np.minimum(hist, clip, out=hist)
+    hist += excess / 256.0
+    lut = np.cumsum(hist, axis=-1, out=hist).ravel()  # the CDF, then the LUT
+    lut *= 255.0
+    lut /= tile_area
+    np.rint(lut, out=lut)
+    np.minimum(lut, 255.0, out=lut)
+    # bilinear interpolation between the four neighboring tile LUTs,
+    # gathered by flat index (tile * 256 + value)
+    yy = (np.arange(h, dtype=np.float64) + 0.5) / th - 0.5
+    xx = (np.arange(w, dtype=np.float64) + 0.5) / tw - 0.5
     y0 = np.clip(np.floor(yy), 0, grid - 1).astype(np.int64)
     x0 = np.clip(np.floor(xx), 0, grid - 1).astype(np.int64)
-    y1 = np.clip(y0 + 1, 0, grid - 1)
-    x1 = np.clip(x0 + 1, 0, grid - 1)
+    y1 = np.minimum(y0 + 1, grid - 1)
+    x1 = np.minimum(x0 + 1, grid - 1)
     fy = np.clip(yy - y0, 0.0, 1.0)[:, None]
     fx = np.clip(xx - x0, 0.0, 1.0)[None, :]
-    pix = padded.astype(np.int64)
-    y0g = y0[:, None]
-    y1g = y1[:, None]
-    x0g = x0[None, :]
-    x1g = x1[None, :]
-    v00 = lut[y0g, x0g, pix]
-    v01 = lut[y0g, x1g, pix]
-    v10 = lut[y1g, x0g, pix]
-    v11 = lut[y1g, x1g, pix]
-    top = v00 * (1 - fx) + v01 * fx
-    bot = v10 * (1 - fx) + v11 * fx
-    out = top * (1 - fy) + bot * fy
-    return np.clip(np.rint(out[:h, :w]), 0, 255).astype(np.uint8)
+    i = (y0 * (grid * 256))[:, None] + (x0 * 256)[None, :]
+    i += channel
+    right = ((x1 - x0) * 256)[None, :]
+    gx = 1 - fx
+    top = lut[i] * gx
+    top += lut[i + right] * fx
+    i += ((y1 - y0) * (grid * 256))[:, None]
+    bot = lut[i] * gx
+    bot += lut[i + right] * fx
+    top *= 1 - fy
+    bot *= fy
+    top += bot
+    # a convex blend of LUT entries in [0, 255] rounds back into [0, 255]
+    return np.rint(top, out=top).astype(np.uint8)
 
 
 # ---------------------------------------------------------------------------
@@ -707,27 +707,19 @@ def enhance_red_pass1(img: np.ndarray, mask: np.ndarray, cfg) -> np.ndarray:
     reference evaluates post-transform, ``src/preprocess.py:241-278``).
     """
     hsv0 = rgb_to_hsv_cv(img)
-    is_black = mask & (hsv0[..., 2] < cfg.black_v_max) & (hsv0[..., 1] < cfg.black_s_max)
-    red_hue0 = (hsv0[..., 0] < cfg.red_hue_lo) | (hsv0[..., 0] > cfg.red_hue_hi)
-    achromatic = hsv0[..., 1] < 8  # H is meaningless without saturation
-    is_gray = (
-        mask
-        & (hsv0[..., 1] < cfg.gray_s_max)
-        & (~red_hue0 | (achromatic & (hsv0[..., 2] < 250)))
-    )
-    hsv = hsv0.astype(np.float64)
-    h, s, v = hsv[..., 0], hsv[..., 1], hsv[..., 2]
+    h, s, v = hsv0[..., 0], hsv0[..., 1], hsv0[..., 2]
+    is_black = mask & (v < cfg.black_v_max) & (s < cfg.black_s_max)
+    red_hue0 = (h < cfg.red_hue_lo) | (h > cfg.red_hue_hi)
+    achromatic = s < 8  # H is meaningless without saturation
+    is_gray = mask & (s < cfg.gray_s_max) & (~red_hue0 | (achromatic & (v < 250)))
+    # every step below rounds to uint8 before the next one reads it, so
+    # each is a 256-entry table of its float64 formula
     boost = mask & red_hue0
-    s = np.where(boost, np.minimum(s * cfg.sat_boost, 255.0), s)
-    v = np.where(boost, np.minimum(v * cfg.val_boost, 255.0), v)
-    v_eq = clahe(np.clip(np.rint(v), 0, 255).astype(np.uint8), cfg.clahe1_clip, cfg.clahe1_grid)
-    v = np.where(mask, v_eq.astype(np.float64), v)
-    v = np.where(mask, 255.0 * np.power(v / 255.0, cfg.gamma), v)
-    out = hsv_to_rgb_cv(
-        np.stack(
-            [h, np.clip(np.rint(s), 0, 255), np.clip(np.rint(v), 0, 255)], axis=-1
-        ).astype(np.uint8)
-    )
+    s = np.where(boost, _scale_lut(cfg.sat_boost)[s], s)
+    v = np.where(boost, _scale_lut(cfg.val_boost)[v], v)
+    v_eq = clahe(v, cfg.clahe1_clip, cfg.clahe1_grid)
+    v = np.where(mask, _gamma_lut(cfg.gamma)[v_eq], v)
+    out = _hsv_to_rgb(h, s, v)
     out[is_black | is_gray] = 255
     return out
 
@@ -739,49 +731,112 @@ def enhance_red_pass2(img: np.ndarray, mask: np.ndarray, cfg) -> np.ndarray:
     applied only under the mask.
     """
     lab = rgb_to_lab_cv(img)
-    l_eq = clahe(lab[..., 0], cfg.clahe2_clip, cfg.clahe2_grid)
-    lab = lab.copy()
-    lab[..., 0] = np.where(mask, l_eq, lab[..., 0])
-    step = lab_to_rgb_cv(lab)
-    hsv = rgb_to_hsv_cv(step).astype(np.float64)
-    hsv[..., 1] = np.minimum(hsv[..., 1] * cfg.sat_boost2, 255.0)
-    hsv[..., 2] = np.minimum(hsv[..., 2] * cfg.val_boost2, 255.0)
-    step = hsv_to_rgb_cv(np.clip(np.rint(hsv), 0, 255).astype(np.uint8))
-    # 3x3 sharpen kernel [[0,-1,0],[-1,5,-1],[0,-1,0]] scaled by amount
-    f = step.astype(np.float64)
-    p = np.pad(f, ((1, 1), (1, 1), (0, 0)), mode="reflect")
-    lap = 5.0 * f - p[:-2, 1:-1] - p[2:, 1:-1] - p[1:-1, :-2] - p[1:-1, 2:]
-    sharp = np.clip(np.rint(f * (1.0 - cfg.sharpen_amount) + lap * cfg.sharpen_amount), 0, 255).astype(np.uint8)
-    blended = blend(step, sharp, cfg.sharpen_blend_orig)
+    np.copyto(lab[..., 0], clahe(lab[..., 0], cfg.clahe2_clip, cfg.clahe2_grid), where=mask)
+    hsv = rgb_to_hsv_cv(lab_to_rgb_cv(lab))
+    step = _hsv_to_rgb(hsv[..., 0], _scale_lut(cfg.sat_boost2)[hsv[..., 1]],
+                       _scale_lut(cfg.val_boost2)[hsv[..., 2]])
+    # 3x3 sharpen kernel [[0,-1,0],[-1,5,-1],[0,-1,0]] scaled by amount,
+    # blended 0.7/0.3 with the unsharpened value: a function of the value
+    # and the sum of its four neighbours (BORDER_REFLECT_101 at the edges)
+    h, w = mask.shape
+    f = step.astype(np.int32)
+    idx = f * _NB_SPAN
+    idx[1:] += f[:-1]
+    idx[0] += f[min(1, h - 1)]
+    idx[:-1] += f[1:]
+    idx[-1] += f[max(h - 2, 0)]
+    idx[:, 1:] += f[:, :-1]
+    idx[:, 0] += f[:, min(1, w - 1)]
+    idx[:, :-1] += f[:, 1:]
+    idx[:, -1] += f[:, max(w - 2, 0)]
     out = img.copy()
-    out[mask] = blended[mask]
+    np.copyto(out, _sharpen_lut(cfg.sharpen_amount, cfg.sharpen_blend_orig)[idx],
+              where=mask[..., None])
     return out
 
 
-# per-sector channel source among (0=c, 1=x, 2=z) for hsv_to_rgb_cv
+# four uint8 neighbours sum to 0..1020
+_NB_SPAN = 4 * 255 + 1
+
+
+@functools.cache
+def _sharpen_lut(amount: float, blend_orig: float) -> np.ndarray:
+    """Pass 2's sharpen-and-blend of a value ``f`` whose four neighbours
+    sum to ``n``, indexed by ``f * _NB_SPAN + n``:
+    ``blend(f, rint(f*(1-amount) + (5f - n)*amount), blend_orig)``.  The
+    Laplacian ``5f - n`` is an integer, so the float chain's value is
+    exactly this one."""
+    f = np.arange(256, dtype=np.float64)[:, None]
+    n = np.arange(_NB_SPAN, dtype=np.float64)[None, :]
+    sharp = f * (1.0 - amount) + (5.0 * f - n) * amount
+    return _frozen(blend(np.broadcast_to(f, sharp.shape), _to_u8(sharp), blend_orig).ravel())
+
+
+def _frozen(table: np.ndarray) -> np.ndarray:
+    """``table`` made read-only: the cached tables are shared by every call."""
+    table.flags.writeable = False
+    return table
+
+
+# per-sector channel source among (0=c, 1=x, 2=z), each plus m, for hsv_to_rgb_cv
 _HSV_SECTOR_R = np.array([0, 1, 2, 2, 1, 0])
 _HSV_SECTOR_G = np.array([1, 0, 0, 1, 2, 2])
 _HSV_SECTOR_B = np.array([2, 2, 1, 0, 0, 1])
 
 
+@functools.cache
+def _scale_lut(factor: float) -> np.ndarray:
+    """``saturate_cast<uint8>(rint(min(k * factor, 255)))`` for k in 0..255."""
+    return _frozen(_to_u8(np.minimum(np.arange(256, dtype=np.float64) * factor, 255.0)))
+
+
+@functools.cache
+def _gamma_lut(gamma: float) -> np.ndarray:
+    """``saturate_cast<uint8>(rint(255 * (k / 255) ** gamma))`` for k in 0..255."""
+    return _frozen(_to_u8(255.0 * np.power(np.arange(256, dtype=np.float64) / 255.0, gamma)))
+
+
+@functools.cache
+def _hsv_tables():
+    """The float64 terms of the cv2 HSV -> RGB formula, tabulated.
+
+    With ``c = v * s/255``, ``m = v - c`` and ``x = c * f(h)``, each output
+    channel is one of ``c + m``, ``x + m`` or ``m``, picked by the hue
+    sector.  By hue: ``f`` and each channel's pick (0=c+m, 1=x+m, 2=m).  By
+    ``s * 256 + v``: ``c``, and ``c + m`` and ``m`` rounded to uint8.
+    Only ``x + m`` needs all three inputs, so it is the one product left
+    per pixel (~0.6 MB of tables).
+    """
+    hp = np.arange(256, dtype=np.float64) * 2.0 / 60.0
+    f = 1.0 - np.abs(hp % 2.0 - 1.0)
+    sector = np.floor(hp).astype(np.int64) % 6
+    pick = tuple(_frozen(sec[sector].astype(np.uint8))
+                 for sec in (_HSV_SECTOR_R, _HSV_SECTOR_G, _HSV_SECTOR_B))
+    v = np.arange(256, dtype=np.float64)
+    c = (v[None, :] * (v[:, None] / 255.0)).ravel()
+    m = np.tile(v, 256) - c
+    return (_frozen(f), pick, _frozen(v), _frozen(c), _frozen(_to_u8(c + m)),
+            _frozen(_to_u8(m)))
+
+
+def _hsv_to_rgb(h: np.ndarray, s: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """:func:`hsv_to_rgb_cv` of the uint8 planes ``h``, ``s``, ``v``."""
+    f, pick, vf, c, cm8, m8 = _hsv_tables()
+    sv = s.astype(np.intp)
+    sv <<= 8
+    sv |= v
+    cs = c[sv]
+    m = vf[v] - cs
+    xm = cs * f[h]
+    xm += m
+    x8, cm, mm = _to_u8(xm), cm8[sv], m8[sv]
+    out = np.empty(h.shape + (3,), dtype=np.uint8)
+    for k in range(3):
+        src = pick[k][h]
+        out[..., k] = np.where(src == 0, cm, np.where(src == 1, x8, mm))
+    return out
+
+
 def hsv_to_rgb_cv(hsv: np.ndarray) -> np.ndarray:
     """HSV uint8 (cv2 ranges) -> RGB uint8 (inverse of rgb_to_hsv_cv)."""
-    h = hsv[..., 0].astype(np.float64) * 2.0
-    s = hsv[..., 1].astype(np.float64) / 255.0
-    v = hsv[..., 2].astype(np.float64)
-    c = v * s
-    hp = h / 60.0
-    x = c * (1.0 - np.abs(hp % 2.0 - 1.0))
-    m = v - c
-    z = np.zeros_like(c)
-    sector = np.floor(hp).astype(np.int64) % 6
-    # one gather per channel from the stacked (c, x, z) planes instead of
-    # six boolean np.select passes per channel (18 full-frame scans —
-    # measured ~12% of the whole kernel); np.choose picks the IDENTICAL
-    # element each np.select matched, so values are bit-equal
-    cxz = (c, x, z)
-    r = np.choose(_HSV_SECTOR_R[sector], cxz)
-    g = np.choose(_HSV_SECTOR_G[sector], cxz)
-    b = np.choose(_HSV_SECTOR_B[sector], cxz)
-    out = np.stack([r + m, g + m, b + m], axis=-1)
-    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+    return _hsv_to_rgb(hsv[..., 0], hsv[..., 1], hsv[..., 2])

@@ -10,11 +10,14 @@ per-record operator chain (``src/ocr_engine.py:284-450``; SURVEY.md 2.3):
     -> downscale cap (F9) -> per-component normalized crop + template OCR
        (F10/F11) -> bbox rescale (F12) -> text concat (F13)
 
-plus the input-stats probe (F15) surfaced as metrics.  The Spark side
-(``operators.extract._kernel_udf``, a ``mapInPandas`` function) calls it
-once per image inside each Arrow batch (images are variable-size, so
-cross-image vectorization is impossible; all per-image math is vectorized
-numpy — no per-pixel Python, satisfying the no-per-row-Python invariant).
+The reference's input-stats probe (F15) is not reproduced: its mean/std
+feed only a log warning there, and nothing here would read them.
+
+The Spark side (``operators.extract._kernel_udf``, a ``mapInPandas``
+function) calls it once per image inside each Arrow batch (images are
+variable-size, so cross-image vectorization is impossible; all per-image
+math is vectorized numpy — no per-pixel Python, satisfying the
+no-per-row-Python invariant).
 
 Fault isolation follows the reference (``main.py:132-137``): a bad image
 never kills the batch — the north rule maps it to "media span passes
@@ -38,7 +41,6 @@ from .imageops import (
     paint_runs,
     resize_area,
     rgb_red_mask,
-    uint8_stats,
 )
 from .codecs import ImageDecodeError, ImageTooLarge, decode_image_lazy
 from .ocr import decode_seal_with_confidence
@@ -54,8 +56,6 @@ class ImageResult:
     status: int
     n_components: int = 0
     red_pixels: int = 0
-    mean: float = 0.0
-    std: float = 0.0
     confidence: float = 1.0  # worst per-glyph template agreement (F14 metric)
     # per-kept-component bounding boxes (y0, x0, y1, x1) in full-frame
     # coordinates, deterministic (y0, x0) component order — the F12
@@ -110,17 +110,15 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
 
     # F2/F3: fused HSV + dual-band red mask over the contiguous frame
     # (scratch-buffer reuse inside rgb_red_mask keeps the pass
-    # allocation-free).  F15 stats on a deterministic 4x4 stride sample
-    # (probe metric, never part of span equality).
+    # allocation-free)
     mask0 = rgb_red_mask(img, cfg.hue_band1, cfg.hue_band2, cfg.sat_min, cfg.val_min)
-    mean, std = uint8_stats(np.ascontiguousarray(img[::4, ::4]))
 
     # F4/F5 operate on the red-pixel extent only, padded by the morph
     # reach (2) so open/close border behavior matches the full-frame
     # computation; results shift back to global coordinates below.
     rows_any = np.flatnonzero(mask0.any(axis=1))
     if rows_any.size == 0:
-        return ImageResult("", OK, 0, 0, mean, std)
+        return ImageResult("", OK)
     ry0 = max(0, int(rows_any[0]) - 2)
     ry1 = min(h, int(rows_any[-1]) + 3)
     cols_any = np.flatnonzero(mask0[ry0:ry1].any(axis=0))
@@ -149,7 +147,7 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
         kept = list(range(len(stats)))
     if not kept:
         # morphology erased everything: empty extraction, still a success
-        return ImageResult("", OK, 0, 0, mean, std)
+        return ImageResult("", OK)
 
     # F7/F8/F10-F13 are seal-local: everything outside the filtered mask is
     # whited out (F7), so the enhancement passes and OCR only ever see the
@@ -186,6 +184,6 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
         if text.strip():  # P4: drop blank results
             texts.append(text)
             confidence = min(confidence, conf)
-    return ImageResult("".join(texts), OK, len(kept), red_px, mean, std,
-                       confidence, tuple(boxes))
+    return ImageResult("".join(texts), OK, len(kept), red_px, confidence,
+                       tuple(boxes))
 

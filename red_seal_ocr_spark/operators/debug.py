@@ -20,6 +20,7 @@ from ..functions.imageops import (
     filled_components,
     morph_close,
     morph_open,
+    paint_runs,
     rgb_red_mask,
 )
 from ..functions.kernel import _area_ratio
@@ -48,11 +49,7 @@ def dump_debug_images(media_rows, out_dir: str,
         run_sets, stats = filled_components(m)
         min_area = _area_ratio(h, w, cfg) * h * w
         kept = [i for i, st in enumerate(stats) if st["area"] >= min_area]
-        filtered = np.zeros((h, w), dtype=bool)
-        for i in kept:
-            for rows, c0, c1 in run_sets[i]:
-                for r, a, b in zip(rows.tolist(), c0.tolist(), c1.tolist()):
-                    filtered[r, a:b] = True
+        filtered = paint_runs((h, w), [runs for i in kept for runs in run_sets[i]])
         safe = media_ref.replace("/", "_")
         (out / f"{safe}.mask.png").write_bytes(
             encode_png((m * np.uint8(255)).astype(np.uint8))

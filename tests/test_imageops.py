@@ -85,6 +85,34 @@ def test_hsv_rgb_roundtrip_on_saturated_colors():
         assert np.abs(back.astype(int) - np.array(rgb)).max() <= 4
 
 
+def _hsv_to_rgb_float(hsv):
+    """The float64 cv2 HSV -> RGB formula, evaluated per pixel: the
+    reference that hsv_to_rgb_cv's tables are built from."""
+    h = hsv[..., 0].astype(np.float64) * 2.0
+    s = hsv[..., 1].astype(np.float64) / 255.0
+    v = hsv[..., 2].astype(np.float64)
+    c = v * s
+    hp = h / 60.0
+    x = c * (1.0 - np.abs(hp % 2.0 - 1.0))
+    m = v - c
+    z = np.zeros_like(c)
+    sector = np.floor(hp).astype(np.int64) % 6
+    r = np.choose(np.array([0, 1, 2, 2, 1, 0])[sector], (c, x, z))
+    g = np.choose(np.array([1, 0, 0, 1, 2, 2])[sector], (c, x, z))
+    b = np.choose(np.array([2, 2, 1, 0, 0, 1])[sector], (c, x, z))
+    out = np.stack([r + m, g + m, b + m], axis=-1)
+    return np.clip(np.rint(out), 0, 255).astype(np.uint8)
+
+
+def test_hsv_to_rgb_matches_float_formula_on_every_triple():
+    sv = np.stack(np.meshgrid(np.arange(256), np.arange(256), indexing="ij"), -1)
+    hsv = np.empty((16, 256 * 256, 3), dtype=np.uint8)
+    hsv[..., 1:] = sv.reshape(1, -1, 2)
+    for h0 in range(0, 256, 16):
+        hsv[..., 0] = np.arange(h0, h0 + 16)[:, None]
+        assert np.array_equal(hsv_to_rgb_cv(hsv), _hsv_to_rgb_float(hsv)), h0
+
+
 def test_lab_roundtrip():
     x = RNG.integers(0, 256, (16, 16, 3), dtype=np.uint8)
     back = lab_to_rgb_cv(rgb_to_lab_cv(x))

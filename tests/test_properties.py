@@ -11,6 +11,8 @@ from red_seal_ocr_spark.functions.imageops import (
     connected_components,
     dilate2,
     erode2,
+    filled_components,
+    paint_runs,
     red_mask,
     resize_area,
     rgb_red_mask,
@@ -43,34 +45,76 @@ def test_fused_mask_equals_composed(img):
     assert (a == b).all()
 
 
-def _bfs_label_count(mask):
-    """Brute-force 8-connected component count (oracle for union-find)."""
-    seen = np.zeros_like(mask)
+def _flood(mask, seeds):
+    """Pixels of ``mask`` 8-connected to any of ``seeds`` (brute-force BFS)."""
     h, w = mask.shape
-    count = 0
-    for sy in range(h):
-        for sx in range(w):
-            if mask[sy, sx] and not seen[sy, sx]:
-                count += 1
-                stack = [(sy, sx)]
-                seen[sy, sx] = True
-                while stack:
-                    y, x = stack.pop()
-                    for dy in (-1, 0, 1):
-                        for dx in (-1, 0, 1):
-                            ny, nx = y + dy, x + dx
-                            if 0 <= ny < h and 0 <= nx < w and mask[ny, nx] and not seen[ny, nx]:
-                                seen[ny, nx] = True
-                                stack.append((ny, nx))
-    return count
+    seen = set(seeds)
+    stack = list(seeds)
+    while stack:
+        y, x = stack.pop()
+        for dy in (-1, 0, 1):
+            for dx in (-1, 0, 1):
+                ny, nx = y + dy, x + dx
+                if 0 <= ny < h and 0 <= nx < w and mask[ny, nx] and (ny, nx) not in seen:
+                    seen.add((ny, nx))
+                    stack.append((ny, nx))
+    return seen
+
+
+def _bfs_components(mask):
+    """Brute-force 8-connected components (oracle for the run labeling),
+    as ``(y0, x0, y1, x1, pixels)`` in the engine's order: by (y0, x0),
+    ties by the component's first pixel in scan order."""
+    seen = set()
+    comps = []
+    for sy, sx in zip(*np.nonzero(mask)):
+        if (sy, sx) not in seen:
+            pix = _flood(mask, [(sy, sx)])
+            seen |= pix
+            ys, xs = zip(*pix)
+            comps.append((min(ys), min(xs), max(ys) + 1, max(xs) + 1, pix))
+    return sorted(comps, key=lambda c: c[:2])  # stable: scan order breaks ties
+
+
+def _run_pixels(rows, c0, c1):
+    return [(int(r), x) for r, a, b in zip(rows, c0, c1) for x in range(a, b)]
 
 
 @settings(max_examples=30, deadline=None)
 @given(masks)
 def test_components_match_bfs(mask):
     runs, stats = connected_components(mask)
-    assert len(stats) == _bfs_label_count(mask)
-    assert sum(st_["area"] for st_ in stats) == int(mask.sum())
+    want = _bfs_components(mask)
+    assert len(runs) == len(stats) == len(want)
+    for (rows, c0, c1), st_, (y0, x0, y1, x1, pix) in zip(runs, stats, want):
+        got = _run_pixels(rows, c0, c1)
+        assert got == sorted(pix)  # same pixels, runs in (row, col) order
+        assert st_ == {"area": len(pix), "y0": y0, "x0": x0, "y1": y1, "x1": x1}
+
+
+@settings(max_examples=30, deadline=None)
+@given(masks)
+def test_filled_components_match_flood_fill(mask):
+    """Hole filling: inside each component's bbox, the background not
+    8-connected to the bbox border is filled in."""
+    run_sets, stats = filled_components(mask)
+    want = _bfs_components(mask)
+    assert len(run_sets) == len(stats) == len(want)
+    for run_set, st_, (y0, x0, y1, x1, pix) in zip(run_sets, stats, want):
+        local = np.zeros((y1 - y0, x1 - x0), dtype=bool)
+        for y, x in pix:
+            local[y - y0, x - x0] = True
+        bg = ~local
+        h, w = bg.shape
+        border = [(y, x) for y, x in zip(*np.nonzero(bg))
+                  if y in (0, h - 1) or x in (0, w - 1)]
+        filled = np.ones_like(bg)
+        for y, x in _flood(bg, border):
+            filled[y, x] = False
+        painted = paint_runs(mask.shape, run_set)
+        assert np.array_equal(painted[y0:y1, x0:x1], filled)
+        assert int(painted.sum()) == int(filled.sum()) == st_["area"]
+        assert (st_["y0"], st_["x0"], st_["y1"], st_["x1"]) == (y0, x0, y1, x1)
 
 
 @settings(max_examples=30, deadline=None)

@@ -13,11 +13,12 @@ per-record operator chain (``src/ocr_engine.py:284-450``; SURVEY.md 2.3):
 The reference's input-stats probe (F15) is not reproduced: its mean/std
 feed only a log warning there, and nothing here would read them.
 
-The Spark side (``operators.extract._kernel_udf``, a ``mapInPandas``
-function) calls it once per image inside each Arrow batch (images are
-variable-size, so cross-image vectorization is impossible; all per-image
-math is vectorized numpy — no per-pixel Python, satisfying the
-no-per-row-Python invariant).
+The Spark side calls it once per image inside each Arrow batch: the
+per-medium function of ``operators.extract._kernel_udf``, run by the
+engine's one ``mapInPandas`` batch loop (``operators.items``).  Images
+are variable-size, so cross-image vectorization is impossible; all
+per-image math is vectorized numpy — no per-pixel Python, satisfying the
+no-per-row-Python invariant.
 
 Fault isolation follows the reference (``main.py:132-137``): a bad image
 never kills the batch — the north rule maps it to "media span passes

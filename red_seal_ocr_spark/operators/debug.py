@@ -23,8 +23,9 @@ from ..functions.imageops import (
     paint_runs,
     rgb_red_mask,
 )
+from ..functions.codecs import ImageDecodeError, decode_image_lazy
 from ..functions.kernel import _area_ratio
-from ..functions.png import PngError, decode_png, encode_png
+from ..functions.png import encode_png
 
 
 def dump_debug_images(media_rows, out_dir: str,
@@ -38,8 +39,8 @@ def dump_debug_images(media_rows, out_dir: str,
     for media_ref, content in media_rows:
         entry: dict = {"media_ref": media_ref}
         try:
-            img = decode_png(bytes(content))
-        except (PngError, TypeError) as exc:
+            img = decode_image_lazy(bytes(content)).full()
+        except (ImageDecodeError, TypeError) as exc:
             entry["error"] = f"{type(exc).__name__}: {exc}"
             results.append(entry)
             continue

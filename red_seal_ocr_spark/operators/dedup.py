@@ -182,11 +182,14 @@ def banded_minhash(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 3,
+    extra_cols: tuple = (),
 ) -> DataFrame:
-    """LSH band rows ``(id, band, bucket)`` for each document — the
-    shared first stage of :func:`minhash_lsh_candidates` and
-    :func:`incremental_lsh_candidates`, exposed so the banded corpus can
-    be PERSISTED once per corpus version (snapshot layer:
+    """LSH band rows ``(id, *extra_cols, band, bucket)`` for each
+    document — the shared first stage of :func:`minhash_lsh_candidates`,
+    :func:`incremental_lsh_candidates` and the streaming near-dup
+    detector (which carries the event time in ``extra_cols``), exposed
+    so the banded corpus can be PERSISTED once per corpus version
+    (snapshot layer:
     :func:`red_seal_ocr_spark.sources.snapshot.write_banded_corpus`) and
     re-used by every subsequent ingest batch instead of re-hashed.
 
@@ -196,9 +199,11 @@ def banded_minhash(
     fixed-index xxhash64 calls codegen flat.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k)
+    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_k,
+                              extra_cols)
     return sigs.select(
         F.col(id_col),
+        *[F.col(c) for c in extra_cols],
         F.posexplode(
             F.array(
                 *[

@@ -14,7 +14,8 @@ Plan shape (all public DataFrame API, no RDDs, no custom Catalyst rules):
             Sized by kernel_partitions: one task per core under a
             local master, spark.sql.shuffle.partitions elsewhere,
             cfg.salt_partitions when set
-         -> mapInPandas(kernel)                   (F1-F13, Arrow batches)
+         -> mapInPandas(kernel)                   (F1-F13, Arrow batches;
+            _kernel_udf: one row per medium through operators.items)
          -> groupBy(doc_id): offset->text map of extracted snippets
       -> map-side splice: left-join the snippet maps onto INTACT document
          rows; transform(spans) replaces successful media spans in place
@@ -49,6 +50,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..sources.snapshot import commit_snapshot, list_run_files, read_table
 from ..sources.snapshot import drop_empty_files as _drop_empty_files
+from .items import item_mapper
 
 KERNEL_OUT_SCHEMA = (
     "doc_id string, offset int, media_ref string, text string, "
@@ -60,68 +62,45 @@ KERNEL_OUT_SCHEMA = (
 KERNEL_OUT_SCHEMA_BBOX = KERNEL_OUT_SCHEMA + ", bboxes array<array<int>>"
 
 
-def _kernel_udf(cfg: EngineConfig):
-    """mapInPandas kernel: one Arrow batch of media spans -> extracted rows.
+def _kernel_schema(cfg: EngineConfig) -> str:
+    return KERNEL_OUT_SCHEMA_BBOX if cfg.emit_bboxes else KERNEL_OUT_SCHEMA
 
-    Batched numpy inside (no per-row Python in the Spark sense: the loop
-    over variable-size images is the vectorization boundary, every pixel
-    op is numpy).  Worker-side state (glyph templates) lives at module
+
+def _kernel_udf(cfg: EngineConfig):
+    """mapInPandas kernel: Arrow batches of media spans -> one row per span.
+
+    The batch loop is :func:`.items.item_mapper`; this function supplies
+    the per-medium function, whose tuple is ``(text, ok, failure_kind,
+    n_components, confidence, kernel_ms[, bboxes])``.  Batched numpy
+    inside (no per-row Python in the Spark sense: the loop over
+    variable-size images is the vectorization boundary, every pixel op
+    is numpy).  Worker-side state (glyph templates) lives at module
     level and is reused across batches via spark.python.worker.reuse —
     the executor-side analog of the reference's OCR pool (SURVEY.md X5).
     """
+    no_box = (None,) if cfg.emit_bboxes else ()
 
-    def run(batches):
+    def medium(content):
         import time
-
-        import pandas as pd
 
         from ..functions.kernel import OK, TOO_LARGE, process_image
 
-        for b in batches:
-            texts, oks, fkinds, ncomps, confs, ms = [], [], [], [], [], []
-            boxes = []
-            for content in b["content"]:
-                if content is None:
-                    texts.append(None)
-                    oks.append(False)
-                    fkinds.append("missing_media")
-                    ncomps.append(0)
-                    confs.append(None)
-                    ms.append(0.0)
-                    boxes.append(None)
-                    continue
-                t0 = time.perf_counter()
-                r = process_image(bytes(content), cfg)
-                # per-item watchdog metric (never part of span equality):
-                # surfaces slow items in lineage so a hot partition is
-                # attributable to its inputs, not guessed at
-                ms.append((time.perf_counter() - t0) * 1000.0)
-                ok = r.status == OK
-                texts.append(r.text if ok else None)
-                oks.append(ok)
-                fkinds.append(
-                    None if ok
-                    else ("too_large" if r.status == TOO_LARGE else "decode_error")
-                )
-                ncomps.append(r.n_components)
-                confs.append(r.confidence if ok else None)
-                boxes.append([list(bx) for bx in r.bboxes] if ok else None)
-            cols = {
-                "doc_id": b["doc_id"],
-                "offset": b["offset"],
-                "media_ref": b["media_ref"],
-                "text": texts,
-                "ok": oks,
-                "failure_kind": fkinds,
-                "n_components": ncomps,
-                "confidence": confs,
-                "kernel_ms": ms,
-            }
-            if cfg.emit_bboxes:
-                cols["bboxes"] = boxes
-            yield pd.DataFrame(cols)
+        if content is None:
+            return [(None, False, "missing_media", 0, None, 0.0) + no_box]
+        t0 = time.perf_counter()
+        r = process_image(bytes(content), cfg)
+        # per-item watchdog metric (never part of span equality):
+        # surfaces slow items in lineage so a hot partition is
+        # attributable to its inputs, not guessed at
+        ms = (time.perf_counter() - t0) * 1000.0
+        if r.status != OK:
+            kind = "too_large" if r.status == TOO_LARGE else "decode_error"
+            return [(None, False, kind, r.n_components, None, ms) + no_box]
+        boxes = ([list(bx) for bx in r.bboxes],) if cfg.emit_bboxes else ()
+        return [(r.text, True, None, r.n_components, r.confidence, ms) + boxes]
 
-    return run
+    return item_mapper(medium, _kernel_schema(cfg),
+                       keys=("doc_id", "offset", "media_ref"))
 
 
 _LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
@@ -189,10 +168,7 @@ def extract_documents(
     salt_n = kernel_partitions(spark, cfg)
     salted = joined.repartition(salt_n, F.expr("xxhash64(doc_id, offset)"))
 
-    extracted = salted.mapInPandas(
-        _kernel_udf(cfg),
-        schema=KERNEL_OUT_SCHEMA_BBOX if cfg.emit_bboxes else KERNEL_OUT_SCHEMA,
-    )
+    extracted = salted.mapInPandas(_kernel_udf(cfg), schema=_kernel_schema(cfg))
 
     # Map-side splice (A3/O2): instead of exploding + re-collecting every
     # span (which shuffles the whole text corpus through collect_list),
@@ -256,15 +232,21 @@ def run_extract(
     references them once ``_current`` flips (atomic rename).  A rerun
     after any failure anti-joins the committed doc_ids and processes just
     the remainder (north rule: resumable from checkpoint).
+
+    Each call stages under its own ``run-<run_id>-<attempt>`` directories,
+    so a rerun with the same ``run_id`` (a resume, a job restart, a
+    replayed stream batch) never writes into an earlier attempt's.  The
+    manifest keeps ``run_id`` as given.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
+    attempt = f"run-{run_id}-{uuid.uuid4().hex[:6]}"
     committed = read_table(spark, table_dir)
     remaining = docs
     if committed is not None:
         remaining = docs.join(committed.select("doc_id"), on="doc_id", how="left_anti")
 
     result = extract_documents(spark, remaining, media, cfg)
-    data_dir = f"{table_dir}/data/run-{run_id}"
+    data_dir = f"{table_dir}/data/{attempt}"
     result.write.parquet(data_dir)
     data_files = _drop_empty_files(list_run_files(data_dir))
 
@@ -293,7 +275,7 @@ def run_extract(
                 "max_kernel_ms",
             )
         )
-        lineage_dir = f"{table_dir}/_lineage/run-{run_id}"
+        lineage_dir = f"{table_dir}/_lineage/{attempt}"
         lineage.write.parquet(lineage_dir)
         lineage_files = list_run_files(lineage_dir)
 
@@ -339,16 +321,9 @@ def run_extract_batched(
     manifest: dict = {}
     for b in range(n_batches):
         subset = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(n_batches)) == b)
-        # Salt each batch's run id with a fresh uuid component: a resume
-        # with a caller-pinned --run-id must never target the same
-        # data/run-<id>-bNNN directory a crashed attempt already created
-        # (the default-mode parquet write would fail).  Slice membership
-        # stays deterministic (the hash filter above); only the staging
-        # directory name is salted, and uncommitted orphan directories are
-        # invisible to readers (manifest lists files explicitly).
         manifest = run_extract(
             spark, subset, media, table_dir, cfg,
-            run_id=f"{run_id}-b{b:03d}-{uuid.uuid4().hex[:6]}",
+            run_id=f"{run_id}-b{b:03d}",
             input_snapshot_id=input_snapshot_id,
         )
     return manifest

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .items import map_items
+
 _ENTITIES = [("&amp;", "&"), ("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'),
              ("&#39;", "'"), ("&nbsp;", " ")]
 
@@ -133,23 +135,11 @@ def extract_main_content(docs: DataFrame, id_col: str = "doc_id",
                          max_link_density: float = 0.4) -> DataFrame:
     """DOM-heuristic main-content extraction (see module docstring)."""
 
-    def run(batches):
-        import pandas as pd
+    def item(html):
+        return [parse_main_content(html, min_block_chars, max_link_density)]
 
-        for b in batches:
-            rows = [
-                (doc_id,) + parse_main_content(html, min_block_chars, max_link_density)
-                for doc_id, html in zip(b[id_col], b[html_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "ok", "main_text", "n_blocks",
-                         "kept_blocks", "link_density_x100"],
-            )
-
-    return docs.select(F.col(id_col), F.col(html_col)).mapInPandas(
-        run, schema=MAIN_CONTENT_SCHEMA
-    )
+    return map_items(docs.select(F.col(id_col), F.col(html_col)), item,
+                     MAIN_CONTENT_SCHEMA, keys=(id_col,), values=(html_col,))
 
 
 def synth_html_page(doc_id: str, article_text: str, seed: int = 42) -> tuple[str, str]:
@@ -198,6 +188,48 @@ def doc_lines(
     )
 
 
+def batch_site_line_stats(
+    batch_docs: DataFrame,
+    id_col: str = "doc_id",
+    site_col: str = "source",
+    text_col: str = "text",
+) -> DataFrame:
+    """Per-(site, line) distinct-doc counts for ONE batch, plus the
+    per-site doc totals as ``line IS NULL`` rows."""
+    lines = doc_lines(batch_docs, id_col, site_col, text_col)
+    line_stats = (
+        lines.groupBy("site", "line")
+        .agg(F.countDistinct("doc_id").cast("long").alias("cnt"))
+    )
+    site_stats = (
+        batch_docs.groupBy(F.col(site_col).alias("site"))
+        .agg(F.countDistinct(id_col).cast("long").alias("cnt"))
+        .select("site", F.lit(None).cast("string").alias("line"), "cnt")
+    )
+    return line_stats.unionByName(site_stats)
+
+
+def boiler_from_stats(stats: DataFrame, min_doc_frac_pct: int = 60) -> DataFrame:
+    """Template verdicts ``(site, line, is_boiler)`` from site-line stats
+    (:func:`batch_site_line_stats` rows, or their running totals in
+    ``streaming/curate_stream.py``): a line is template on a site with
+    >= 2 documents when it appears in >= ``min_doc_frac_pct``% of them."""
+    sites = stats.filter(F.col("line").isNull()).select(
+        "site", F.col("cnt").alias("n_site_docs")
+    )
+    return (
+        stats.filter(F.col("line").isNotNull())
+        .join(sites, on="site")
+        .select(
+            "site", "line",
+            (
+                (F.col("n_site_docs") >= 2)
+                & (F.col("cnt") * 100 >= F.col("n_site_docs") * min_doc_frac_pct)
+            ).alias("is_boiler"),
+        )
+    )
+
+
 def site_template_strip(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -226,25 +258,9 @@ def site_template_strip(
     emits (0, 0, '') via a left join back to the input id set (ADVICE
     r05: a cleanup operator must not lose rows).
     """
-    lines = doc_lines(docs, id_col, site_col, text_col)
-    site_docs = (
-        docs.groupBy(F.col(site_col).alias("site"))
-        .agg(F.countDistinct(id_col).alias("n_site_docs"))
-    )
-    df = (
-        lines.groupBy("site", "line")
-        .agg(F.countDistinct("doc_id").alias("doc_df"))
-        .join(site_docs, on="site")
-        .select(
-            "site", "line",
-            (
-                (F.col("n_site_docs") >= 2)
-                & (F.col("doc_df") * 100 >= F.col("n_site_docs") * min_doc_frac_pct)
-            ).alias("is_boiler"),
-        )
-    )
-    return strip_lines_by_flag(docs, df, id_col=id_col, site_col=site_col,
-                               text_col=text_col)
+    stats = batch_site_line_stats(docs, id_col, site_col, text_col)
+    return strip_lines_by_flag(docs, boiler_from_stats(stats, min_doc_frac_pct),
+                               id_col=id_col, site_col=site_col, text_col=text_col)
 
 
 def strip_lines_by_flag(

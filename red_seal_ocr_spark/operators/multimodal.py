@@ -1,9 +1,13 @@
 """Multimodal column operators: opaque binary payloads + typed metadata.
 
 Image / audio / video payloads travel as ``binary`` columns; each
-operator is a ``mapInPandas`` stage with an explicit output schema so the
-Spark-side plumbing (Arrow batch shape, schema, partitioning) is real and
-tested even where the heavy decoder is not available in this container:
+operator is a ``mapInPandas`` stage with an explicit output schema, built
+like the extraction kernel (``operators.extract._kernel_udf``) from one
+per-item function and its typed failure tuple through
+:func:`.items.map_items`, so a corrupt payload gives exactly one
+``ok=false`` row.  The Spark-side plumbing (Arrow batch shape, schema,
+partitioning) is real and tested even where the heavy decoder is not
+available in this container:
 
 - images: decoded for real by the engine's own PNG/JPEG/BMP codecs
   (header parse, pixel stats, thumbnail resize via INTER_AREA).
@@ -29,6 +33,8 @@ import struct
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .items import map_items
 
 try:  # pragma: no cover - not present in this container
     import soundfile  # type: ignore  # noqa: F401
@@ -58,6 +64,10 @@ AUDIO_META_SCHEMA = (
 
 FRAME_SAMPLE_SCHEMA = "media_ref string, ok boolean, frame_idx int, frame binary"
 
+# what a malformed, truncated or null audio / video / PDF payload raises:
+# its item gives one ok=false row
+_PAYLOAD_ERRORS = (ValueError, TypeError, NotImplementedError)
+
 VIDEO_FRAME_STATS_SCHEMA = (
     "media_ref string, ok boolean, fps int, n_frames int, frame_idx int, "
     "width int, height int, mean_milli bigint"
@@ -69,69 +79,41 @@ def image_metadata(media: DataFrame) -> DataFrame:
     red-mask pixel ratio (the engine kernel's screen reused as a cheap
     multimodal feature)."""
 
-    def run(batches):
-        import numpy as np
-        import pandas as pd
+    from ..config import DEFAULT_CONFIG as cfg
+    from ..functions.codecs import ImageDecodeError, decode_image_lazy
+    from ..functions.imageops import rgb_red_mask
 
-        from ..config import DEFAULT_CONFIG as cfg
-        from ..functions.codecs import ImageDecodeError, decode_image_lazy
-        from ..functions.imageops import rgb_red_mask
+    def item(content):
+        # format-sniffing dispatch (png/jpeg/bmp — S2 parity)
+        img = decode_image_lazy(bytes(content)).full()
+        red = rgb_red_mask(img, cfg.hue_band1, cfg.hue_band2,
+                           cfg.sat_min, cfg.val_min)
+        means = img.reshape(-1, 3).mean(axis=0)
+        return [(True, img.shape[1], img.shape[0], 3,
+                 float(means[0]), float(means[1]), float(means[2]),
+                 float(red.mean()))]
 
-        for b in batches:
-            rows = []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                try:
-                    # format-sniffing dispatch (png/jpeg/bmp — S2 parity)
-                    img = decode_image_lazy(bytes(content)).full()
-                    red = rgb_red_mask(img, cfg.hue_band1, cfg.hue_band2,
-                                       cfg.sat_min, cfg.val_min)
-                    means = img.reshape(-1, 3).mean(axis=0)
-                    rows.append(
-                        (ref, True, img.shape[1], img.shape[0], 3,
-                         float(means[0]), float(means[1]), float(means[2]),
-                         float(red.mean()))
-                    )
-                except (ImageDecodeError, TypeError):
-                    rows.append((ref, False, None, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "ok", "width", "height", "channels",
-                         "mean_r", "mean_g", "mean_b", "red_ratio"],
-            )
-
-    return media.mapInPandas(run, schema=IMAGE_META_SCHEMA)
+    return map_items(media, item, IMAGE_META_SCHEMA,
+                     errors=(ImageDecodeError, TypeError))
 
 
 def image_thumbnails(media: DataFrame, max_side: int = 64) -> DataFrame:
     """Resize (INTER_AREA) every image to a <=max_side thumbnail PNG."""
 
-    def run(batches):
-        import pandas as pd
+    from ..functions.codecs import ImageDecodeError, decode_image_lazy
+    from ..functions.imageops import resize_area
+    from ..functions.png import encode_png
 
-        from ..functions.codecs import ImageDecodeError, decode_image_lazy
-        from ..functions.imageops import resize_area
-        from ..functions.png import encode_png
+    def item(content):
+        img = decode_image_lazy(bytes(content)).full()
+        h, w = img.shape[:2]
+        scale = max_side / max(h, w)
+        if scale < 1.0:
+            img = resize_area(img, max(1, round(h * scale)), max(1, round(w * scale)))
+        return [(True, encode_png(img))]
 
-        for b in batches:
-            refs, oks, blobs = [], [], []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                refs.append(ref)
-                try:
-                    img = decode_image_lazy(bytes(content)).full()
-                    h, w = img.shape[:2]
-                    scale = max_side / max(h, w)
-                    if scale < 1.0:
-                        img = resize_area(
-                            img, max(1, round(h * scale)), max(1, round(w * scale))
-                        )
-                    oks.append(True)
-                    blobs.append(encode_png(img))
-                except (ImageDecodeError, TypeError):
-                    oks.append(False)
-                    blobs.append(None)
-            yield pd.DataFrame({"media_ref": refs, "ok": oks, "thumb": blobs})
-
-    return media.mapInPandas(run, schema=THUMBNAIL_SCHEMA)
+    return map_items(media, item, THUMBNAIL_SCHEMA,
+                     errors=(ImageDecodeError, TypeError))
 
 
 def _decode_wav(content: bytes):
@@ -268,28 +250,13 @@ def _decode_audio(content: bytes):
 def audio_metadata(media: DataFrame) -> DataFrame:
     """Decode audio payloads -> sample rate / duration / RMS features."""
 
-    def run(batches):
-        import pandas as pd
+    def item(content):
+        rate, samples = _decode_audio(bytes(content))
+        return [(True, rate, len(samples),
+                 int(1000 * len(samples) / max(rate, 1)),
+                 float((samples**2).mean() ** 0.5 if len(samples) else 0.0))]
 
-        for b in batches:
-            rows = []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                try:
-                    rate, samples = _decode_audio(bytes(content))
-                    rows.append(
-                        (ref, True, rate, len(samples),
-                         int(1000 * len(samples) / max(rate, 1)),
-                         float((samples**2).mean() ** 0.5 if len(samples) else 0.0))
-                    )
-                except (ValueError, TypeError, NotImplementedError):
-                    rows.append((ref, False, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "ok", "sample_rate", "n_samples",
-                         "duration_ms", "rms"],
-            )
-
-    return media.mapInPandas(run, schema=AUDIO_META_SCHEMA)
+    return map_items(media, item, AUDIO_META_SCHEMA, errors=_PAYLOAD_ERRORS)
 
 
 def _parse_avi(content: bytes, require_mjpg: bool = False):
@@ -433,39 +400,21 @@ def video_frame_stats(media: DataFrame) -> DataFrame:
     embarrassingly parallel across payload rows; corrupt payloads emit a
     single ok=false row rather than poisoning the batch."""
 
-    def run(batches):
-        import numpy as np
-        import pandas as pd
+    import numpy as np
 
-        from ..functions.jpeg import JpegError, decode_jpeg
+    from ..functions.jpeg import JpegError, decode_jpeg
 
-        for b in batches:
-            rows = []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                try:
-                    fps, _, _, blobs = _parse_avi(bytes(content))
-                    # decode EVERY frame before appending anything: a
-                    # corrupt frame mid-stream must produce exactly one
-                    # ok=false row, never ok=true rows for the frames
-                    # before it (ADVICE r05, mirrors _iter_pdf_pages)
-                    doc_rows = []
-                    for i, blob in enumerate(blobs):
-                        img = decode_jpeg(blob)
-                        mean_milli = int(round(float(np.mean(img)) * 1000.0))
-                        doc_rows.append(
-                            (ref, True, int(round(fps)), len(blobs), i,
-                             img.shape[1], img.shape[0], mean_milli)
-                        )
-                    rows.extend(doc_rows)
-                except (ValueError, TypeError, JpegError):
-                    rows.append((ref, False, None, None, None, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_ref", "ok", "fps", "n_frames", "frame_idx",
-                         "width", "height", "mean_milli"],
-            )
+    def item(content):
+        fps, _, _, blobs = _parse_avi(bytes(content))
+        rows = []
+        for i, blob in enumerate(blobs):
+            img = decode_jpeg(blob)
+            rows.append((True, int(round(fps)), len(blobs), i, img.shape[1],
+                         img.shape[0], int(round(float(np.mean(img)) * 1000.0))))
+        return rows
 
-    return media.mapInPandas(run, schema=VIDEO_FRAME_STATS_SCHEMA)
+    return map_items(media, item, VIDEO_FRAME_STATS_SCHEMA,
+                     errors=(ValueError, TypeError, JpegError))
 
 
 def _iter_video_frames(content: bytes):
@@ -525,23 +474,15 @@ def _iter_video_frames(content: bytes):
 
 def sample_video_frames(media: DataFrame, every_nth: int = 2) -> DataFrame:
     """Frame-sample video payloads: emit every Nth frame as PNG bytes
-    (one output row per sampled frame — a mapInPandas flat-map)."""
+    (one output row per sampled frame — a mapInPandas flat-map).  A
+    payload that fails part-way gives one ok=false row and no frames."""
 
-    def run(batches):
-        import pandas as pd
+    def item(content):
+        return [(True, i, frame)
+                for i, frame in enumerate(_iter_video_frames(bytes(content)))
+                if i % every_nth == 0]
 
-        for b in batches:
-            rows = []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                try:
-                    for i, frame in enumerate(_iter_video_frames(bytes(content))):
-                        if i % every_nth == 0:
-                            rows.append((ref, True, i, frame))
-                except (ValueError, TypeError, NotImplementedError):
-                    rows.append((ref, False, None, None))
-            yield pd.DataFrame(rows, columns=["media_ref", "ok", "frame_idx", "frame"])
-
-    return media.mapInPandas(run, schema=FRAME_SAMPLE_SCHEMA)
+    return map_items(media, item, FRAME_SAMPLE_SCHEMA, errors=_PAYLOAD_ERRORS)
 
 
 # --- deterministic fixture payload builders (datagen side) -----------------
@@ -930,23 +871,12 @@ def _iter_pdf_pages(content: bytes):
 def pdf_text(media: DataFrame) -> DataFrame:
     """Layout parse: page-ordered text extraction from PDF payloads."""
 
-    def run(batches):
-        import pandas as pd
+    def item(content):
+        pages = list(_iter_pdf_pages(bytes(content)))
+        text = "\n".join(pages)
+        return [(True, len(pages), text, len(text))]
 
-        for b in batches:
-            rows = []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                try:
-                    pages = list(_iter_pdf_pages(bytes(content)))
-                    text = "\n".join(pages)
-                    rows.append((ref, True, len(pages), text, len(text)))
-                except (ValueError, TypeError, NotImplementedError):
-                    rows.append((ref, False, None, None, None))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "ok", "n_pages", "text", "n_chars"]
-            )
-
-    return media.mapInPandas(run, schema=PDF_META_SCHEMA)
+    return map_items(media, item, PDF_META_SCHEMA, errors=_PAYLOAD_ERRORS)
 
 
 def make_fake_pdf(media_ref: str, seed: int = 42, n_pages: int = 3) -> bytes:
@@ -970,22 +900,11 @@ def pdf_pages(media: DataFrame) -> DataFrame:
     structure (e.g. :func:`pdf_strip_boilerplate`).  Corrupt payloads emit
     a single ok=false row."""
 
-    def run(batches):
-        import pandas as pd
+    def item(content):
+        return [(True, i, page)
+                for i, page in enumerate(_iter_pdf_pages(bytes(content)))]
 
-        for b in batches:
-            rows = []
-            for ref, content in zip(b["media_ref"], b["content"]):
-                try:
-                    for i, page in enumerate(_iter_pdf_pages(bytes(content))):
-                        rows.append((ref, True, i, page))
-                except (ValueError, TypeError, NotImplementedError):
-                    rows.append((ref, False, None, None))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "ok", "page_idx", "page_text"]
-            )
-
-    return media.mapInPandas(run, schema=PDF_PAGES_SCHEMA)
+    return map_items(media, item, PDF_PAGES_SCHEMA, errors=_PAYLOAD_ERRORS)
 
 
 def pdf_strip_boilerplate(pages: DataFrame, min_page_frac_pct: int = 60) -> DataFrame:

@@ -671,22 +671,16 @@ def q43_main_content(spark, sf):
     in the UDF);
     emits exact-match flags vs the known article text."""
     from ..operators.html_extract import extract_main_content, synth_html_page
+    from ..operators.items import map_items
 
     d = _t(spark, sf, "documents").filter(F.col("doc_id") < 100)
 
-    def build(batches):
-        import pandas as pd
+    def page(doc_id, text):
+        return [(str(doc_id), *synth_html_page(str(doc_id), text))]
 
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                html, expected = synth_html_page(str(doc_id), text)
-                rows.append((str(doc_id), html, expected))
-            yield pd.DataFrame(rows, columns=["doc_id", "html", "expected"])
-
-    pages = d.select("doc_id", "text").mapInPandas(
-        build, schema="doc_id string, html string, expected string"
-    )
+    pages = map_items(d.select("doc_id", "text"), page,
+                      "doc_id string, html string, expected string",
+                      keys=(), values=("doc_id", "text"))
     out = extract_main_content(pages)
     joined = out.join(pages.select("doc_id", "expected"), on="doc_id")
     return joined.select(

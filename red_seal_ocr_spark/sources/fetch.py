@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..operators.items import map_items
+
 FETCH_SCHEMA = "media_ref string, url string, content binary, n_bytes int, error string"
 
 CHUNK = 8192
@@ -66,21 +68,15 @@ def fetch_media(
     max_bytes = max_size_mb * 1024 * 1024
     fn = fetcher or default_fetcher
 
-    def run(batches):
-        import pandas as pd
-
-        for b in batches:
-            rows = []
-            for ref, url in zip(b["media_ref"], b["url"]):
-                try:
-                    data = fn(url, connect_timeout, read_timeout, max_bytes)
-                    rows.append((ref, url, data, len(data), None))
-                except Exception as exc:  # per-item fault isolation
-                    rows.append((ref, url, None, None, f"{type(exc).__name__}: {exc}"))
-            yield pd.DataFrame(
-                rows, columns=["media_ref", "url", "content", "n_bytes", "error"]
-            )
+    def item(url):
+        # per-item fault isolation: the error text is part of the row
+        try:
+            data = fn(url, connect_timeout, read_timeout, max_bytes)
+        except Exception as exc:
+            return [(None, None, f"{type(exc).__name__}: {exc}")]
+        return [(data, len(data), None)]
 
     if parallelism:
         refs = refs.repartition(parallelism)
-    return refs.mapInPandas(run, schema=FETCH_SCHEMA)
+    return map_items(refs, item, FETCH_SCHEMA, keys=("media_ref", "url"),
+                     values=("url",))

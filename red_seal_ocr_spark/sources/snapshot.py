@@ -15,8 +15,10 @@ the engine carries the minimal semantics the north rule needs:
 Layout::
 
     table_dir/
-      data/run-<run_id>/part-*.parquet      (one subdir per producing run)
-      _lineage/run-<run_id>/part-*.parquet  (per-partition metrics rows)
+      data/run-<run_id>[-<attempt>]/part-*.parquet      (one subdir per
+                                                          producing run)
+      _lineage/run-<run_id>[-<attempt>]/part-*.parquet  (per-partition
+                                                          metrics rows)
       _snapshots/snap-<n>.json
       _current                              (contains "snap-<n>.json")
 """

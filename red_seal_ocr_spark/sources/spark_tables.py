@@ -10,6 +10,7 @@ story) without a driver-side loop or any data movement.
 from __future__ import annotations
 
 from ..config import DEFAULT_CONFIG
+from ..operators.items import map_items
 from .datagen import doc_media_refs, gen_document, media_is_dangling, render_media
 
 DOCUMENTS_SCHEMA = (
@@ -28,15 +29,12 @@ def documents_df(spark, n_docs: int, seed: int = 42, partitions: int | None = No
         # round-trip); large n_docs keeps the 4x-cores scan parallelism
         partitions = max(8, min(n_docs, spark.sparkContext.defaultParallelism * 4))
 
-    def gen(batches):
-        import pandas as pd
+    def document(i):
+        d = gen_document(int(i), seed)
+        return [(d["doc_id"], d["spans"])]
 
-        for b in batches:
-            yield pd.DataFrame([gen_document(int(i), seed) for i in b["id"]])
-
-    return spark.range(n_docs, numPartitions=partitions).mapInPandas(
-        gen, schema=DOCUMENTS_SCHEMA
-    )
+    return map_items(spark.range(n_docs, numPartitions=partitions), document,
+                     DOCUMENTS_SCHEMA, keys=(), values=("id",))
 
 
 def media_df(spark, n_docs: int, seed: int = 42, partitions: int | None = None,
@@ -54,19 +52,10 @@ def media_df(spark, n_docs: int, seed: int = 42, partitions: int | None = None,
         # round-trip); large n_docs keeps the 4x-cores scan parallelism
         partitions = max(8, min(n_docs, spark.sparkContext.defaultParallelism * 4))
 
-    def gen(batches):
-        import pandas as pd
+    def media(i):
+        return [(ref, render_media(ref, seed, cfg, fmt))
+                for ref in doc_media_refs(gen_document(int(i), seed))
+                if not media_is_dangling(ref, seed)]
 
-        for b in batches:
-            refs, blobs = [], []
-            for i in b["id"]:
-                for ref in doc_media_refs(gen_document(int(i), seed)):
-                    if media_is_dangling(ref, seed):
-                        continue
-                    refs.append(ref)
-                    blobs.append(render_media(ref, seed, cfg, fmt))
-            yield pd.DataFrame({"media_ref": refs, "content": blobs})
-
-    return spark.range(n_docs, numPartitions=partitions).mapInPandas(
-        gen, schema=MEDIA_SCHEMA
-    )
+    return map_items(spark.range(n_docs, numPartitions=partitions), media,
+                     MEDIA_SCHEMA, keys=(), values=("id",))

@@ -41,30 +41,52 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.html_extract import (
+    batch_site_line_stats,
+    boiler_from_stats,
+    strip_lines_by_flag,
+)
 from ..sources import snapshot as snap
 
 
-def batch_site_line_stats(
-    batch_docs: DataFrame,
-    id_col: str = "doc_id",
-    site_col: str = "source",
-    text_col: str = "text",
+def _merge_batch_stats(
+    spark: SparkSession,
+    batch_stats: DataFrame,
+    stats_dir: str,
+    batch_id: int,
+    keys: tuple,
+    sums: tuple,
 ) -> DataFrame:
-    """Per-(site, line) distinct-doc counts for ONE batch, plus the
-    per-site doc totals as ``line IS NULL`` rows."""
-    from ..operators.html_extract import doc_lines
+    """Add one batch's additive ``batch_stats`` into the cumulative table
+    at ``stats_dir`` (grouped by ``keys``, summing ``sums``) and return
+    the cumulative stats DataFrame.
 
-    lines = doc_lines(batch_docs, id_col, site_col, text_col)
-    line_stats = (
-        lines.groupBy("site", "line")
-        .agg(F.countDistinct("doc_id").cast("long").alias("cnt"))
+    Exactly-once: a batch_id at or below the committed ``last_batch_id``
+    merges nothing.  The merged table is written with overwrite: a crash
+    between this write and the commit makes foreachBatch replay the SAME
+    batch_id (the at-least-once window this module documents), and the
+    deterministic path must absorb the dead attempt's orphan files or the
+    stream wedges forever on PATH_ALREADY_EXISTS.  Post-commit replays
+    never reach the write (the ``last_batch_id`` guard returns first)."""
+    cur = snap.current_snapshot(stats_dir)
+    if cur is not None and cur.get("last_batch_id", -1) >= batch_id:
+        return snap.read_table(spark, stats_dir)
+    old = snap.read_table(spark, stats_dir)
+    merged = (
+        batch_stats
+        if old is None
+        else old.unionByName(batch_stats)
+        .groupBy(*keys)
+        .agg(*[F.sum(c).alias(c) for c in sums])
     )
-    site_stats = (
-        batch_docs.groupBy(F.col(site_col).alias("site"))
-        .agg(F.countDistinct(id_col).cast("long").alias("cnt"))
-        .select("site", F.lit(None).cast("string").alias("line"), "cnt")
+    out_dir = f"{stats_dir}/data/run-batch-{batch_id}"
+    merged.write.mode("overwrite").parquet(out_dir)
+    files = snap.list_run_files(out_dir)
+    snap.commit_snapshot(
+        stats_dir, files, [], f"batch-{batch_id}",
+        extra={"last_batch_id": batch_id}, replace=True,
     )
-    return line_stats.unionByName(site_stats)
+    return snap.read_table(spark, stats_dir)
 
 
 def update_site_line_stats(
@@ -76,55 +98,12 @@ def update_site_line_stats(
     site_col: str = "source",
     text_col: str = "text",
 ) -> DataFrame:
-    """Merge one batch's stats into the cumulative table (exactly-once:
-    a batch_id at or below the committed ``last_batch_id`` merges
-    nothing) and return the cumulative stats DataFrame."""
-    cur = snap.current_snapshot(stats_dir)
-    if cur is not None and cur.get("last_batch_id", -1) >= batch_id:
-        return snap.read_table(spark, stats_dir)
+    """Merge one batch's site-line stats into the cumulative table
+    (exactly-once, :func:`_merge_batch_stats`) and return the cumulative
+    stats DataFrame."""
     batch_stats = batch_site_line_stats(batch_docs, id_col, site_col, text_col)
-    old = snap.read_table(spark, stats_dir)
-    merged = (
-        batch_stats
-        if old is None
-        else old.unionByName(batch_stats)
-        .groupBy("site", "line")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    out_dir = f"{stats_dir}/data/run-batch-{batch_id}"
-    # overwrite: a crash between this write and the commit below makes
-    # foreachBatch replay the SAME batch_id (the at-least-once window
-    # this module documents); the deterministic path must absorb the
-    # orphan files from the dead attempt or the stream wedges forever
-    # on PATH_ALREADY_EXISTS.  Post-commit replays never reach here
-    # (the last_batch_id guard returns first).
-    merged.write.mode("overwrite").parquet(out_dir)
-    files = snap.list_run_files(out_dir)
-    snap.commit_snapshot(
-        stats_dir, files, [], f"batch-{batch_id}",
-        extra={"last_batch_id": batch_id}, replace=True,
-    )
-    return snap.read_table(spark, stats_dir)
-
-
-def boiler_from_stats(stats: DataFrame, min_doc_frac_pct: int = 60) -> DataFrame:
-    """Template verdicts ``(site, line, is_boiler)`` from cumulative
-    stats — the same threshold rule as the batch operator, evaluated on
-    running totals."""
-    sites = stats.filter(F.col("line").isNull()).select(
-        "site", F.col("cnt").alias("n_site_docs")
-    )
-    return (
-        stats.filter(F.col("line").isNotNull())
-        .join(sites, on="site")
-        .select(
-            "site", "line",
-            (
-                (F.col("n_site_docs") >= 2)
-                & (F.col("cnt") * 100 >= F.col("n_site_docs") * min_doc_frac_pct)
-            ).alias("is_boiler"),
-        )
-    )
+    return _merge_batch_stats(spark, batch_stats, stats_dir, batch_id,
+                              keys=("site", "line"), sums=("cnt",))
 
 
 def run_site_strip_stream(
@@ -146,7 +125,6 @@ def run_site_strip_stream(
     as a snapshot of ``table_dir`` — template lines spread across
     micro-batches are caught from the batch where the site's cumulative
     threshold is crossed."""
-    from ..operators.html_extract import strip_lines_by_flag
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()
@@ -229,32 +207,13 @@ def update_nb_stats(
     text_col: str = "text",
 ) -> DataFrame:
     """Merge one batch's NB counts into the cumulative model table —
-    exactly-once via the same ``last_batch_id`` manifest guard as
-    :func:`update_site_line_stats` (token counts are additive across
-    micro-batches for the same reason the site-line counts are: a
-    file-source batch delivers each document exactly once)."""
-    cur = snap.current_snapshot(stats_dir)
-    if cur is not None and cur.get("last_batch_id", -1) >= batch_id:
-        return snap.read_table(spark, stats_dir)
+    exactly-once through the same :func:`_merge_batch_stats` as the
+    site-line stats (token counts are additive across micro-batches for
+    the same reason the site-line counts are: a file-source batch
+    delivers each document exactly once)."""
     batch_stats = batch_nb_stats(batch_docs, label_col, id_col, text_col)
-    old = snap.read_table(spark, stats_dir)
-    merged = (
-        batch_stats
-        if old is None
-        else old.unionByName(batch_stats)
-        .groupBy("term")
-        .agg(F.sum("c_pos").alias("c_pos"), F.sum("c_neg").alias("c_neg"))
-    )
-    out_dir = f"{stats_dir}/data/run-batch-{batch_id}"
-    # overwrite for the same pre-commit-replay reason update_site_line_stats
-    # documents: the dead attempt's orphans must not wedge the stream
-    merged.write.mode("overwrite").parquet(out_dir)
-    files = snap.list_run_files(out_dir)
-    snap.commit_snapshot(
-        stats_dir, files, [], f"batch-{batch_id}",
-        extra={"last_batch_id": batch_id}, replace=True,
-    )
-    return snap.read_table(spark, stats_dir)
+    return _merge_batch_stats(spark, batch_stats, stats_dir, batch_id,
+                              keys=("term",), sums=("c_pos", "c_neg"))
 
 
 def score_batch_nb(

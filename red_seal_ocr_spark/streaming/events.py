@@ -223,7 +223,8 @@ def streaming_near_dedup(docs: DataFrame, watermark: str = "1 hour",
     of ``dedup.minhash_lsh_candidates`` (VERDICT r03 #8).
 
     Signature/banding reuse the batch construction
-    (``dedup.minhash_signatures`` — all JVM expressions, streaming-safe);
+    (``dedup.banded_minhash`` carrying ``ts`` — all JVM expressions,
+    streaming-safe);
     state is the first-seen ``(doc_id, ts)`` per ``(band, bucket)`` key,
     evicted by EventTimeTimeout once the watermark passes its last
     sighting — bounded by the distinct band buckets inside the watermark
@@ -242,32 +243,14 @@ def streaming_near_dedup(docs: DataFrame, watermark: str = "1 hour",
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..operators.dedup import minhash_signatures
+    from ..operators.dedup import banded_minhash
 
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    rows_per_band = num_hashes // bands
     wm_ms = int(pd.Timedelta(watermark).total_seconds() * 1000)
 
-    sigs = minhash_signatures(docs, num_hashes=num_hashes,
-                              shingle_k=shingle_k, extra_cols=("ts",))
-    # unrolled banding (see minhash_lsh_candidates: lambda-indexed array
-    # access drops out of codegen)
-    banded = sigs.select(
-        "doc_id",
-        "ts",
-        F.posexplode(
-            F.array(
-                *[
-                    F.xxhash64(
-                        *[F.col("signature")[b * rows_per_band + r]
-                          for r in range(rows_per_band)]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("band", "bucket"),
-    )
+    banded = banded_minhash(docs, num_hashes=num_hashes, bands=bands,
+                            shingle_k=shingle_k, extra_cols=("ts",))
 
     wm_td = pd.Timedelta(watermark)
 

@@ -73,6 +73,20 @@ def test_debug_image_sink(tmp_path):
     assert any(n.endswith(".filtered.png") for n in names)
 
 
+def test_debug_image_sink_decodes_jpeg(tmp_path):
+    """The dump decodes every container the kernel accepts, not only PNG."""
+    from red_seal_ocr_spark.operators.debug import dump_debug_images
+    from red_seal_ocr_spark.sources.datagen import media_seal_texts, render_media
+
+    ref = next(f"m-{i:08d}-00" for i in range(100)
+               if media_seal_texts(f"m-{i:08d}-00"))
+    blob = render_media(ref, fmt="jpeg")
+    assert blob[:3] == b"\xff\xd8\xff"
+    (entry,) = dump_debug_images([(ref, blob)], str(tmp_path / "dbg"))
+    assert "error" not in entry
+    assert entry["red_pixels"] > 0 and entry["kept_components"]
+
+
 def test_span_salting_balances_heavy_docs(spark):
     """Skew evidence: one media-heavy document's spans spread across
     partitions under xxhash64(doc_id, offset), but pin a single partition

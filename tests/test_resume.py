@@ -219,6 +219,27 @@ def test_batched_resume_with_pinned_run_id(spark, tmp_path):
     assert t.select("doc_id").distinct().count() == N
 
 
+def test_pinned_run_id_resumes(spark, tmp_path):
+    """A rerun of run_extract with the same pinned run_id (a job restart,
+    a replayed stream batch) stages under its own directories instead of
+    failing on the first attempt's data/run-<id> with PATH_ALREADY_EXISTS;
+    both manifests keep the pinned run_id."""
+    docs = documents_df(spark, 6)
+    media = media_df(spark, 6)
+    table = str(tmp_path / "out")
+
+    m1 = run_extract(spark, docs.filter("doc_id < 'doc-00000003'"), media, table,
+                     run_id="pinned")
+    m2 = run_extract(spark, docs, media, table, run_id="pinned")
+    assert m1["run_id"] == m2["run_id"] == "pinned"
+    t = read_table(spark, table)
+    assert t.count() == 6
+    assert t.select("doc_id").distinct().count() == 6
+    lin = read_table(spark, table, lineage=True)
+    assert {r.run_id for r in lin.collect()} == {"pinned"}
+    assert sum(r.docs for r in lin.collect()) == 6
+
+
 def test_compaction_preserves_content_and_history(spark, tmp_path):
     """Iceberg rewrite_data_files semantics: compaction rewrites many
     small part files into few, content-identical; historical snapshots

@@ -47,7 +47,23 @@ def main(argv: list[str] | None = None) -> int:
 
     from red_seal_ocr_spark.operators.curate import curate_documents
     from red_seal_ocr_spark.session import get_spark
-    from red_seal_ocr_spark.sources.snapshot import commit_snapshot, list_run_files
+    from red_seal_ocr_spark.sources.snapshot import (
+        commit_snapshot,
+        find_committed_run,
+        list_run_files,
+    )
+
+    run_id = args.run_id or uuid.uuid4().hex[:12]
+    committed = find_committed_run(args.output, run_id)
+    if committed is not None:
+        # a replay of a committed run (pinned --run-id): appending its
+        # kept documents again would duplicate them in the table
+        print(f"run {run_id} already committed as snapshot "
+              f"{committed['snapshot_id']} -> {args.output}; nothing written")
+        return 0
+    # each attempt stages under its own directories, so a rerun of a run
+    # that never committed does not collide with the dead attempt's files
+    attempt = f"run-{run_id}-{uuid.uuid4().hex[:6]}"
 
     pre_existing = SparkSession.getActiveSession() is not None
     spark = get_spark("curate-job", master=args.master)
@@ -63,10 +79,9 @@ def main(argv: list[str] | None = None) -> int:
             min_quality_pct=args.min_quality,
             near_dup_jaccard_pct=args.min_jaccard,
         )
-        run_id = args.run_id or uuid.uuid4().hex[:12]
-        data_dir = f"{args.output}/data/run-{run_id}"
+        data_dir = f"{args.output}/data/{attempt}"
         kept.write.parquet(data_dir)
-        funnel_dir = f"{args.output}/_lineage/run-{run_id}"
+        funnel_dir = f"{args.output}/_lineage/{attempt}"
         funnel.coalesce(1).write.parquet(funnel_dir)
         manifest = commit_snapshot(
             args.output,

@@ -12,7 +12,7 @@ one unified error surface for the kernel's fault-isolation path:
 
 Every decoder returns the whole frame as one C-contiguous ``HxWx3`` uint8
 array, wrapped in :class:`DecodedImage`.  JPEG goes through the system
-libjpeg (``jpeg_native.py``, the same library family PIL uses) and falls
+libjpeg (``native.py``'s shim, the same library family PIL uses) and falls
 back to the pure-numpy ``jpeg.py`` where no C compiler or libjpeg is
 available.
 """
@@ -23,7 +23,7 @@ import numpy as np
 
 from .bmp import BmpError, BmpTooLarge, decode_bmp
 from .jpeg import JpegError, JpegTooLarge
-from .jpeg_native import decode_jpeg
+from .native import decode_jpeg
 from .png import PngError, PngTooLarge, decode_png
 
 __all__ = [

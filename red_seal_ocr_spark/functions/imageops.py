@@ -33,6 +33,8 @@ import functools
 
 import numpy as np
 
+from . import native
+
 
 def _to_u8(x: np.ndarray) -> np.ndarray:
     """``saturate_cast<uint8>(rint(x))`` of a float array, rounding ``x``
@@ -215,7 +217,15 @@ def rgb_red_mask(
     materializing the HSV planes: hue is computed only on the few pixels
     that already pass the S/V thresholds — on mostly-white documents that
     is a tiny fraction of the image (F2+F3 fusion; the dominant full-image
-    cost in the kernel)."""
+    cost in the kernel).
+
+    The native shim (``native.red_mask``) makes it one C pass with the
+    same bits; the numpy path below runs where the shim cannot be built
+    and is the tests' oracle for it."""
+    lut = _max_min_lut(sat_min, val_min)
+    out = native.red_mask(img, lut, band1, band2)
+    if out is not None:
+        return out
     shape = img.shape[:-1]
     n = int(np.prod(shape))
     # channel planes are strided views of the interleaved frame — every
@@ -230,8 +240,7 @@ def rgb_red_mask(
     mn_gb = np.minimum(g8, b8, out=_scratch("mn", n).reshape(shape))
     # S/V thresholds collapse into one LUT on the R channel:
     # candidate <=> min(g,b) < LUT2U[r] and r is the max channel
-    bound = np.take(_max_min_lut(sat_min, val_min), r8,
-                    out=_scratch("lut", n).reshape(shape))
+    bound = np.take(lut, r8, out=_scratch("lut", n).reshape(shape))
     cand = np.less(mn_gb, bound, out=_scratch_bool("c1", n).reshape(shape))
     cand &= np.greater_equal(r8, g8, out=_scratch_bool("c3", n).reshape(shape))
     cand &= np.greater_equal(r8, b8, out=_scratch_bool("c4", n).reshape(shape))

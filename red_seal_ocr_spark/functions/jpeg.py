@@ -3,7 +3,7 @@
 The reference accepts ``jpg/jpeg/png/bmp`` uploads (``main.py:218-226``)
 and decodes them with PIL/OpenCV (``src/preprocess.py:335-361``).  The
 kernel's dispatch decodes JPEG through the system libjpeg
-(``jpeg_native.py``); this module is its fallback where no C compiler or
+(``native.py``); this module is its fallback where no C compiler or
 libjpeg is available, the test oracle for it, the MJPEG frame decoder of
 the video tier, and the only JPEG *encoder* (fixture synthesis).  It is a
 baseline (ITU-T T.81 sequential DCT, Huffman) codec:

@@ -29,7 +29,7 @@ to its baseline twin — that equality is the correctness pin.
 This is the format-coverage path, not the hot path: the per-coefficient
 Python refinement loops cost more than the baseline batched loop.  The
 codec dispatch decodes progressive JPEG through the system libjpeg
-(``jpeg_native.py``) and falls back here only when that shim cannot be
+(``native.py``) and falls back here only when that shim cannot be
 built.
 """
 

@@ -17,7 +17,8 @@ The Spark side calls it once per image inside each Arrow batch: the
 per-medium function of ``operators.extract._kernel_udf``, run by the
 engine's one ``mapInPandas`` batch loop (``operators.items``).  Images
 are variable-size, so cross-image vectorization is impossible; all
-per-image math is vectorized numpy — no per-pixel Python, satisfying the
+per-image math is vectorized numpy or one C pass of the native shim
+(``native.py``: the red mask) — no per-pixel Python, satisfying the
 no-per-row-Python invariant.
 
 Fault isolation follows the reference (``main.py:132-137``): a bad image
@@ -109,9 +110,9 @@ def process_image(content: bytes | None, cfg: EngineConfig = DEFAULT_CONFIG) -> 
     if is_low_quality(len(content), h, w, cfg):
         img = enhance_image(img, cfg)
 
-    # F2/F3: fused HSV + dual-band red mask over the contiguous frame
-    # (scratch-buffer reuse inside rgb_red_mask keeps the pass
-    # allocation-free)
+    # F2/F3: fused HSV + dual-band red mask over the frame: one C pass
+    # into the HxW bool mask (the numpy path where the shim cannot be
+    # built)
     mask0 = rgb_red_mask(img, cfg.hue_band1, cfg.hue_band2, cfg.sat_min, cfg.val_min)
 
     # F4/F5 operate on the red-pixel extent only, padded by the morph

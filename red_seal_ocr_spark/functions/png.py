@@ -1,11 +1,12 @@
-"""Minimal deterministic PNG codec (pure numpy + stdlib zlib).
+"""Minimal deterministic PNG codec (numpy + stdlib zlib).
 
 The reference decodes images with PIL/OpenCV (``src/preprocess.py:335-361``,
 ``util/image_downloader.py:84-96``).  Neither library exists in this
 environment, so the engine carries its own small codec: 8-bit RGB (color
 type 2) and 8-bit grayscale (color type 0), plain or Adam7-interlaced.
 The encoders always emit filter 0 scanlines; the decoder understands all
-five standard filters so externally produced PNGs also decode.
+five standard filters so externally produced PNGs also decode (undone in
+one C pass by the native shim, ``native.png_unfilter``).
 
 Decode failures raise ``PngError`` — the kernel maps that to the
 per-item fault-isolation path (failure counted, span passed through
@@ -18,6 +19,8 @@ import struct
 import zlib
 
 import numpy as np
+
+from . import native
 
 _SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
@@ -132,7 +135,13 @@ def _deinterlace(decompressed: bytes, h: int, w: int, channels: int) -> np.ndarr
 
 
 def _unfilter(raw: np.ndarray, h: int, w: int, channels: int) -> np.ndarray:
-    """Undo per-scanline PNG filters. raw is h x (1 + w*channels)."""
+    """Undo per-scanline PNG filters. raw is h x (1 + w*channels).
+
+    The native shim does it in one C pass; the per-pixel loop below runs
+    only where the shim cannot be built."""
+    out = native.png_unfilter(raw, channels)
+    if out is not None:
+        return out
     stride = w * channels
     bpp = channels
     out = np.zeros((h, stride), dtype=np.uint8)

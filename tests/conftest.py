@@ -30,21 +30,21 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def jpeg_decode_paths():
-    """Both JPEG paths of ``codecs.decode_image_lazy`` as context managers:
-    ``"native"`` decodes through the libjpeg shim, ``"numpy"`` forces the
-    ``jpeg.decode_jpeg`` fallback.  Where the shim cannot be built, both
-    run the fallback."""
-    from red_seal_ocr_spark.functions import jpeg_native
+def native_paths():
+    """Both paths of every ``functions/native.py`` entry point (JPEG
+    decode, red mask, PNG unfilter) as context managers: ``"native"``
+    runs the C shim, ``"numpy"`` forces the numpy fallbacks.  Where the
+    shim cannot be built, both run the fallbacks."""
+    from red_seal_ocr_spark.functions import native
 
     @contextlib.contextmanager
     def forced(lib):
-        saved = jpeg_native._lib
-        jpeg_native._lib = lib
+        saved = native._lib
+        native._lib = lib
         try:
             yield
         finally:
-            jpeg_native._lib = saved
+            native._lib = saved
 
-    native = jpeg_native._library() or False
-    return {"native": lambda: forced(native), "numpy": lambda: forced(False)}
+    lib = native._library() or False
+    return {"native": lambda: forced(lib), "numpy": lambda: forced(False)}

@@ -47,7 +47,7 @@ def _jpeg_with_header(w: int, h: int) -> bytes:
     return data[:at] + struct.pack(">HH", h, w) + data[at + 4 : -30] + bytes(30)
 
 
-def test_huge_dimensions_rejected_before_decode(jpeg_decode_paths):
+def test_huge_dimensions_rejected_before_decode(native_paths):
     bomb = _png_with_header(50_000, 50_000, zlib.compress(b"\x00" * 16))
     t0 = time.perf_counter()
     with pytest.raises(PngTooLarge):
@@ -57,7 +57,7 @@ def test_huge_dimensions_rejected_before_decode(jpeg_decode_paths):
     assert r.status == TOO_LARGE and r.text is None
     # the same for a JPEG header, on both JPEG decode paths
     jbomb = _jpeg_with_header(50_000, 50_000)
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             t0 = time.perf_counter()
             r = process_image(jbomb)
@@ -75,7 +75,7 @@ def test_zlib_bomb_inflate_is_bounded():
     assert time.perf_counter() - t0 < 1.0
 
 
-def test_config_pixel_budget_applies(jpeg_decode_paths):
+def test_config_pixel_budget_applies(native_paths):
     from red_seal_ocr_spark.functions.jpeg import encode_jpeg
 
     img = np.full((20, 30, 3), 255, dtype=np.uint8)
@@ -83,7 +83,7 @@ def test_config_pixel_budget_applies(jpeg_decode_paths):
     assert process_image(content).status == OK
     assert process_image(content, EngineConfig(max_pixels=100)).status == TOO_LARGE
     jpg = encode_jpeg(img, 90)
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             assert process_image(jpg).status == OK
             for data in (jpg, jpg[:-30] + bytes(30)):  # corrupt tail too

@@ -55,10 +55,10 @@ def _encoded(seed: int, fmt: int) -> bytes:
     fmt=st.integers(0, 4),
     cut=st.floats(0.01, 0.999),
 )
-def test_truncation_never_escapes_the_error_contract(jpeg_decode_paths, seed, fmt, cut):
+def test_truncation_never_escapes_the_error_contract(native_paths, seed, fmt, cut):
     data = _encoded(seed, fmt)
     trunc = data[: max(1, int(len(data) * cut))]
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             try:
                 out = decode_image_lazy(trunc)
@@ -75,11 +75,11 @@ def test_truncation_never_escapes_the_error_contract(jpeg_decode_paths, seed, fm
     flips=st.lists(st.tuples(st.floats(0, 0.999), st.integers(0, 255)),
                    min_size=1, max_size=8),
 )
-def test_byte_flips_never_escape_the_error_contract(jpeg_decode_paths, seed, fmt, flips):
+def test_byte_flips_never_escape_the_error_contract(native_paths, seed, fmt, flips):
     data = bytearray(_encoded(seed, fmt))
     for pos_frac, val in flips:
         data[int(pos_frac * len(data))] = val
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             try:
                 out = decode_image_lazy(bytes(data))
@@ -90,10 +90,10 @@ def test_byte_flips_never_escape_the_error_contract(jpeg_decode_paths, seed, fmt
 
 @settings(max_examples=80, deadline=None)
 @given(junk=st.binary(min_size=0, max_size=256))
-def test_pure_noise_is_a_counted_decode_failure(jpeg_decode_paths, junk):
+def test_pure_noise_is_a_counted_decode_failure(native_paths, junk):
     # behind a JPEG magic too, so the noise reaches the JPEG decoders
     for data in (junk, b"\xff\xd8\xff" + junk):
-        for path in jpeg_decode_paths.values():
+        for path in native_paths.values():
             with path():
                 r = process_image(data)
                 assert r.status in (DECODE_ERROR, TOO_LARGE)
@@ -103,12 +103,12 @@ def test_pure_noise_is_a_counted_decode_failure(jpeg_decode_paths, junk):
 @settings(max_examples=60, deadline=None)
 @given(seed=st.integers(0, 2**16), fmt=st.integers(0, 4),
        cut=st.floats(0.05, 0.95))
-def test_kernel_never_raises_on_corrupt_media(jpeg_decode_paths, seed, fmt, cut):
+def test_kernel_never_raises_on_corrupt_media(native_paths, seed, fmt, cut):
     """The full kernel path: corrupt bytes -> ImageResult with a failure
     status (the span passes through unchanged upstream), never an
     exception."""
     data = _encoded(seed, fmt)
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             r = process_image(data[: int(len(data) * cut)])
             assert r.status in (OK, DECODE_ERROR, TOO_LARGE)

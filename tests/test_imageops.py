@@ -26,6 +26,7 @@ from red_seal_ocr_spark.functions.imageops import (
     paint_runs,
     red_mask,
     resize_area,
+    rgb_red_mask,
     rgb_to_hsv_cv,
     rgb_to_lab_cv,
 )
@@ -130,6 +131,55 @@ def test_red_mask_bands():
     m = red_mask(hsv, CFG.hue_band1, CFG.hue_band2, CFG.sat_min, CFG.val_min)
     assert m[0, : len(SEAL_REDS)].all()
     assert not m[0, len(SEAL_REDS) :].any()
+
+
+MASK_ARGS = (CFG.hue_band1, CFG.hue_band2, CFG.sat_min, CFG.val_min)
+
+
+def _mask_on_both_paths(native_paths, img, args=MASK_ARGS):
+    got = [None, None]
+    for i, path in enumerate(native_paths.values()):
+        with path():
+            got[i] = rgb_red_mask(img, *args)
+    return got
+
+
+def test_native_red_mask_equals_numpy_on_every_triple(native_paths):
+    """Every RGB triple, as one 4096x4096 frame: the shim's one-pass mask
+    is the numpy path's bit for bit, at the engine's thresholds and at
+    both extremes of the S/V screen."""
+    v = np.arange(256, dtype=np.uint8)
+    frame = np.stack(np.meshgrid(v, v, v, indexing="ij"), axis=-1).reshape(4096, 4096, 3)
+    for args in (MASK_ARGS, ((0, 10), (156, 180), 0, 0), ((5, 20), (170, 179), 255, 255)):
+        native, numpy_ = _mask_on_both_paths(native_paths, frame, args)
+        assert native.dtype == numpy_.dtype == bool
+        assert native.shape == numpy_.shape == (4096, 4096)
+        assert np.array_equal(native, numpy_), args
+
+
+def test_native_red_mask_equals_numpy_on_views_and_thin_shapes(native_paths):
+    """Strided views (frame crops as kernel.py takes them, stepped,
+    reversed and channel-offset views) and 1xN / Nx1 / empty shapes, on
+    frames sparse in red (the numpy path's gather branch) and dense in
+    red (its full-frame branch)."""
+    rng = np.random.default_rng(8)
+    frame = rng.integers(0, 256, (120, 160, 4), dtype=np.uint8)
+    reds = rng.random((120, 160)) < 0.6
+    frame[reds, 0] = rng.integers(150, 256, int(reds.sum()))
+    frame[reds, 1:3] = rng.integers(0, 120, (int(reds.sum()), 2))
+    rgb = frame[..., :3]
+    views = [rgb, np.ascontiguousarray(rgb), rgb[17:93, 5:141], rgb[::2, ::3],
+             rgb[::-1, ::-1], frame[:, :, 1:], frame[..., 2::-1],
+             rgb[:1], rgb[:, :1], rgb[40:41, 3:150], rgb[2:110, 77:78], rgb[:0], rgb[:, :0]]
+    for view in views:
+        native, numpy_ = _mask_on_both_paths(native_paths, view)
+        assert native.shape == numpy_.shape == view.shape[:2]
+        assert np.array_equal(native, numpy_), (view.shape, view.strides)
+    for n in (1, 2, 7, 1000):
+        for shape in ((1, n, 3), (n, 1, 3)):
+            img = rng.integers(0, 256, shape, dtype=np.uint8)
+            native, numpy_ = _mask_on_both_paths(native_paths, img)
+            assert np.array_equal(native, numpy_), shape
 
 
 def test_morph_open_removes_speck_keeps_block():

@@ -1,9 +1,11 @@
-"""The libjpeg shim behind the codecs dispatch (functions/jpeg_native.py).
+"""The native shim (functions/native.py): its libjpeg decode, and the
+build, cache and fallback every native entry point shares.
 
-Contract: the shim accepts what ``jpeg.decode_jpeg`` accepts, raises the
-same ``JpegError`` / ``JpegTooLarge``, and yields the same kernel spans
-and statuses on the datagen corpus; where it cannot be built, the
-dispatch decodes through ``jpeg.decode_jpeg`` exactly as before.
+Contract: the JPEG decode accepts what ``jpeg.decode_jpeg`` accepts,
+raises the same ``JpegError`` / ``JpegTooLarge``, and yields the same
+kernel spans and statuses on the datagen corpus; where the shim cannot be
+built, the JPEG decode, the red mask and the PNG unfilter all run their
+numpy fallbacks, bit for bit, after one warning per process.
 """
 
 from __future__ import annotations
@@ -17,7 +19,7 @@ from multiprocessing import get_context
 import numpy as np
 import pytest
 
-from red_seal_ocr_spark.functions import jpeg, jpeg_native
+from red_seal_ocr_spark.functions import imageops, jpeg, native, png
 from red_seal_ocr_spark.functions.codecs import decode_image_lazy
 from red_seal_ocr_spark.functions.jpeg import JpegError, JpegTooLarge, encode_jpeg
 from red_seal_ocr_spark.functions.jpeg_progressive import encode_jpeg_progressive
@@ -71,32 +73,32 @@ def _unsupported_streams() -> dict[str, bytes]:
 
 
 @pytest.mark.parametrize("name", list(_unsupported_streams()))
-def test_shim_rejects_what_the_numpy_decoder_rejects(jpeg_decode_paths, name):
+def test_shim_rejects_what_the_numpy_decoder_rejects(native_paths, name):
     """Arithmetic coding, other precisions, component counts and sampling
     factors, and every libjpeg warning (extraneous bytes, premature end)
     are JpegError on both paths — never a silently patched image."""
     data = _unsupported_streams()[name]
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path(), pytest.raises(JpegError) as info:
-            jpeg_native.decode_jpeg(data)
+            native.decode_jpeg(data)
         assert not isinstance(info.value, JpegTooLarge)
 
 
-def test_shim_checks_the_pixel_budget_on_the_header(jpeg_decode_paths):
+def test_shim_checks_the_pixel_budget_on_the_header(native_paths):
     """Header dimensions over max_pixels raise JpegTooLarge before any
     entropy work, even when the entropy data is garbage."""
     base = encode_jpeg(_image(), 90, "420")
     huge = _edit_segment(base, 0xC0, lambda b: b[:1] + struct.pack(">HH", 50_000, 50_000) + b[5:])
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             for data in (base, base[:-30] + bytes(30), huge):
                 with pytest.raises(JpegTooLarge):
-                    jpeg_native.decode_jpeg(data, max_pixels=1000)
+                    native.decode_jpeg(data, max_pixels=1000)
             with pytest.raises(JpegTooLarge):
-                jpeg_native.decode_jpeg(huge)
+                native.decode_jpeg(huge)
 
 
-def test_native_and_numpy_kernel_spans_agree_on_the_datagen_corpus(jpeg_decode_paths):
+def test_native_and_numpy_kernel_spans_agree_on_the_datagen_corpus(native_paths):
     """process_image gives the same span text and status through both
     decoders on fmt='auto' JPEG media (q100 4:4:4), corrupt ones included."""
     from red_seal_ocr_spark.sources.datagen import media_format, media_spec, render_media
@@ -109,7 +111,7 @@ def test_native_and_numpy_kernel_spans_agree_on_the_datagen_corpus(jpeg_decode_p
     for ref in checked:
         data = render_media(ref, fmt="auto")
         got = {}
-        for name, path in jpeg_decode_paths.items():
+        for name, path in native_paths.items():
             with path():
                 r = process_image(data)
                 got[name] = (r.status, r.text)
@@ -128,52 +130,69 @@ def _no_compiler():
 
 
 def _broken_source(monkeypatch, tmp_path):
-    monkeypatch.setattr(jpeg_native, "_cache_dir", lambda: str(tmp_path))
-    monkeypatch.setattr(jpeg_native, "_SOURCE", "#error shim does not compile\n")
+    monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path))
+    monkeypatch.setattr(native, "_SOURCE", "#error shim does not compile\n")
 
 
 def _corrupt_cached_library(monkeypatch, tmp_path):
-    monkeypatch.setattr(jpeg_native, "_cache_dir", lambda: str(tmp_path))
+    monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path))
     junk = tmp_path / "junk.so"
     junk.write_bytes(b"not an ELF file")
-    monkeypatch.setattr(jpeg_native, "_build", lambda: str(junk))
+    monkeypatch.setattr(native, "_build", lambda: str(junk))
+
+
+def _sub_filtered(px: np.ndarray) -> np.ndarray:
+    """PNG scanlines of ``px`` (h x w x 3) with the Sub filter on every row."""
+    rows = px.reshape(px.shape[0], -1).astype(np.int16)
+    delta = rows.copy()
+    delta[:, 3:] -= rows[:, :-3]
+    return np.concatenate([np.ones((len(rows), 1), np.uint8),
+                           (delta & 0xFF).astype(np.uint8)], axis=1)
 
 
 @pytest.mark.parametrize("breakage", ["no_compiler", "compile_error", "corrupt_library"])
 def test_dispatch_falls_back_to_numpy_when_the_shim_is_unavailable(
         monkeypatch, tmp_path, breakage):
-    """No shim: decode_image_lazy decodes JPEG through jpeg.decode_jpeg
-    bit for bit, warns once per process and never raises from the loader."""
-    monkeypatch.setattr(jpeg_native, "_lib", None)
+    """No shim: the red mask, the PNG unfilter and decode_image_lazy's JPEG
+    decode run their numpy fallbacks bit for bit, with one warning per
+    process (not one per entry point), and the loader never raises."""
+    monkeypatch.setattr(native, "_lib", None)
     if breakage == "no_compiler":
-        monkeypatch.setattr(jpeg_native, "_build", _no_compiler)
+        monkeypatch.setattr(native, "_build", _no_compiler)
     elif breakage == "compile_error":
         _broken_source(monkeypatch, tmp_path)
     else:
         _corrupt_cached_library(monkeypatch, tmp_path)
-    blobs = [encode_jpeg(_image(), 90, "420"), encode_jpeg_progressive(_image(), 90, "420")]
+    img = _image()
+    bands = ((0, 10), (156, 180))
+    blobs = [encode_jpeg(img, 90, "420"), encode_jpeg_progressive(img, 90, "420")]
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        for data in blobs * 2:
-            assert np.array_equal(decode_image_lazy(data).full(), jpeg.decode_jpeg(data))
+        for _ in range(2):
+            assert np.array_equal(imageops.rgb_red_mask(img, *bands, 50, 50),
+                                  imageops.red_mask(imageops.rgb_to_hsv_cv(img), *bands, 50, 50))
+            assert np.array_equal(png._unfilter(_sub_filtered(img), *img.shape),
+                                  img.reshape(len(img), -1))
+            for data in blobs:
+                assert np.array_equal(decode_image_lazy(data).full(), jpeg.decode_jpeg(data))
         assert process_image(blobs[0][:100]).status == DECODE_ERROR
     assert [w.category for w in caught] == [RuntimeWarning]
-    assert "decoding in numpy" in str(caught[0].message)
-    assert jpeg_native._lib is False
+    assert "numpy fallbacks" in str(caught[0].message)
+    assert native._lib is False
 
 
 def test_build_is_cached_by_source_hash(monkeypatch, tmp_path):
     """The shim is compiled once per source into the cache dir; later
     builds reuse the file without running the compiler."""
-    monkeypatch.setattr(jpeg_native, "_cache_dir", lambda: str(tmp_path / "c"))
-    path = jpeg_native._build()
+    monkeypatch.setattr(native, "_cache_dir", lambda: str(tmp_path / "c"))
+    path = native._build()
     assert os.listdir(tmp_path / "c") == [os.path.basename(path)]
-    monkeypatch.setattr(jpeg_native.subprocess, "run", _no_compiler)
-    assert jpeg_native._build() == path
-    lib = jpeg_native._load(path)
-    monkeypatch.setattr(jpeg_native, "_lib", lib)
+    monkeypatch.setattr(native.subprocess, "run", _no_compiler)
+    assert native._build() == path
+    lib = native._load(path)
+    monkeypatch.setattr(native, "_lib", lib)
     data = encode_jpeg(_image(), 100, "444")
-    assert np.abs(jpeg_native.decode_jpeg(data).astype(np.int16)
+    assert np.abs(native.decode_jpeg(data).astype(np.int16)
                   - jpeg.decode_jpeg(data)).max() <= 2
 
 
@@ -185,7 +204,7 @@ def test_concurrent_first_builds_publish_one_loadable_library(monkeypatch, tmp_p
     n = (os.cpu_count() or 2) + 1
     with ProcessPoolExecutor(n, mp_context=get_context("spawn")) as pool:
         paths = [f.result(timeout=120) for f in
-                 [pool.submit(jpeg_native._build) for _ in range(n)]]
+                 [pool.submit(native._build) for _ in range(n)]]
     assert len(set(paths)) == 1
     assert os.listdir(tmp_path / "red_seal_ocr_spark") == [os.path.basename(paths[0])]
-    jpeg_native._load(paths[0])
+    native._load(paths[0])

@@ -80,26 +80,26 @@ def test_progressive_gray_twin_equality():
     assert prog.shape == (25, 33, 3)
 
 
-def test_progressive_through_the_codecs_dispatch(jpeg_decode_paths):
+def test_progressive_through_the_codecs_dispatch(native_paths):
     """The kernel path sees progressive bytes through decode_image_lazy;
     the numpy fallback is decode_jpeg bit for bit."""
     img = _gradient(32, 48)
     data = encode_jpeg_progressive(img, 95, "420")
-    with jpeg_decode_paths["numpy"]():
+    with native_paths["numpy"]():
         out = decode_image_lazy(data)
     assert out.full().shape == (32, 48, 3)
     assert np.array_equal(out.full(), decode_jpeg(data))
 
 
 @pytest.mark.parametrize("sub", ["444", None])
-def test_progressive_through_the_native_dispatch(jpeg_decode_paths, sub):
+def test_progressive_through_the_native_dispatch(native_paths, sub):
     """Through the libjpeg shim, q100 fixtures (the datagen setting)
     decode within 2 levels of decode_jpeg: libjpeg's integer IDCT against
     jpeg.py's exact float one."""
     img = _gradient(32, 48) if sub else _gradient(32, 48)[:, :, 0]
     for data in (encode_jpeg_progressive(img, 100, sub or "444"),
                  encode_jpeg(img, 100, sub or "444")):
-        with jpeg_decode_paths["native"]():
+        with native_paths["native"]():
             out = decode_image_lazy(data).full()
         want = decode_jpeg(data)
         assert out.shape == want.shape
@@ -111,14 +111,14 @@ def test_progressive_dimensions_header_time():
     assert jpeg_dimensions(data) == (60, 40)
 
 
-def test_progressive_pixel_budget_at_header_time(jpeg_decode_paths):
+def test_progressive_pixel_budget_at_header_time(native_paths):
     data = encode_jpeg_progressive(_gradient(64, 64), 90, "444")
     with pytest.raises(JpegTooLarge):
         decode_jpeg(data, max_pixels=1000)
     # corrupt the entropy tail: the budget check must still fire first
     with pytest.raises(JpegTooLarge):
         decode_jpeg(data[:-30] + bytes(30), max_pixels=1000)
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         with path():
             for blob in (data, data[:-30] + bytes(30)):
                 with pytest.raises(ImageTooLarge):
@@ -130,9 +130,9 @@ def test_progressive_pixel_budget_at_header_time(jpeg_decode_paths):
 # ---------------------------------------------------------------------------
 
 
-def test_progressive_truncation_fails_loudly(jpeg_decode_paths):
+def test_progressive_truncation_fails_loudly(native_paths):
     data = encode_jpeg_progressive(_gradient(48, 48), 90, "444")
-    for path in jpeg_decode_paths.values():
+    for path in native_paths.values():
         saw_error = False
         with path():
             for cut in (0.15, 0.35, 0.55, 0.75, 0.95):
@@ -145,14 +145,14 @@ def test_progressive_truncation_fails_loudly(jpeg_decode_paths):
         assert saw_error  # at least the early cuts must fail
 
 
-def test_progressive_byte_flips_stay_inside_contract(jpeg_decode_paths):
+def test_progressive_byte_flips_stay_inside_contract(native_paths):
     data = encode_jpeg_progressive(_gradient(32, 32), 90, "420")
     rng = np.random.Generator(np.random.PCG64(3))
     for _ in range(60):
         mut = bytearray(data)
         for _ in range(int(rng.integers(1, 4))):
             mut[int(rng.integers(2, len(mut)))] = int(rng.integers(0, 256))
-        for path in jpeg_decode_paths.values():
+        for path in native_paths.values():
             with path():
                 try:
                     decode_image_lazy(bytes(mut))

@@ -159,40 +159,46 @@ def test_layer_profiler_kernel_replay_times_every_format():
 
 # sha256 over process_image's outputs, and over the pixels each red
 # enhancement pass returns, for three small datagen media in each of the
-# five containers (plus both passes on random pixels).  JPEGs decode through the numpy decoder, which every box
-# has, so the pixels do not depend on the libjpeg build.  The values were
-# computed before the kernel's stages were vectorized; a kernel change that
-# moves either digest changes the kernel's results.
+# five containers (plus both passes on random pixels).  JPEGs decode
+# through the numpy decoder, which every box has, so the pixels do not
+# depend on the libjpeg build.  The values were computed before the
+# kernel's stages were vectorized; a kernel change that moves either
+# digest changes the kernel's results.
 DIGEST_REFS = ("m-00000038-00", "m-00000211-00", "m-00000375-00")
 DIGEST_FORMATS = ("png", "png_interlaced", "jpeg", "jpeg_progressive", "bmp")
 KERNEL_DIGEST = "f3c54d84b6d1606b4d403124a96eb1c2438a65daf46d5e3823d273263b5a88e0"
 PASSES_DIGEST = "b542b5d18988da3de410184a8e5ad737f0893bccb1de8ac576d2734e57c0eac1"
 
 
-def test_kernel_digest_golden(jpeg_decode_paths, monkeypatch):
-    from red_seal_ocr_spark.functions import kernel
+def test_kernel_digest_golden(native_paths, monkeypatch):
+    """Both red-mask paths (the native shim and the numpy fallback) give
+    the pinned digests."""
+    from red_seal_ocr_spark.functions import codecs, jpeg, kernel
 
-    passes = hashlib.sha256()
+    monkeypatch.setattr(codecs, "decode_jpeg", jpeg.decode_jpeg)
+    passes = {}
     for name in ("enhance_red_pass1", "enhance_red_pass2"):
         def hashed(img, mask, cfg, fn=getattr(kernel, name)):
             out = fn(img, mask, cfg)
-            passes.update(repr((out.shape, out.dtype.str)).encode())
-            passes.update(np.ascontiguousarray(out).tobytes())
+            passes["sha"].update(repr((out.shape, out.dtype.str)).encode())
+            passes["sha"].update(np.ascontiguousarray(out).tobytes())
             return out
 
         monkeypatch.setattr(kernel, name, hashed)
-    outputs = hashlib.sha256()
-    with jpeg_decode_paths["numpy"]():
-        for fmt in DIGEST_FORMATS:
-            for ref in DIGEST_REFS:
-                r = process_image(render_media(ref, 42, fmt=fmt), CFG)
-                outputs.update(repr((fmt, ref, r.text, r.status, r.n_components,
-                                     r.red_pixels, r.confidence, r.bboxes)).encode())
-    # and both passes on random pixels, where every edge and hue occurs
-    rng = np.random.default_rng(6)
-    for h, w in ((1, 9), (9, 1), (2, 2), (17, 30), (41, 23)):
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        mask = rng.random((h, w)) < 0.7
-        kernel.enhance_red_pass2(kernel.enhance_red_pass1(img, mask, CFG), mask, CFG)
-    assert outputs.hexdigest() == KERNEL_DIGEST
-    assert passes.hexdigest() == PASSES_DIGEST
+    for path in native_paths.values():
+        passes["sha"] = hashlib.sha256()
+        outputs = hashlib.sha256()
+        with path():
+            for fmt in DIGEST_FORMATS:
+                for ref in DIGEST_REFS:
+                    r = process_image(render_media(ref, 42, fmt=fmt), CFG)
+                    outputs.update(repr((fmt, ref, r.text, r.status, r.n_components,
+                                         r.red_pixels, r.confidence, r.bboxes)).encode())
+        # and both passes on random pixels, where every edge and hue occurs
+        rng = np.random.default_rng(6)
+        for h, w in ((1, 9), (9, 1), (2, 2), (17, 30), (41, 23)):
+            img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+            mask = rng.random((h, w)) < 0.7
+            kernel.enhance_red_pass2(kernel.enhance_red_pass1(img, mask, CFG), mask, CFG)
+        assert outputs.hexdigest() == KERNEL_DIGEST
+        assert passes["sha"].hexdigest() == PASSES_DIGEST

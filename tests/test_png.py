@@ -1,9 +1,12 @@
 """PNG codec tests (engine replacement for PIL/cv2 image IO, SURVEY.md S2)."""
 
+import struct
+import zlib
+
 import numpy as np
 import pytest
 
-from red_seal_ocr_spark.functions.png import PngError, decode_png, encode_png
+from red_seal_ocr_spark.functions.png import PngError, _unfilter, decode_png, encode_png
 
 
 def test_rgb_roundtrip():
@@ -47,57 +50,70 @@ def test_bitflip_crc_raises():
         decode_png(bytes(data))
 
 
-def test_filters_decode():
-    """Decoder handles Sub/Up/Average/Paeth-filtered scanlines."""
-    import struct
-    import zlib
+def _filter_rows(rows: np.ndarray, ftypes: np.ndarray, bpp: int) -> np.ndarray:
+    """PNG scanlines of the uint8 ``rows`` (h x stride): row y filtered
+    with type ``ftypes[y]``, its filter byte first."""
+    x = rows.astype(np.int32)
+    a = np.zeros_like(x)
+    a[:, bpp:] = x[:, : x.shape[1] - bpp]
+    b = np.zeros_like(x)
+    b[1:] = x[:-1]
+    c = np.zeros_like(x)
+    c[1:] = a[:-1]
+    p = a + b - c
+    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
+    paeth = np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
+    preds = np.stack([np.zeros_like(x), a, b, (a + b) >> 1, paeth])
+    out = np.empty((len(x), 1 + x.shape[1]), dtype=np.uint8)
+    out[:, 0] = ftypes
+    out[:, 1:] = (x - preds[ftypes, np.arange(len(x))]) & 0xFF
+    return out
 
+
+def _encode_filtered(img: np.ndarray, rng, interlace: bool) -> bytes:
+    """``img`` (HxW gray or HxWx3 RGB) as a PNG whose every scanline has
+    a random filter type (per pass under Adam7)."""
+    from red_seal_ocr_spark.functions.png import _SIGNATURE, _adam7_passes, _chunk
+
+    img3 = img.reshape(img.shape[0], img.shape[1], -1)
+    h, w, ch = img3.shape
+    passes = _adam7_passes(h, w) if interlace else [(0, 0, 1, 1, w, h)]
+    parts = []
+    for x0, y0, dx, dy, pw, ph in passes:
+        if pw and ph:
+            rows = img3[y0::dy, x0::dx].reshape(ph, pw * ch)
+            parts.append(_filter_rows(rows, rng.integers(0, 5, ph), ch).tobytes())
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2 if ch == 3 else 0, 0, 0, int(interlace))
+    return (_SIGNATURE + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", zlib.compress(b"".join(parts))) + _chunk(b"IEND", b""))
+
+
+def test_filters_decode(native_paths):
+    """None/Sub/Up/Average/Paeth, a random filter type per scanline: the
+    native unfilter and the Python loop both restore the pixels, at 1-4
+    bytes per pixel and odd widths, and in whole PNGs (gray and RGB,
+    plain and Adam7); an unknown filter type is a PngError on both."""
     rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (5, 4, 3), dtype=np.uint8)
-    h, w = img.shape[:2]
-    # hand-encode with a different filter per row
-    filters = [0, 1, 2, 3, 4]
-    raw = bytearray()
-    prev = np.zeros(w * 3, dtype=np.int32)
-    for y, f in enumerate(filters):
-        line = img[y].reshape(-1).astype(np.int32)
-        enc = np.zeros_like(line)
-        for x in range(len(line)):
-            a = line[x - 3] if x >= 3 else 0
-            b = prev[x]
-            c = prev[x - 3] if x >= 3 else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) >> 1
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            enc[x] = (line[x] - pred) & 0xFF
-        raw.append(f)
-        raw.extend(enc.astype(np.uint8).tobytes())
-        prev = line
-
-    def chunk(tag, payload):
-        return (
-            struct.pack(">I", len(payload))
-            + tag
-            + payload
-            + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-        )
-
-    data = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-    assert (decode_png(data) == img).all()
+    for case in range(40):
+        bpp = 1 + case % 4
+        h, w = int(rng.integers(1, 12)), 2 * int(rng.integers(0, 9)) + 1
+        rows = rng.integers(0, 256, (h, w * bpp), dtype=np.uint8)
+        raw = _filter_rows(rows, rng.integers(0, 5, h), bpp)
+        bad = raw.copy()
+        bad[rng.integers(0, h), 0] = 5
+        for path in native_paths.values():
+            with path():
+                assert np.array_equal(_unfilter(raw, h, w, bpp), rows), (h, w, bpp)
+                with pytest.raises(PngError, match="unknown filter 5"):
+                    _unfilter(bad, h, w, bpp)
+    for case in range(24):
+        shape = (int(rng.integers(1, 20)), 2 * int(rng.integers(0, 10)) + 1)
+        img = rng.integers(0, 256, shape + ((3,) if case % 2 else ()), dtype=np.uint8)
+        data = _encode_filtered(img, rng, interlace=bool(case // 2 % 2))
+        want = img if img.ndim == 3 else np.repeat(img[..., None], 3, axis=2)
+        for path in native_paths.values():
+            with path():
+                assert np.array_equal(decode_png(data), want), (img.shape, case)
 
 
 # ---------------------------------------------------------------------------

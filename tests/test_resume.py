@@ -197,6 +197,38 @@ def test_curate_job_end_to_end(tmp_path):
     assert funnel["0_input"] == 4 and funnel["4_near_dedup"] == 2
 
 
+def test_curate_job_rerun_with_pinned_run_id_writes_nothing(tmp_path):
+    """A second curate_job run with the same --run-id on the same output
+    finds the run committed and returns 0 without appending its kept
+    documents again (same rows, same snapshots)."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
+    import curate_job
+
+    from red_seal_ocr_spark.session import get_spark
+    from red_seal_ocr_spark.sources.snapshot import _snap_dir, read_table
+
+    spark = get_spark("curate-job-test", master="local[4]", shuffle_partitions=8)
+    src = str(tmp_path / "docs.parquet")
+    out = tmp_path / "curated"
+    spark.createDataFrame(
+        [(i, f"document number {i} says the fox runs to the barn by the river "
+             f"where {i} other animals wait for it") for i in range(6)],
+        "doc_id bigint, text string",
+    ).write.parquet(src)
+    argv = ["--input", src, "--output", str(out), "--min-quality", "0",
+            "--run-id", "pinned"]
+    counts = []
+    for _ in range(2):
+        assert curate_job.main(argv) == 0
+        counts.append((read_table(spark, str(out)).count(),
+                       len(list(_snap_dir(str(out)).iterdir())),
+                       len(list((out / "data").iterdir()))))
+    assert counts[0] == counts[1] and counts[0][0] > 0
+
+
 def test_batched_resume_with_pinned_run_id(spark, tmp_path):
     """ADVICE r03: a caller-pinned --run-id must survive a crash-resume.
     Pre-fix, the second batched run reused the same data/run-<id>-bNNN

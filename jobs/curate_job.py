@@ -48,9 +48,9 @@ def main(argv: list[str] | None = None) -> int:
     from red_seal_ocr_spark.operators.curate import curate_documents
     from red_seal_ocr_spark.session import get_spark
     from red_seal_ocr_spark.sources.snapshot import (
-        commit_snapshot,
+        commit_run,
         find_committed_run,
-        list_run_files,
+        run_files,
     )
 
     run_id = args.run_id or uuid.uuid4().hex[:12]
@@ -61,9 +61,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"run {run_id} already committed as snapshot "
               f"{committed['snapshot_id']} -> {args.output}; nothing written")
         return 0
-    # each attempt stages under its own directories, so a rerun of a run
-    # that never committed does not collide with the dead attempt's files
-    attempt = f"run-{run_id}-{uuid.uuid4().hex[:6]}"
 
     pre_existing = SparkSession.getActiveSession() is not None
     spark = get_spark("curate-job", master=args.master)
@@ -79,18 +76,12 @@ def main(argv: list[str] | None = None) -> int:
             min_quality_pct=args.min_quality,
             near_dup_jaccard_pct=args.min_jaccard,
         )
-        data_dir = f"{args.output}/data/{attempt}"
-        kept.write.parquet(data_dir)
-        funnel_dir = f"{args.output}/_lineage/{attempt}"
-        funnel.coalesce(1).write.parquet(funnel_dir)
-        manifest = commit_snapshot(
-            args.output,
-            list_run_files(data_dir),
-            list_run_files(funnel_dir),
-            run_id,
-            extra={"job": "curate", "input": args.input},
-        )
-        rows = {r["stage"]: r["docs"] for r in spark.read.parquet(funnel_dir).collect()}
+        manifest = commit_run(args.output, run_id, kept,
+                              lineage=funnel.coalesce(1),
+                              extra={"job": "curate", "input": args.input})
+        _, funnel_files = run_files(args.output, manifest, "lineage_files")
+        rows = {r["stage"]: r["docs"]
+                for r in spark.read.parquet(*funnel_files).collect()}
         for stage in sorted(rows):
             print(f"{stage}: {rows[stage]}")
         print(f"committed snapshot {manifest['snapshot_id']} "

@@ -147,27 +147,12 @@ def red_mask(
     return in_h & (s >= sat_min) & (v >= val_min)
 
 
-_SCRATCH: dict[str, np.ndarray] = {}
-
-
-def _scratch(key: str, n: int) -> np.ndarray:
-    """Reusable uint8 worker-lifetime buffer (grown geometrically)."""
-    buf = _SCRATCH.get(key)
-    if buf is None or buf.size < n:
-        buf = np.empty(int(n * 1.25) + 64, dtype=np.uint8)
-        _SCRATCH[key] = buf
-    return buf[:n]
-
-
-def _scratch_bool(key: str, n: int) -> np.ndarray:
-    return _scratch(key, n).view(bool)
-
-
 _MIN_DELTA_LUTS: dict[int, np.ndarray] = {}
 
 
 def _min_delta_lut(sat_min: int) -> np.ndarray:
-    """Per-V smallest delta with floor(255*delta/v + 0.5) >= sat_min."""
+    """Per-V smallest delta with floor(255*delta/v + 0.5) >= sat_min
+    (at v == 0: 0 when sat_min == 0, else 1 > v, which nothing passes)."""
     lut = _MIN_DELTA_LUTS.get(sat_min)
     if lut is None:
         v = np.arange(256, dtype=np.float64)
@@ -175,7 +160,6 @@ def _min_delta_lut(sat_min: int) -> np.ndarray:
         s = np.floor(255.0 * d[None, :] / np.maximum(v[:, None], 1e-9) + 0.5)
         ok = s >= sat_min
         lut = np.where(ok.any(axis=1), ok.argmax(axis=1), 255).astype(np.uint8)
-        lut[0] = 255  # v == 0 -> S == 0, never passes a positive sat_min
         _MIN_DELTA_LUTS[sat_min] = lut
     return lut
 
@@ -184,23 +168,23 @@ _MAX_MIN_LUTS: dict[tuple[int, int], np.ndarray] = {}
 
 
 def _max_min_lut(sat_min: int, val_min: int) -> np.ndarray:
-    """LUT2U[r] = largest ``min(g,b)`` (exclusive) passing both the S and
-    V thresholds given max-channel value r, i.e. the candidate test
-    collapses to ``min(g,b) < LUT2U[r]``:
+    """LUT[v] = largest channel minimum ``mn`` passing both the S and V
+    thresholds given max-channel value v, i.e. the S/V test collapses
+    to ``mn <= LUT[v]``:
 
-        delta = r - min(g,b) >= min_delta[r]  and  r >= val_min
-        <=>  min(g,b) <= r - min_delta[r]     (r >= val_min)
-        <=>  min(g,b) <  r - min_delta[r] + 1
+        delta = v - mn >= min_delta[v]  and  v >= val_min
+        <=>  mn <= v - min_delta[v]     (v >= val_min)
 
-    with 0 when r < val_min or min_delta[r] > r (no pixel can pass)."""
+    with -1 when v < val_min or min_delta[v] > v (no pixel can pass).
+    int16, so the bound of r = 255 at sat_min = 0 (255) and "none" (-1)
+    both fit."""
     key = (sat_min, val_min)
     lut = _MAX_MIN_LUTS.get(key)
     if lut is None:
-        md = _min_delta_lut(sat_min).astype(np.int32)
-        r = np.arange(256, dtype=np.int32)
-        bound = r - md + 1
-        bound[(r < val_min) | (md > r)] = 0
-        lut = np.clip(bound, 0, 255).astype(np.uint8)
+        md = _min_delta_lut(sat_min).astype(np.int16)
+        v = np.arange(256, dtype=np.int16)
+        lut = v - md
+        lut[(v < val_min) | (md > v)] = -1
         _MAX_MIN_LUTS[key] = lut
     return lut
 
@@ -213,80 +197,19 @@ def rgb_red_mask(
     val_min: int,
 ) -> np.ndarray:
     """Fused RGB -> dual-band red mask, equal to
-    ``red_mask(rgb_to_hsv_cv(img), ...)`` (unit-tested) but without
-    materializing the HSV planes: hue is computed only on the few pixels
-    that already pass the S/V thresholds — on mostly-white documents that
-    is a tiny fraction of the image (F2+F3 fusion; the dominant full-image
-    cost in the kernel).
+    ``red_mask(rgb_to_hsv_cv(img), ...)`` (F2+F3 fusion; the dominant
+    full-image cost in the kernel).
 
-    The native shim (``native.red_mask``) makes it one C pass with the
-    same bits; the numpy path below runs where the shim cannot be built
-    and is the tests' oracle for it."""
-    lut = _max_min_lut(sat_min, val_min)
-    out = native.red_mask(img, lut, band1, band2)
+    The native shim (``native.red_mask``) makes it one C pass that never
+    materializes the HSV planes: the S/V thresholds are one table lookup
+    on the max channel (:func:`_max_min_lut`), and hue is computed only
+    where that passes — on mostly-white documents, a tiny fraction of
+    the image.  Where the shim cannot be built, the composition itself
+    runs; it is the tests' oracle for the C pass."""
+    out = native.red_mask(img, _max_min_lut(sat_min, val_min), band1, band2)
     if out is not None:
         return out
-    shape = img.shape[:-1]
-    n = int(np.prod(shape))
-    # channel planes are strided views of the interleaved frame — every
-    # op below is elementwise or a fancy gather, so no copy is ever forced
-    r8, g8, b8 = img[..., 0], img[..., 1], img[..., 2]
-    # Exact candidate screen: any pixel whose hue falls in the red bands
-    # (H in [0,10] U [156,180], i.e. degrees < 30 or > 312) has V == R, so
-    # the S/V thresholds reduce to tests on R and min(G,B) alone — no
-    # full-frame max/min over all three channels needed.  Worker-lifetime
-    # scratch buffers avoid large-ndarray churn (mmap page faults
-    # serialize across parallel workers; measured ~2x worse scaling).
-    mn_gb = np.minimum(g8, b8, out=_scratch("mn", n).reshape(shape))
-    # S/V thresholds collapse into one LUT on the R channel:
-    # candidate <=> min(g,b) < LUT2U[r] and r is the max channel
-    bound = np.take(lut, r8, out=_scratch("lut", n).reshape(shape))
-    cand = np.less(mn_gb, bound, out=_scratch_bool("c1", n).reshape(shape))
-    cand &= np.greater_equal(r8, g8, out=_scratch_bool("c3", n).reshape(shape))
-    cand &= np.greater_equal(r8, b8, out=_scratch_bool("c4", n).reshape(shape))
-    out = np.zeros(shape, dtype=bool)
-    idx = np.flatnonzero(cand)
-    if idx.size > 0.2 * n:
-        # DENSE path: seal-crop calls run this mask over regions that are
-        # mostly red (candidate density near 1), where the sparse
-        # gather/scatter below costs more than straight full-frame
-        # arithmetic.  Expressions are verbatim copies of the sparse path
-        # (same dtype promotions), so per-candidate values are
-        # bit-identical; h is zeroed outside candidates BEFORE the int
-        # cast so no overflow-undefined lanes exist (their out lanes are
-        # masked by `cand` anyway).
-        r = r8.astype(np.float32)
-        g = g8.astype(np.float32)
-        b = b8.astype(np.float32)
-        # S/V re-check is omitted: cand <=> min(g,b) < LUT2U[r] is exactly
-        # delta >= min_delta[r] <=> floor(255*delta/r + 0.5) >= sat_min
-        # (s monotone in delta, v == r on candidates) — the screen IS the
-        # saturation test, by _max_min_lut construction; pinned by the
-        # formula-golden and fuzz suites
-        delta = r - np.minimum(mn_gb, r8).astype(np.float32)
-        safe = np.maximum(delta, 1e-9)
-        h = 60.0 * (g - b) / safe  # the v == r branch, always taken
-        h = np.where(h < 0, h + 360.0, h) / 2.0
-        h = np.where(cand, h, 0.0)
-        h8 = np.floor(h + 0.5).astype(np.int32) % 180
-        in_h = ((h8 >= band1[0]) & (h8 <= band1[1])) | ((h8 >= band2[0]) & (h8 <= band2[1]))
-        np.logical_and(cand, in_h, out=out)
-    elif idx.size:
-        pos = np.unravel_index(idx, shape)
-        r = r8[pos].astype(np.float32)
-        g = g8[pos].astype(np.float32)
-        b = b8[pos].astype(np.float32)
-        # S/V re-check omitted — see the dense-path note (the candidate
-        # screen is exactly the saturation/value test by LUT construction)
-        delta = r - np.minimum(mn_gb[pos], r8[pos]).astype(np.float32)
-        safe = np.maximum(delta, 1e-9)
-        h = 60.0 * (g - b) / safe  # candidates all have V == R
-        h = np.where(h < 0, h + 360.0, h) / 2.0
-        h8 = np.floor(h + 0.5).astype(np.int32) % 180
-        in_h = ((h8 >= band1[0]) & (h8 <= band1[1])) | ((h8 >= band2[0]) & (h8 <= band2[1]))
-        # delta == 0 pixels have H=0: consistent with rgb_to_hsv_cv
-        out[pos] = in_h
-    return out
+    return red_mask(rgb_to_hsv_cv(img[..., :3]), band1, band2, sat_min, val_min)
 
 
 def erode2(mask: np.ndarray) -> np.ndarray:

@@ -179,29 +179,38 @@ done:
 
 /* Fused dual-band red mask over an h x w RGB uint8 frame with byte
    strides sy (row), sx (pixel), sc (channel); out is h x w bytes, 0/1.
-   A pixel is a candidate when R is its max channel and min(G,B) <
-   lut[R] (the S/V thresholds, tabulated in imageops._max_min_lut); its
-   hue follows imageops.rgb_red_mask's numpy float32 expressions
-   operation by operation, so the mask is bit-identical to it. */
+   A pixel passes the S/V thresholds when min(R,G,B) <= lut[max(R,G,B)]
+   (imageops._max_min_lut, int16, -1 where nothing passes); only then is
+   its hue computed, following the float32 expressions of
+   imageops.rgb_to_hsv_cv operation by operation, so the mask is
+   bit-identical to red_mask(rgb_to_hsv_cv(img), ...) for any bands. */
 void rso_red_mask(const unsigned char *img, long h, long w,
                   ptrdiff_t sy, ptrdiff_t sx, ptrdiff_t sc,
-                  const unsigned char *lut, int b1lo, int b1hi,
+                  const short *lut, int b1lo, int b1hi,
                   int b2lo, int b2hi, unsigned char *out) {
     for (long y = 0; y < h; y++) {
         const unsigned char *p = img + y * sy;
         unsigned char *o = out + y * w;
         for (long x = 0; x < w; x++, p += sx) {
             int r = p[0], g = p[sc], b = p[2 * sc];
-            int mn = g < b ? g : b;
+            int v = r > g ? (r > b ? r : b) : (g > b ? g : b);
+            int mn = r < g ? (r < b ? r : b) : (g < b ? g : b);
             unsigned char hit = 0;
-            if (r >= g && r >= b && mn < lut[r]) {
-                float delta = (float)r - (float)mn;
-                float safe = delta > 1e-9f ? delta : 1e-9f;
-                float hue = 60.0f * ((float)g - (float)b) / safe;
-                if (hue < 0.0f)
-                    hue = hue + 360.0f;
-                hue = hue / 2.0f;
-                int h8 = (int)floorf(hue + 0.5f) % 180;
+            if (mn <= lut[v]) {
+                int h8 = 0;
+                if (v != mn) {
+                    float delta = (float)v - (float)mn, hue;
+                    if (v == r)
+                        hue = 60.0f * ((float)g - (float)b) / delta;
+                    else if (v == g)
+                        hue = 120.0f + 60.0f * ((float)b - (float)r) / delta;
+                    else
+                        hue = 240.0f + 60.0f * ((float)r - (float)g) / delta;
+                    if (hue < 0.0f)
+                        hue = hue + 360.0f;
+                    hue = hue / 2.0f;
+                    h8 = (int)floorf(hue + 0.5f) % 180;
+                }
                 hit = (h8 >= b1lo && h8 <= b1hi) || (h8 >= b2lo && h8 <= b2hi);
             }
             o[x] = hit;

@@ -648,31 +648,30 @@ def ingest_batch_lsh(
 ) -> DataFrame:
     """One incremental near-dedup ingest, end to end (VERDICT r05 #3):
 
-    1. read the persisted banded corpus for ``table_dir`` (validating
-       that its recorded lsh params match this call's);
-    2. band ONLY the new batch and write its band rows to a fresh run
-       directory under the table;
-    3. compute this batch's candidate pairs by joining the written rows
-       (read back from parquet, so the join input is byte-identical to
-       what the table will serve future batches) against the stored
-       corpus — corpus text is never re-hashed;
-    4. atomically commit the batch's band rows as the next snapshot.
+    1. band ONLY the new batch and commit its band rows to the banded
+       corpus (:func:`~red_seal_ocr_spark.sources.snapshot.
+       write_banded_corpus`, which validates that the table's recorded
+       lsh params match this call's);
+    2. compute this batch's candidate pairs by joining the committed
+       snapshot's own files (read back from parquet, so the join input
+       is byte-identical to what the table will serve future batches)
+       against its parent snapshot's files — corpus text is never
+       re-hashed.
 
     Returns the candidate-pair DataFrame ``(a_id, b_id, n_bands)``.
 
     Crash model — replaying the same ``run_id`` is idempotent on BOTH
-    sides of step 4's commit:
+    sides of the commit, through the one path above:
 
     - *pre-commit crash*: the dead attempt's parquet files are orphans
-      no snapshot references; the replay overwrites the deterministic
-      run directory (ErrorIfExists would wedge the retry forever) and
-      proceeds as a crash-free run.
+      no snapshot references; the replay stages under its own attempt
+      directory and proceeds as a crash-free run.
     - *post-commit replay* (commit landed, ack lost): the run_id is
-      found in the snapshot chain before anything is written; the
-      candidate set is recomputed from that snapshot's OWN files versus
-      its parent's corpus and the commit is skipped.  Without this
-      guard the batch's band rows double-append and every later
-      ingest's ``n_bands`` counts double — permanent table corruption.
+      found in the snapshot chain before anything is written, and the
+      candidate set is computed from that snapshot's own files versus
+      its parent's, exactly as for a first run.  Without this guard the
+      batch's band rows double-append and every later ingest's
+      ``n_bands`` counts double — permanent table corruption.
 
     This is the same manifest-pointer protocol the extraction
     pipeline's resume uses (:mod:`red_seal_ocr_spark.sources.snapshot`).
@@ -684,47 +683,19 @@ def ingest_batch_lsh(
     params = {"num_hashes": num_hashes, "bands": bands,
               "shingle_k": shingle_k, "id_col": id_col}
     rid = run_id or f"ingest-{_uuid.uuid4().hex[:12]}"
-
-    committed = snap.find_committed_run(table_dir, rid) if run_id else None
-    if committed is not None:
-        if committed.get("lsh_params") != params:
-            raise ValueError(
-                f"run {rid} was committed with lsh_params "
-                f"{committed.get('lsh_params')}, not {params}"
-            )
-        parent_id = committed.get("parent_snapshot_id")
-        parent = (snap.read_snapshot(table_dir, parent_id)
-                  if parent_id is not None else None)
-        parent_files = parent["data_files"] if parent else []
-        run_files = sorted(set(committed["data_files"]) - set(parent_files))
-        nb_read = (spark.read.parquet(*run_files) if run_files
-                   else banded_minhash(new_docs, id_col, text_col,
-                                       num_hashes, bands, shingle_k).limit(0))
-        corpus_banded = (spark.read.parquet(*parent_files) if parent_files
-                         else spark.createDataFrame([], nb_read.schema))
-        return incremental_lsh_candidates(
-            new_docs,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            max_bucket_size=max_bucket_size,
-            corpus_banded=corpus_banded,
-            new_banded=nb_read,
-        )
-
-    corpus_banded = snap.read_banded_corpus(spark, table_dir,
-                                            expect_params=params)
     nb = banded_minhash(new_docs, id_col, text_col, num_hashes, bands,
                         shingle_k)
-    out_dir = f"{table_dir}/data/run-{rid}"
-    nb.repartition("band", "bucket").write.mode("overwrite").parquet(out_dir)
-    files = snap.list_run_files(out_dir)
-    nb_read = spark.read.parquet(*files)
-    if corpus_banded is None:
-        corpus_banded = spark.createDataFrame([], nb_read.schema)
-    cands = incremental_lsh_candidates(
+    manifest = snap.write_banded_corpus(nb, table_dir, rid, params)
+    if manifest.get("lsh_params") != params:
+        raise ValueError(
+            f"run {rid} was committed with lsh_params "
+            f"{manifest.get('lsh_params')}, not {params}"
+        )
+    corpus_files, own_files = snap.run_files(table_dir, manifest)
+    nb_read = spark.read.parquet(*own_files)
+    corpus_banded = (spark.read.parquet(*corpus_files) if corpus_files
+                     else spark.createDataFrame([], nb_read.schema))
+    return incremental_lsh_candidates(
         new_docs,
         id_col=id_col,
         text_col=text_col,
@@ -735,9 +706,6 @@ def ingest_batch_lsh(
         corpus_banded=corpus_banded,
         new_banded=nb_read,
     )
-    snap.commit_snapshot(table_dir, files, [], rid,
-                         extra={"lsh_params": params})
-    return cands
 
 
 def positioned_grams(

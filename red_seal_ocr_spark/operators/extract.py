@@ -48,7 +48,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..sources.snapshot import commit_snapshot, list_run_files, read_table
+from ..sources.snapshot import (
+    commit_snapshot,
+    list_run_files,
+    read_table,
+    run_attempt,
+)
 from ..sources.snapshot import drop_empty_files as _drop_empty_files
 from .items import item_mapper
 
@@ -233,13 +238,16 @@ def run_extract(
     after any failure anti-joins the committed doc_ids and processes just
     the remainder (north rule: resumable from checkpoint).
 
-    Each call stages under its own ``run-<run_id>-<attempt>`` directories,
-    so a rerun with the same ``run_id`` (a resume, a job restart, a
-    replayed stream batch) never writes into an earlier attempt's.  The
-    manifest keeps ``run_id`` as given.
+    Each call stages under its own ``run-<run_id>-<attempt>`` directories
+    (``snapshot.run_attempt``), so a rerun with the same ``run_id`` (a
+    resume, a job restart, a replayed stream batch) never writes into an
+    earlier attempt's.  The manifest keeps ``run_id`` as given.  It keeps
+    its own write -> list -> drop-empty -> lineage -> commit steps rather
+    than ``snapshot.commit_run``: its lineage is read back from the data
+    files it has just written.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    attempt = f"run-{run_id}-{uuid.uuid4().hex[:6]}"
+    attempt = run_attempt(run_id)
     committed = read_table(spark, table_dir)
     remaining = docs
     if committed is not None:

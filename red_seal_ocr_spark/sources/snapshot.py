@@ -15,18 +15,25 @@ the engine carries the minimal semantics the north rule needs:
 Layout::
 
     table_dir/
-      data/run-<run_id>[-<attempt>]/part-*.parquet      (one subdir per
-                                                          producing run)
-      _lineage/run-<run_id>[-<attempt>]/part-*.parquet  (per-partition
-                                                          metrics rows)
+      data/run-<run_id>-<attempt>/part-*.parquet      (one subdir per
+                                                        attempt at a run)
+      _lineage/run-<run_id>-<attempt>/part-*.parquet  (per-partition
+                                                        metrics rows)
       _snapshots/snap-<n>.json
       _current                              (contains "snap-<n>.json")
+      _commit.lock                          (while a commit runs: the
+                                             owner record)
+
+Every writer stages under a fresh ``run-<run_id>-<attempt>`` directory
+(:func:`run_attempt`) and commits through :func:`commit_run`, except
+``run_extract``, which keeps its own steps.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import socket
 import time
 import uuid
 from contextlib import contextmanager
@@ -46,24 +53,82 @@ def current_snapshot(table_dir: str) -> dict | None:
     return json.loads((_snap_dir(table_dir) / name).read_text())
 
 
+def _owner_dead(lock: Path) -> bool:
+    """True only when ``lock`` holds a record naming a pid on this host
+    that no longer exists, or is a zombie (killed, not yet reaped by its
+    parent): no record (a directory made by hand, say), another host or
+    a live pid proves nothing."""
+    try:
+        owner = json.loads(lock.read_text())
+        if owner["host"] == socket.gethostname():
+            pid = int(owner["pid"])
+            os.kill(pid, 0)
+            stat = Path(f"/proc/{pid}/stat").read_text()
+            return stat[stat.rindex(")") + 2] == "Z"
+    except ProcessLookupError:
+        return True
+    except (OSError, ValueError, KeyError, TypeError):
+        pass  # PermissionError: the pid exists
+    return False
+
+
+def _break_dead_lock(lock: Path) -> bool:
+    """Remove ``lock`` if its owner is dead; True if it was removed.
+
+    Breakers take a second mkdir lock and read the record again under
+    it.  Only the dead owner or a breaker removes a lock, so the one
+    removed is the lock judged dead, never one a live waiter took since;
+    and of two waiters that both saw the dead owner, one breaks it.  A
+    breaker killed inside leaves ``.break`` behind, and dead locks are
+    then waited out as if nothing could break them."""
+    guard = lock.with_name(lock.name + ".break")
+    try:
+        os.mkdir(guard)
+    except FileExistsError:
+        return False
+    try:
+        if not _owner_dead(lock):
+            return False
+        os.remove(lock)
+        return True
+    finally:
+        os.rmdir(guard)
+
+
 @contextmanager
 def _commit_lock(table: Path, timeout_sec: float):
-    """Hold the table's commit lock: an mkdir lock (atomic on POSIX),
-    waited for up to ``timeout_sec`` (then ``TimeoutError``)."""
+    """Hold the table's commit lock, waiting up to ``timeout_sec`` (then
+    ``TimeoutError``).
+
+    The lock is the file ``_commit.lock`` holding its owner record
+    (host, pid, start time).  The record is written to a private file
+    first and published with ``os.link``, which is atomic and fails if
+    ``_commit.lock`` exists in any form, so a lock never lacks its
+    record.  A waiter breaks a lock whose owner is a dead pid on this
+    host (a run killed inside a commit); a lock with no record, a live
+    owner or another host's owner is waited out."""
     lock = table / "_commit.lock"
+    mine = table / f"_commit.lock.{uuid.uuid4().hex}"
+    mine.write_text(json.dumps({"host": socket.gethostname(),
+                                "pid": os.getpid(), "start": time.time()}))
     deadline = time.time() + timeout_sec
-    while True:
-        try:
-            os.mkdir(lock)
-            break
-        except FileExistsError:
-            if time.time() > deadline:
-                raise TimeoutError(f"commit lock held too long: {lock}") from None
-            time.sleep(0.05)
+    try:
+        while True:
+            try:
+                os.link(mine, lock)
+                break
+            except FileExistsError:
+                if _break_dead_lock(lock):
+                    continue
+                if time.time() > deadline:
+                    raise TimeoutError(f"commit lock held too long: {lock}") from None
+                time.sleep(0.05)
+    finally:
+        os.remove(mine)
     try:
         yield
     finally:
-        os.rmdir(lock)
+        os.remove(lock)
 
 
 def commit_snapshot(table_dir: str, data_files: list[str],
@@ -73,10 +138,10 @@ def commit_snapshot(table_dir: str, data_files: list[str],
                     replace: bool = False) -> dict:
     """Publish a new snapshot = parent files + this run's files (atomic).
 
-    Concurrent committers are serialized by an mkdir lock (atomic on
-    POSIX): each commit reads the parent *inside* the critical section, so
-    two simultaneous runs both land (no lost update) — the pointer rename
-    stays atomic for readers.  On an object store this would be a
+    Concurrent committers are serialized by the commit lock
+    (:func:`_commit_lock`): each commit reads the parent *inside* the
+    critical section, so two simultaneous runs both land (no lost
+    update) — the pointer rename stays atomic for readers.  On an object store this would be a
     conditional-put / swap-if-parent instead.
 
     ``replace=True`` publishes a REWRITE snapshot: ``data_files`` is the
@@ -120,11 +185,52 @@ def list_run_files(run_dir: str) -> list[str]:
     return sorted(str(f) for f in p.rglob("*.parquet") if f.is_file())
 
 
+def run_attempt(run_id: str) -> str:
+    """Staging directory name of one attempt at ``run_id``:
+    ``run-<run_id>-<attempt>``, fresh on every call."""
+    return f"run-{run_id}-{uuid.uuid4().hex[:6]}"
+
+
+def commit_run(table_dir: str, run_id: str, data, lineage=None,
+               extra: dict | None = None, replace: bool = False) -> dict:
+    """Stage ``data`` (and ``lineage``, a DataFrame, if given) under
+    ``data/`` and ``_lineage/`` of a fresh :func:`run_attempt` directory
+    and commit the written parts as ``run_id`` (:func:`commit_snapshot`,
+    whose ``extra`` and ``replace`` these are).  Returns the manifest.
+
+    The writes use Spark's default error-if-exists mode: no attempt
+    deletes another's files, so a retry started while an earlier attempt
+    is still alive cannot leave that attempt committing missing files.
+    Zero-row parts are kept: a table whose parts are all empty still
+    reads back with its schema.  Replay guards (``find_committed_run``,
+    ``last_batch_id``) are the caller's policy."""
+    attempt = run_attempt(run_id)
+    data_dir = f"{table_dir}/data/{attempt}"
+    data.write.parquet(data_dir)
+    lineage_files: list[str] = []
+    if lineage is not None:
+        lineage_dir = f"{table_dir}/_lineage/{attempt}"
+        lineage.write.parquet(lineage_dir)
+        lineage_files = list_run_files(lineage_dir)
+    return commit_snapshot(table_dir, list_run_files(data_dir), lineage_files,
+                           run_id, extra=extra, replace=replace)
+
+
+def run_files(table_dir: str, manifest: dict,
+              kind: str = "data_files") -> tuple[list[str], list[str]]:
+    """``(parent's files, files manifest added)`` of one kind: what the
+    committing run itself wrote, and what it committed on top of."""
+    pid = manifest.get("parent_snapshot_id")
+    parent = read_snapshot(table_dir, pid) if pid is not None else None
+    before = parent[kind] if parent else []
+    return before, sorted(set(manifest[kind]) - set(before))
+
+
 def drop_empty_files(files: list[str]) -> list[str]:
-    """Never commit zero-row part files (Spark emits them for empty write
-    partitions): they carry no data, and dropping them keeps the manifest
-    <-> lineage invariant exact (every committed data file has a lineage
-    row).  Deletes them and returns the rest.  Footer-only check,
+    """Drop zero-row part files (Spark emits them for empty write
+    partitions) before ``run_extract`` commits: they carry no data, and
+    dropping them keeps its manifest <-> lineage invariant exact (every
+    committed data file has a lineage row).  Deletes them and returns the rest.  Footer-only check,
     O(files) driver-side per commit — bounded per batch at any scale."""
     import pyarrow.parquet as pq
 
@@ -210,13 +316,13 @@ def write_banded_corpus(banded, table_dir: str, run_id: str,
     parquet layout is co-clustered with the candidate join's shuffle key;
     at cluster scale this would be ``bucketBy(band, bucket)`` on a real
     catalog table, letting the ingest join prune to its own buckets.
-    A crash after the parquet write but before the commit leaves orphan
-    files no snapshot references — re-running the same ingest batch is
-    the resume story (property-tested in test_dedup_similarity), and it
-    is idempotent on BOTH sides of the commit: a replay whose previous
+    Staging and commit go through :func:`commit_run`.  A crash after
+    the parquet write but before the commit leaves orphan files no
+    snapshot references, and re-running the same ingest batch is the
+    resume story (property-tested in test_dedup_similarity): the retry
+    stages under its own attempt directory.  A replay whose previous
     attempt already committed returns that snapshot untouched (no
-    double-append), and a pre-commit replay overwrites the orphan run
-    directory (ErrorIfExists would wedge the retry forever).
+    double-append).
     """
     already = find_committed_run(table_dir, run_id)
     if already is not None:
@@ -228,12 +334,8 @@ def write_banded_corpus(banded, table_dir: str, run_id: str,
             f"{cur.get('lsh_params')}; refusing to append rows hashed "
             f"with {dict(lsh_params)}"
         )
-    out_dir = f"{table_dir}/data/run-{run_id}"
-    banded.repartition("band", "bucket").write.mode("overwrite").parquet(out_dir)
-    files = list_run_files(out_dir)
-    return commit_snapshot(
-        table_dir, files, [], run_id, extra={"lsh_params": dict(lsh_params)}
-    )
+    return commit_run(table_dir, run_id, banded.repartition("band", "bucket"),
+                      extra={"lsh_params": dict(lsh_params)})
 
 
 def read_banded_corpus(spark, table_dir: str,
@@ -261,11 +363,12 @@ def write_tokenizer_merges(spark, merges: list, table_dir: str,
 
     Same idempotence contract as :func:`write_banded_corpus`: replaying
     a committed ``run_id`` returns that snapshot untouched (encoders
-    keep a stable artifact), a pre-commit crash leaves orphans the
-    replay overwrites.  ``train_params`` (n_merges, corpus snapshot id,
-    tokenization...) is recorded so an encode job can refuse a merge
-    list trained under different rules — mixing tokenizers is the
-    silent-corruption analog of mixing LSH hash families.
+    keep a stable artifact), and a pre-commit crash leaves orphans the
+    retry never references.  ``train_params`` (n_merges, corpus
+    snapshot id, tokenization...) is recorded so an encode job can
+    refuse a merge list trained under different rules — mixing
+    tokenizers is the silent-corruption analog of mixing LSH hash
+    families.
     """
     already = find_committed_run(table_dir, run_id)
     if already is not None:
@@ -274,17 +377,12 @@ def write_tokenizer_merges(spark, merges: list, table_dir: str,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     )
-    out_dir = f"{table_dir}/data/run-{run_id}"
-    df.coalesce(1).write.mode("overwrite").parquet(out_dir)
-    files = list_run_files(out_dir)
     # replace=True: the tokenizer is a WHOLE-artifact table — a retrain
     # supersedes the previous merge list entirely (an appending commit
     # would interleave two trainings' rows with duplicate ranks, the
     # silent-corruption case the docstring warns about)
-    return commit_snapshot(
-        table_dir, files, [], run_id,
-        extra={"train_params": dict(train_params)}, replace=True,
-    )
+    return commit_run(table_dir, run_id, df.coalesce(1),
+                      extra={"train_params": dict(train_params)}, replace=True)
 
 
 def read_tokenizer_merges(spark, table_dir: str,
@@ -329,11 +427,8 @@ def compact_table(spark, table_dir: str,
     total = sum(os.path.getsize(f) for f in snap["data_files"])
     n_out = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(*snap["data_files"])
-    out_dir = f"{table_dir}/data/run-compact-{uuid.uuid4().hex[:12]}"
-    df.repartition(n_out).write.parquet(out_dir)
-    files = drop_empty_files(list_run_files(out_dir))
-    return commit_snapshot(
-        table_dir, files, [], f"compact-{snap['snapshot_id']}",
+    return commit_run(
+        table_dir, f"compact-{snap['snapshot_id']}", df.repartition(n_out),
         extra={"compaction_of": snap["snapshot_id"],
                "input_snapshot_id": snap.get("input_snapshot_id", "compact")},
         replace=True,

@@ -62,12 +62,12 @@ def _merge_batch_stats(
     the cumulative stats DataFrame.
 
     Exactly-once: a batch_id at or below the committed ``last_batch_id``
-    merges nothing.  The merged table is written with overwrite: a crash
-    between this write and the commit makes foreachBatch replay the SAME
-    batch_id (the at-least-once window this module documents), and the
-    deterministic path must absorb the dead attempt's orphan files or the
-    stream wedges forever on PATH_ALREADY_EXISTS.  Post-commit replays
-    never reach the write (the ``last_batch_id`` guard returns first)."""
+    merges nothing.  A crash between the write and the commit makes
+    foreachBatch replay the SAME batch_id (the at-least-once window this
+    module documents); the replay stages under its own attempt directory
+    (``snapshot.commit_run``), so the dead attempt's files stay orphans.
+    Post-commit replays never reach the write (the ``last_batch_id``
+    guard returns first)."""
     cur = snap.current_snapshot(stats_dir)
     if cur is not None and cur.get("last_batch_id", -1) >= batch_id:
         return snap.read_table(spark, stats_dir)
@@ -79,13 +79,8 @@ def _merge_batch_stats(
         .groupBy(*keys)
         .agg(*[F.sum(c).alias(c) for c in sums])
     )
-    out_dir = f"{stats_dir}/data/run-batch-{batch_id}"
-    merged.write.mode("overwrite").parquet(out_dir)
-    files = snap.list_run_files(out_dir)
-    snap.commit_snapshot(
-        stats_dir, files, [], f"batch-{batch_id}",
-        extra={"last_batch_id": batch_id}, replace=True,
-    )
+    snap.commit_run(stats_dir, f"batch-{batch_id}", merged,
+                    extra={"last_batch_id": batch_id}, replace=True)
     return snap.read_table(spark, stats_dir)
 
 
@@ -142,13 +137,8 @@ def run_site_strip_stream(
                 boiler_from_stats(stats, min_doc_frac_pct),
                 id_col=id_col, site_col=site_col, text_col=text_col,
             )
-            out_dir = f"{table_dir}/data/run-batch-{batch_id}"
-            stripped.write.mode("overwrite").parquet(out_dir)
-            files = snap.list_run_files(out_dir)
-            snap.commit_snapshot(
-                table_dir, files, [], f"batch-{batch_id}",
-                extra={"last_batch_id": batch_id},
-            )
+            snap.commit_run(table_dir, f"batch-{batch_id}", stripped,
+                            extra={"last_batch_id": batch_id})
         finally:
             batch_df.unpersist()
 

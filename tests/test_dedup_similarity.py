@@ -944,8 +944,8 @@ def test_quantized_topk_matches_exact_cosine_order(spark):
 def test_ingest_batch_lsh_fixed_run_id_replay_idempotent(spark, tmp_path,
                                                          monkeypatch):
     """Replaying a FIXED run_id is idempotent on both sides of the
-    commit: a pre-commit crash replay overwrites the orphan run dir and
-    commits once; a post-commit replay (commit landed, ack lost)
+    commit: a pre-commit crash replay stages beside the orphan run dir
+    and commits once; a post-commit replay (commit landed, ack lost)
     recomputes the same candidate set without re-appending band rows —
     the double-append would permanently double n_bands for every later
     ingest."""

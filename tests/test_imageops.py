@@ -146,11 +146,14 @@ def _mask_on_both_paths(native_paths, img, args=MASK_ARGS):
 
 def test_native_red_mask_equals_numpy_on_every_triple(native_paths):
     """Every RGB triple, as one 4096x4096 frame: the shim's one-pass mask
-    is the numpy path's bit for bit, at the engine's thresholds and at
-    both extremes of the S/V screen."""
+    is the numpy path's, ``red_mask(rgb_to_hsv_cv(img), ...)``, bit for
+    bit, at the engine's thresholds, at sat_min = 0 (white and gray pass
+    it), at both extremes of the S/V screen (black passes 0, 0) and on
+    hue bands where the max channel is G or B."""
     v = np.arange(256, dtype=np.uint8)
     frame = np.stack(np.meshgrid(v, v, v, indexing="ij"), axis=-1).reshape(4096, 4096, 3)
-    for args in (MASK_ARGS, ((0, 10), (156, 180), 0, 0), ((5, 20), (170, 179), 255, 255)):
+    for args in (MASK_ARGS, ((0, 10), (156, 180), 0, 50), ((0, 10), (156, 180), 0, 0),
+                 ((5, 20), (170, 179), 255, 255), ((30, 60), (90, 150), 50, 50)):
         native, numpy_ = _mask_on_both_paths(native_paths, frame, args)
         assert native.dtype == numpy_.dtype == bool
         assert native.shape == numpy_.shape == (4096, 4096)
@@ -160,8 +163,7 @@ def test_native_red_mask_equals_numpy_on_every_triple(native_paths):
 def test_native_red_mask_equals_numpy_on_views_and_thin_shapes(native_paths):
     """Strided views (frame crops as kernel.py takes them, stepped,
     reversed and channel-offset views) and 1xN / Nx1 / empty shapes, on
-    frames sparse in red (the numpy path's gather branch) and dense in
-    red (its full-frame branch)."""
+    frames sparse in red and dense in red."""
     rng = np.random.default_rng(8)
     frame = rng.integers(0, 256, (120, 160, 4), dtype=np.uint8)
     reds = rng.random((120, 160)) < 0.6

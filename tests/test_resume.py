@@ -146,6 +146,83 @@ def test_held_commit_lock_times_out(tmp_path):
     assert commit_snapshot(table, ["file-1"], [], "run-1")["snapshot_id"] == 1
 
 
+def test_dead_owner_commit_lock_is_broken(tmp_path):
+    """A process SIGKILLed while it holds the commit lock leaves the lock
+    behind with its owner record.  While the record names another host
+    or a live pid the lock is waited out; once it names this host and
+    the dead pid, the next commit breaks it and lands."""
+    import json
+    import os
+    import signal
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    table = tmp_path / "killed"
+    table.mkdir()
+    code = ("import os, pathlib, signal, sys\n"
+            "from red_seal_ocr_spark.sources.snapshot import _commit_lock\n"
+            "with _commit_lock(pathlib.Path(sys.argv[1]), 5.0):\n"
+            "    os.kill(os.getpid(), signal.SIGKILL)\n")
+    env = {**os.environ, "PYTHONPATH": str(repo)}
+    proc = subprocess.run([sys.executable, "-c", code, str(table)], env=env,
+                          timeout=60)
+    assert proc.returncode == -signal.SIGKILL
+    lock = table / "_commit.lock"
+    owner = json.loads(lock.read_text())
+    assert {"host", "pid", "start"} <= set(owner)
+
+    for live_or_foreign in ({**owner, "host": owner["host"] + "-elsewhere"},
+                            {**owner, "pid": os.getpid()}):
+        lock.write_text(json.dumps(live_or_foreign))
+        with pytest.raises(TimeoutError, match="commit lock"):
+            commit_snapshot(str(table), ["file-0"], [], "run-0",
+                            lock_timeout_sec=0.2)
+
+    lock.write_text(json.dumps(owner))
+    m = commit_snapshot(str(table), ["file-0"], [], "run-0", lock_timeout_sec=0.2)
+    assert m["snapshot_id"] == 0
+    assert not lock.exists()
+    assert sorted(p.name for p in table.iterdir()) == ["_current", "_snapshots"]
+
+
+def test_commit_lock_stress_with_owners_killed_inside(tmp_path):
+    """Six processes (more than the cores) commit ten snapshots each to
+    one table; three are SIGKILLed while holding the lock and stay
+    unreaped until the end.  Every commit made lands exactly once (no
+    lost update, no double break) and no waiter times out."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    table = tmp_path / "stress"
+    table.mkdir()
+    code = ("import os, pathlib, signal, sys\n"
+            "from red_seal_ocr_spark.sources.snapshot import _commit_lock, commit_snapshot\n"
+            "table, w = sys.argv[1], int(sys.argv[2])\n"
+            "for i in range(10):\n"
+            "    if i == {1: 2, 3: 5, 5: 8}.get(w):\n"
+            "        with _commit_lock(pathlib.Path(table), 30.0):\n"
+            "            os.kill(os.getpid(), signal.SIGKILL)\n"
+            "    commit_snapshot(table, [f'w{w}-{i}'], [], f'r{w}-{i}',\n"
+            "                    lock_timeout_sec=30.0)\n")
+    env = {**os.environ, "PYTHONPATH": str(repo)}
+    procs = [subprocess.Popen([sys.executable, "-c", code, str(table), str(w)],
+                              env=env) for w in range(6)]
+    codes = [p.wait(timeout=120) for p in procs]
+    assert codes == [0, -9, 0, -9, 0, -9]
+    expected = {f"w{w}-{i}" for w in range(6)
+                for i in range({1: 2, 3: 5, 5: 8}.get(w, 10))}
+    cur = current_snapshot(str(table))
+    assert sorted(cur["data_files"]) == sorted(expected)
+    assert cur["snapshot_id"] == len(expected) - 1
+    assert {p.name for p in table.iterdir()} <= {
+        "_current", "_snapshots", "_commit.lock"}
+
+
 def test_many_sequential_commits_and_time_travel(spark, tmp_path):
     """Snapshot chain stress: 12 runs, every historical snapshot readable
     with the exact cumulative doc count."""

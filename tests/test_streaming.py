@@ -254,9 +254,9 @@ def test_update_site_line_stats_replay_is_exactly_once(spark, tmp_path):
 
 def test_update_site_line_stats_precommit_crash_replay_recovers(spark, tmp_path):
     """The OTHER half of at-least-once: a crash between the stats write
-    and its commit leaves orphan files at the deterministic run-batch-N
-    path; the replay must overwrite them and progress (ErrorIfExists
-    would wedge the stream on every restart)."""
+    and its commit leaves orphan staging files (here at a fixed
+    run-batch-N path); the replay stages under its own attempt directory
+    and progresses, and the orphans are never committed."""
     from red_seal_ocr_spark.sources.snapshot import read_table
     from red_seal_ocr_spark.streaming.curate_stream import update_site_line_stats
 

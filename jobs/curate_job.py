@@ -56,8 +56,8 @@ def main(argv: list[str] | None = None) -> int:
     run_id = args.run_id or uuid.uuid4().hex[:12]
     committed = find_committed_run(args.output, run_id)
     if committed is not None:
-        # a replay of a committed run (pinned --run-id): appending its
-        # kept documents again would duplicate them in the table
+        # a shortcut: commit_run rejects a replay too, but only after
+        # the eager connected-component rounds of the curation
         print(f"run {run_id} already committed as snapshot "
               f"{committed['snapshot_id']} -> {args.output}; nothing written")
         return 0

@@ -666,12 +666,12 @@ def ingest_batch_lsh(
     - *pre-commit crash*: the dead attempt's parquet files are orphans
       no snapshot references; the replay stages under its own attempt
       directory and proceeds as a crash-free run.
-    - *post-commit replay* (commit landed, ack lost): the run_id is
-      found in the snapshot chain before anything is written, and the
-      candidate set is computed from that snapshot's own files versus
-      its parent's, exactly as for a first run.  Without this guard the
-      batch's band rows double-append and every later ingest's
-      ``n_bands`` counts double — permanent table corruption.
+    - *post-commit replay* (commit landed, ack lost) or a retry racing
+      a live attempt: the write returns the snapshot that committed the
+      run_id (``commit_run`` commits it once), and the candidate set is
+      computed from that snapshot's own files versus its parent's, as
+      for a first run.  Without this the batch's band rows double-append
+      and every later ingest's ``n_bands`` counts double.
 
     This is the same manifest-pointer protocol the extraction
     pipeline's resume uses (:mod:`red_seal_ocr_spark.sources.snapshot`).

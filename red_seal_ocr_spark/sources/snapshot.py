@@ -25,8 +25,8 @@ Layout::
                                              owner record)
 
 Every writer stages under a fresh ``run-<run_id>-<attempt>`` directory
-(:func:`run_attempt`) and commits through :func:`commit_run`, except
-``run_extract``, which keeps its own steps.
+(:func:`run_attempt`) and commits once per run id, under the commit lock,
+through :func:`commit_run`; ``run_extract`` alone keeps its own steps.
 """
 
 from __future__ import annotations
@@ -131,39 +131,60 @@ def _commit_lock(table: Path, timeout_sec: float):
         os.remove(lock)
 
 
+class CommitConflict(RuntimeError):
+    """A REPLACE commit whose base snapshot is no longer the current one."""
+
+
 def commit_snapshot(table_dir: str, data_files: list[str],
                     lineage_files: list[str], run_id: str,
                     extra: dict | None = None,
                     lock_timeout_sec: float = 60.0,
-                    replace: bool = False) -> dict:
+                    replace: bool | dict = False,
+                    once_per_run: bool = False) -> dict:
     """Publish a new snapshot = parent files + this run's files (atomic).
 
     Concurrent committers are serialized by the commit lock
     (:func:`_commit_lock`): each commit reads the parent *inside* the
-    critical section, so two simultaneous runs both land (no lost
-    update) — the pointer rename stays atomic for readers.  On an object store this would be a
-    conditional-put / swap-if-parent instead.
+    critical section, so two simultaneous appends both land (no lost
+    update) — the pointer rename stays atomic for readers.  On an object
+    store this would be a conditional-put / swap-if-parent instead.
 
-    ``replace=True`` publishes a REWRITE snapshot: ``data_files`` is the
+    ``replace`` publishes a REWRITE snapshot: ``data_files`` is the
     complete new file list instead of parent+new (the compaction commit
-    shape — Iceberg's rewrite_data_files).  Lineage history is always
-    carried forward.
+    shape — Iceberg's rewrite_data_files).  Given the manifest the
+    rewrite was computed from (``{}`` for an empty table), it raises
+    :class:`CommitConflict` and publishes nothing once another commit
+    has landed (swap-if-parent).  Lineage history is always carried
+    forward.
+
+    ``once_per_run`` (set by :func:`commit_run`): a ``run_id`` already on
+    the chain gets its manifest back, before the REPLACE base check.
     """
     table = Path(table_dir)
     table.mkdir(parents=True, exist_ok=True)
     with _commit_lock(table, lock_timeout_sec):
-        parent = current_snapshot(table_dir)
-        snap_id = (parent["snapshot_id"] + 1) if parent else 0
+        if once_per_run:
+            committed = find_committed_run(table_dir, run_id)
+            if committed is not None:
+                return committed
+        parent = current_snapshot(table_dir) or {}
+        if (isinstance(replace, dict)
+                and replace.get("snapshot_id") != parent.get("snapshot_id")):
+            raise CommitConflict(
+                f"{table_dir}: REPLACE of snapshot "
+                f"{replace.get('snapshot_id')} by run {run_id}, but snapshot "
+                f"{parent.get('snapshot_id')} is current")
+        snap_id = parent.get("snapshot_id", -1) + 1
         manifest = {
             "snapshot_id": snap_id,
-            "parent_snapshot_id": parent["snapshot_id"] if parent else None,
+            "parent_snapshot_id": parent.get("snapshot_id"),
             "run_id": run_id,
             "data_files": sorted(
-                list(data_files) if replace
-                else (parent["data_files"] if parent else []) + list(data_files)
+                ([] if replace is not False else parent.get("data_files", []))
+                + list(data_files)
             ),
             "lineage_files": sorted(
-                (parent["lineage_files"] if parent else []) + list(lineage_files)
+                parent.get("lineage_files", []) + list(lineage_files)
             ),
             **(extra or {}),
         }
@@ -171,7 +192,7 @@ def commit_snapshot(table_dir: str, data_files: list[str],
         sd.mkdir(parents=True, exist_ok=True)
         name = f"snap-{snap_id}.json"
         (sd / name).write_text(json.dumps(manifest, indent=1))
-        tmp = table / f"_current.tmp.{uuid.uuid4().hex}"
+        tmp = table / "_current.tmp"  # one name: a killed commit's is reused
         tmp.write_text(name)
         os.rename(tmp, table / "_current")  # atomic publish
         return manifest
@@ -192,7 +213,7 @@ def run_attempt(run_id: str) -> str:
 
 
 def commit_run(table_dir: str, run_id: str, data, lineage=None,
-               extra: dict | None = None, replace: bool = False) -> dict:
+               extra: dict | None = None, replace: bool | dict = False) -> dict:
     """Stage ``data`` (and ``lineage``, a DataFrame, if given) under
     ``data/`` and ``_lineage/`` of a fresh :func:`run_attempt` directory
     and commit the written parts as ``run_id`` (:func:`commit_snapshot`,
@@ -202,8 +223,11 @@ def commit_run(table_dir: str, run_id: str, data, lineage=None,
     deletes another's files, so a retry started while an earlier attempt
     is still alive cannot leave that attempt committing missing files.
     Zero-row parts are kept: a table whose parts are all empty still
-    reads back with its schema.  Replay guards (``find_committed_run``,
-    ``last_batch_id``) are the caller's policy."""
+    reads back with its schema.  A run id commits once (checked before
+    any write and again under the lock): a replay gets its manifest."""
+    committed = find_committed_run(table_dir, run_id)
+    if committed is not None:
+        return committed
     attempt = run_attempt(run_id)
     data_dir = f"{table_dir}/data/{attempt}"
     data.write.parquet(data_dir)
@@ -213,7 +237,8 @@ def commit_run(table_dir: str, run_id: str, data, lineage=None,
         lineage.write.parquet(lineage_dir)
         lineage_files = list_run_files(lineage_dir)
     return commit_snapshot(table_dir, list_run_files(data_dir), lineage_files,
-                           run_id, extra=extra, replace=replace)
+                           run_id, extra=extra, replace=replace,
+                           once_per_run=True)
 
 
 def run_files(table_dir: str, manifest: dict,
@@ -257,15 +282,22 @@ def find_committed_run(table_dir: str, run_id: str) -> dict | None:
 
     This is the replay-idempotence primitive: an orchestrator retrying a
     batch whose previous attempt DID commit (commit landed, ack lost —
-    the classic at-least-once window) must be detected before any write,
-    or the batch's rows double-append into permanent table state."""
-    cur = current_snapshot(table_dir)
-    while cur is not None:
-        if cur.get("run_id") == run_id:
-            return cur
-        parent = cur.get("parent_snapshot_id")
-        cur = None if parent is None else read_snapshot(table_dir, parent)
-    return None
+    the classic at-least-once window) must be detected under the commit
+    lock (``commit_snapshot(once_per_run=True)``), or the batch's rows
+    double-append into permanent table state.  An expired run is not
+    found."""
+    return next((m for m in snapshot_chain(table_dir)
+                 if m.get("run_id") == run_id), None)
+
+
+def snapshot_chain(table_dir: str):
+    """Manifests from the current snapshot back along the parent chain
+    (newest first; stops at the first expired parent)."""
+    m = current_snapshot(table_dir)
+    while m is not None:
+        yield m
+        pid = m.get("parent_snapshot_id")
+        m = None if pid is None else read_snapshot(table_dir, pid)
 
 
 def read_table(spark, table_dir: str, lineage: bool = False,
@@ -320,13 +352,10 @@ def write_banded_corpus(banded, table_dir: str, run_id: str,
     the parquet write but before the commit leaves orphan files no
     snapshot references, and re-running the same ingest batch is the
     resume story (property-tested in test_dedup_similarity): the retry
-    stages under its own attempt directory.  A replay whose previous
-    attempt already committed returns that snapshot untouched (no
-    double-append).
+    stages under its own attempt directory.  A replay of a committed
+    ``run_id`` (or one racing a live attempt) gets that snapshot back
+    untouched (no double-append): :func:`commit_run` commits it once.
     """
-    already = find_committed_run(table_dir, run_id)
-    if already is not None:
-        return already
     cur = current_snapshot(table_dir)
     if cur is not None and cur.get("lsh_params") != dict(lsh_params):
         raise ValueError(
@@ -370,19 +399,17 @@ def write_tokenizer_merges(spark, merges: list, table_dir: str,
     tokenizers is the silent-corruption analog of mixing LSH hash
     families.
     """
-    already = find_committed_run(table_dir, run_id)
-    if already is not None:
-        return already
+    base = current_snapshot(table_dir) or {}
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     )
-    # replace=True: the tokenizer is a WHOLE-artifact table — a retrain
+    # REPLACE: the tokenizer is a WHOLE-artifact table — a retrain
     # supersedes the previous merge list entirely (an appending commit
     # would interleave two trainings' rows with duplicate ranks, the
     # silent-corruption case the docstring warns about)
     return commit_run(table_dir, run_id, df.coalesce(1),
-                      extra={"train_params": dict(train_params)}, replace=True)
+                      extra={"train_params": dict(train_params)}, replace=base)
 
 
 def read_tokenizer_merges(spark, table_dir: str,
@@ -419,7 +446,8 @@ def compact_table(spark, table_dir: str,
     working) until :func:`expire_snapshots` reclaims them.
 
     Returns the new manifest.  No-op (returns the current manifest) if
-    the table is empty.
+    the table is empty.  Raises :class:`CommitConflict` if a commit
+    lands between the read and the commit.
     """
     snap = current_snapshot(table_dir)
     if snap is None or not snap["data_files"]:
@@ -431,50 +459,46 @@ def compact_table(spark, table_dir: str,
         table_dir, f"compact-{snap['snapshot_id']}", df.repartition(n_out),
         extra={"compaction_of": snap["snapshot_id"],
                "input_snapshot_id": snap.get("input_snapshot_id", "compact")},
-        replace=True,
+        replace=snap,
     )
 
 
 def expire_snapshots(table_dir: str, keep_last: int = 2,
                      lock_timeout_sec: float = 60.0) -> dict:
-    """Expire all but the newest ``keep_last`` snapshots and delete data /
-    lineage files no retained snapshot references (Iceberg
-    ``expire_snapshots`` semantics: the current snapshot is always
-    retained; time travel to an expired id fails; shared files survive).
+    """Expire all but the newest ``keep_last`` snapshots of the chain
+    from ``_current`` and delete data / lineage files no retained
+    snapshot references (Iceberg ``expire_snapshots`` semantics: the
+    current snapshot is always retained; time travel to an expired id
+    fails; shared files survive).
 
     Runs under the commit lock so a concurrent commit can't publish a
-    snapshot referencing files being deleted.  Returns
+    snapshot referencing files being deleted.  A manifest above the
+    current id was left by a commit killed before its ``_current`` flip
+    (possibly half-written); it is deleted.  Returns
     ``{"expired": [ids], "deleted_files": n, "kept": [ids]}``.
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     with _commit_lock(Path(table_dir), lock_timeout_sec):
-        cur = current_snapshot(table_dir)
-        if cur is None:
-            return {"expired": [], "deleted_files": 0, "kept": []}
+        chain = list(snapshot_chain(table_dir))
+        cur_id = chain[0]["snapshot_id"] if chain else -1
         sd = _snap_dir(table_dir)
-        ids = sorted(
-            int(p.stem.split("-", 1)[1]) for p in sd.glob("snap-*.json")
-        )
-        kept_ids = ids[-keep_last:]
-        if cur["snapshot_id"] not in kept_ids:  # never expire the current
-            kept_ids.append(cur["snapshot_id"])
-        expired_ids = [i for i in ids if i not in kept_ids]
-        referenced: set[str] = set()
-        for i in kept_ids:
-            m = read_snapshot(table_dir, i)
-            referenced.update(m["data_files"])
-            referenced.update(m["lineage_files"])
+        for p in sd.glob("snap-*.json"):
+            if int(p.stem.split("-", 1)[1]) > cur_id:
+                os.remove(p)
+        kept, expired = chain[:keep_last], chain[keep_last:][::-1]
+        referenced = {f for m in kept
+                      for f in m["data_files"] + m["lineage_files"]}
         deleted = 0
-        for i in expired_ids:
-            m = read_snapshot(table_dir, i)
+        for m in expired:
             for f in set(m["data_files"]) | set(m["lineage_files"]):
                 if f not in referenced and os.path.exists(f):
                     os.remove(f)
                     deleted += 1
-            os.remove(sd / f"snap-{i}.json")
-        return {"expired": expired_ids, "deleted_files": deleted,
-                "kept": sorted(kept_ids)}
+            os.remove(sd / f"snap-{m['snapshot_id']}.json")
+        return {"expired": [m["snapshot_id"] for m in expired],
+                "deleted_files": deleted,
+                "kept": sorted(m["snapshot_id"] for m in kept)}
 
 
 def snapshot_diff(spark, table_dir: str, from_snapshot_id: int | None,

@@ -19,9 +19,9 @@ re-derives the template verdicts from the running totals each batch:
 Additivity: per-batch distinct-doc counts sum to the global distinct
 count because a file-source micro-batch delivers each document exactly
 once.  Replayed batches (foreachBatch is at-least-once after a crash)
-would double-count, so the stats commit records ``last_batch_id`` and a
-batch <= that id merges nothing — stats updates are exactly-once, the
-same manifest-pointer idempotence the extraction resume uses.
+would double-count, so every commit's run id is ``batch-<batch_id>`` and
+``snapshot.commit_run`` commits a run id once: a replayed batch merges
+nothing — stats updates are exactly-once.
 
 Scale shape: the stats table holds distinct (site, line) pairs — the
 aggregated vocabulary, orders of magnitude smaller than the corpus; the
@@ -61,17 +61,16 @@ def _merge_batch_stats(
     at ``stats_dir`` (grouped by ``keys``, summing ``sums``) and return
     the cumulative stats DataFrame.
 
-    Exactly-once: a batch_id at or below the committed ``last_batch_id``
-    merges nothing.  A crash between the write and the commit makes
-    foreachBatch replay the SAME batch_id (the at-least-once window this
-    module documents); the replay stages under its own attempt directory
-    (``snapshot.commit_run``), so the dead attempt's files stay orphans.
-    Post-commit replays never reach the write (the ``last_batch_id``
-    guard returns first)."""
+    Exactly-once: ``snapshot.commit_run`` commits run id
+    ``batch-<batch_id>`` once, so a replayed batch merges nothing.  A
+    crash between the write and the commit makes foreachBatch replay the
+    SAME batch_id (the at-least-once window this module documents); the
+    replay stages under its own attempt directory, so the dead attempt's
+    files stay orphans.  The merge REPLACEs the snapshot it read
+    (``snapshot.CommitConflict`` if another commit landed)."""
     cur = snap.current_snapshot(stats_dir)
-    if cur is not None and cur.get("last_batch_id", -1) >= batch_id:
-        return snap.read_table(spark, stats_dir)
-    old = snap.read_table(spark, stats_dir)
+    old = cur and snap.read_table(spark, stats_dir,
+                                  snapshot_id=cur["snapshot_id"])
     merged = (
         batch_stats
         if old is None
@@ -80,7 +79,7 @@ def _merge_batch_stats(
         .agg(*[F.sum(c).alias(c) for c in sums])
     )
     snap.commit_run(stats_dir, f"batch-{batch_id}", merged,
-                    extra={"last_batch_id": batch_id}, replace=True)
+                    replace=cur or {})
     return snap.read_table(spark, stats_dir)
 
 
@@ -128,17 +127,12 @@ def run_site_strip_stream(
                 spark, batch_df, stats_dir, batch_id,
                 id_col=id_col, site_col=site_col, text_col=text_col,
             )
-            cur = snap.current_snapshot(table_dir)
-            if cur is not None and cur.get("last_batch_id", -1) >= batch_id:
-                return  # replayed batch already committed — don't touch
-                # files the manifest references
             stripped = strip_lines_by_flag(
                 batch_df,
                 boiler_from_stats(stats, min_doc_frac_pct),
                 id_col=id_col, site_col=site_col, text_col=text_col,
             )
-            snap.commit_run(table_dir, f"batch-{batch_id}", stripped,
-                            extra={"last_batch_id": batch_id})
+            snap.commit_run(table_dir, f"batch-{batch_id}", stripped)
         finally:
             batch_df.unpersist()
 

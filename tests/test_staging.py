@@ -1,15 +1,22 @@
 """One staging-and-commit path for snapshot tables
 (``sources/snapshot.py::commit_run``): a retry of a run started while the
-first attempt is still alive leaves a readable table, and a source check
-that no other function commits a snapshot or overwrites a snapshot
-table's files."""
+first attempt is still alive leaves a readable table holding the run
+once, a compaction never drops an append that lands inside its commit,
+and source checks that no other function commits a snapshot, overwrites
+a snapshot table's files or keeps its own replay rule."""
 
 import ast
 import os
 from pathlib import Path
 
+import pytest
+
 import red_seal_ocr_spark.sources.snapshot as snapmod
-from red_seal_ocr_spark.sources.snapshot import current_snapshot, read_table
+from red_seal_ocr_spark.sources.snapshot import (
+    current_snapshot,
+    read_table,
+    snapshot_chain,
+)
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -43,6 +50,13 @@ def _assert_current_files_exist(table):
     assert [f for f in cur["data_files"] if not os.path.exists(f)] == []
 
 
+def _assert_committed_once(spark, table, run_id, n_rows):
+    """``run_id`` is on the chain exactly once and its rows are not
+    doubled."""
+    assert [m["run_id"] for m in snapshot_chain(table)].count(run_id) == 1
+    assert read_table(spark, table).count() == n_rows
+
+
 def test_banded_corpus_retry_while_first_attempt_alive(spark, tmp_path, monkeypatch):
     from red_seal_ocr_spark.sources.snapshot import write_banded_corpus
 
@@ -55,6 +69,7 @@ def test_banded_corpus_retry_while_first_attempt_alive(spark, tmp_path, monkeypa
     write_banded_corpus(rows, t, "run-1", params)
     _assert_current_files_exist(t)
     assert {r.doc_id for r in read_table(spark, t).collect()} == {1, 2}
+    _assert_committed_once(spark, t, "run-1", 2)
 
 
 def test_tokenizer_retry_while_first_attempt_alive(spark, tmp_path, monkeypatch):
@@ -72,6 +87,7 @@ def test_tokenizer_retry_while_first_attempt_alive(spark, tmp_path, monkeypatch)
     write_tokenizer_merges(spark, merges, t, "train-1", params)
     _assert_current_files_exist(t)
     assert read_tokenizer_merges(spark, t, expect_params=params) == merges
+    _assert_committed_once(spark, t, "train-1", 2)
 
 
 def test_site_line_stats_retry_while_first_attempt_alive(spark, tmp_path,
@@ -90,6 +106,29 @@ def test_site_line_stats_retry_while_first_attempt_alive(spark, tmp_path,
     st = {(r.site, r.line): r.cnt for r in read_table(spark, stats).collect()}
     assert st[("s", "shared")] == 2
     assert st[("s", None)] == 2
+    # (s, shared), (s, own1), (s, own2) and the (s, NULL) doc-count row
+    _assert_committed_once(spark, stats, "batch-0", 4)
+
+
+def test_compaction_raises_when_an_append_lands_inside_its_commit(
+        spark, tmp_path, monkeypatch):
+    """A REPLACE publishes only the files it rewrote, so an append that
+    lands between ``compact_table``'s read and its commit must make the
+    compaction raise, not vanish from the table."""
+    from red_seal_ocr_spark.sources.snapshot import commit_run, compact_table
+
+    t = str(tmp_path / "t")
+
+    def docs(*ids):
+        return spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+
+    commit_run(t, "a", docs(1))
+    commit_run(t, "b", docs(2))
+    _retry_inside_first_commit(monkeypatch, lambda: commit_run(t, "c", docs(3)))
+    with pytest.raises(RuntimeError, match="REPLACE of snapshot 1"):
+        compact_table(spark, t)
+    assert sorted(r.doc_id for r in read_table(spark, t).collect()) == [1, 2, 3]
+    assert [m["run_id"] for m in snapshot_chain(t)] == ["c", "b", "a"]
 
 
 def _calls(path):
@@ -102,8 +141,8 @@ def _calls(path):
                 yield owner, node
 
 
-def _sources():
-    for top in ("red_seal_ocr_spark", "jobs"):
+def _sources(tops=("red_seal_ocr_spark", "jobs")):
+    for top in tops:
         for path in sorted((ROOT / top).rglob("*.py")):
             yield path, path.relative_to(ROOT).as_posix()
 
@@ -139,4 +178,28 @@ def test_no_overwrite_writes_outside_plain_outputs():
                     and str(call.args[0].value).lower() == "overwrite"
                     and f"{rel}::{owner}" not in OVERWRITE_OK):
                 offenders.append(f"{rel}::{owner}:{call.lineno}")
+    assert offenders == []
+
+
+def test_replay_rule_lives_in_the_snapshot_module():
+    """"A run id commits once" is ``snapshot.commit_run``'s rule, checked
+    under the commit lock: no other function calls ``find_committed_run``
+    (``curate_job.main`` may, to skip starting Spark for a replay) and no
+    code reads a ``last_batch_id`` manifest field."""
+    offenders = []
+    for path, rel in _sources(("red_seal_ocr_spark", "jobs", "tools")):
+        tree = ast.parse(path.read_text(), str(path))
+        for top in tree.body:
+            where = f"{rel}::{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                name = (node.id if isinstance(node, ast.Name)
+                        else getattr(node, "attr", None)
+                        if isinstance(node, ast.Attribute)
+                        else node.value if isinstance(node, ast.Constant)
+                        else None)
+                if name == "last_batch_id" or (
+                        name == "find_committed_run"
+                        and rel != "red_seal_ocr_spark/sources/snapshot.py"
+                        and where != "jobs/curate_job.py::main"):
+                    offenders.append(f"{where}:{node.lineno}")
     assert offenders == []

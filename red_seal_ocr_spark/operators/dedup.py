@@ -667,11 +667,9 @@ def ingest_batch_lsh(
       no snapshot references; the replay stages under its own attempt
       directory and proceeds as a crash-free run.
     - *post-commit replay* (commit landed, ack lost) or a retry racing
-      a live attempt: the write returns the snapshot that committed the
-      run_id (``commit_run`` commits it once), and the candidate set is
-      computed from that snapshot's own files versus its parent's, as
-      for a first run.  Without this the batch's band rows double-append
-      and every later ingest's ``n_bands`` counts double.
+      a live attempt: ``commit_run`` commits the run_id once and returns
+      that snapshot, so band rows never double-append; the candidate set
+      is computed from its own files versus its parent's, as at first.
 
     This is the same manifest-pointer protocol the extraction
     pipeline's resume uses (:mod:`red_seal_ocr_spark.sources.snapshot`).

@@ -139,8 +139,8 @@ def commit_snapshot(table_dir: str, data_files: list[str],
                     lineage_files: list[str], run_id: str,
                     extra: dict | None = None,
                     lock_timeout_sec: float = 60.0,
-                    replace: bool | dict = False,
-                    once_per_run: bool = False) -> dict:
+                    replace: dict | None = None,
+                    once_per_run: int | None = None) -> dict:
     """Publish a new snapshot = parent files + this run's files (atomic).
 
     Concurrent committers are serialized by the commit lock
@@ -149,26 +149,27 @@ def commit_snapshot(table_dir: str, data_files: list[str],
     update) — the pointer rename stays atomic for readers.  On an object
     store this would be a conditional-put / swap-if-parent instead.
 
-    ``replace`` publishes a REWRITE snapshot: ``data_files`` is the
+    ``replace``, the manifest a rewrite was computed from (``{}`` for an
+    empty table), publishes a REWRITE snapshot: ``data_files`` is the
     complete new file list instead of parent+new (the compaction commit
-    shape — Iceberg's rewrite_data_files).  Given the manifest the
-    rewrite was computed from (``{}`` for an empty table), it raises
+    shape — Iceberg's rewrite_data_files).  It raises
     :class:`CommitConflict` and publishes nothing once another commit
-    has landed (swap-if-parent).  Lineage history is always carried
-    forward.
+    has landed since that base (swap-if-parent).  Lineage history is
+    always carried forward.
 
-    ``once_per_run`` (set by :func:`commit_run`): a ``run_id`` already on
-    the chain gets its manifest back, before the REPLACE base check.
+    ``once_per_run`` (set by :func:`commit_run`): the head id its check
+    saw, -1 if none; a ``run_id`` committed since returns that manifest
+    (the walk stops at that head), before the REPLACE base check.
     """
     table = Path(table_dir)
     table.mkdir(parents=True, exist_ok=True)
     with _commit_lock(table, lock_timeout_sec):
-        if once_per_run:
-            committed = find_committed_run(table_dir, run_id)
+        if once_per_run is not None:
+            committed = find_committed_run(table_dir, run_id, once_per_run)
             if committed is not None:
                 return committed
         parent = current_snapshot(table_dir) or {}
-        if (isinstance(replace, dict)
+        if (replace is not None
                 and replace.get("snapshot_id") != parent.get("snapshot_id")):
             raise CommitConflict(
                 f"{table_dir}: REPLACE of snapshot "
@@ -180,7 +181,7 @@ def commit_snapshot(table_dir: str, data_files: list[str],
             "parent_snapshot_id": parent.get("snapshot_id"),
             "run_id": run_id,
             "data_files": sorted(
-                ([] if replace is not False else parent.get("data_files", []))
+                ([] if replace is not None else parent.get("data_files", []))
                 + list(data_files)
             ),
             "lineage_files": sorted(
@@ -213,7 +214,7 @@ def run_attempt(run_id: str) -> str:
 
 
 def commit_run(table_dir: str, run_id: str, data, lineage=None,
-               extra: dict | None = None, replace: bool | dict = False) -> dict:
+               extra: dict | None = None, replace: dict | None = None) -> dict:
     """Stage ``data`` (and ``lineage``, a DataFrame, if given) under
     ``data/`` and ``_lineage/`` of a fresh :func:`run_attempt` directory
     and commit the written parts as ``run_id`` (:func:`commit_snapshot`,
@@ -225,6 +226,7 @@ def commit_run(table_dir: str, run_id: str, data, lineage=None,
     Zero-row parts are kept: a table whose parts are all empty still
     reads back with its schema.  A run id commits once (checked before
     any write and again under the lock): a replay gets its manifest."""
+    seen = (current_snapshot(table_dir) or {}).get("snapshot_id", -1)
     committed = find_committed_run(table_dir, run_id)
     if committed is not None:
         return committed
@@ -238,7 +240,7 @@ def commit_run(table_dir: str, run_id: str, data, lineage=None,
         lineage_files = list_run_files(lineage_dir)
     return commit_snapshot(table_dir, list_run_files(data_dir), lineage_files,
                            run_id, extra=extra, replace=replace,
-                           once_per_run=True)
+                           once_per_run=seen)
 
 
 def run_files(table_dir: str, manifest: dict,
@@ -276,25 +278,25 @@ def read_snapshot(table_dir: str, snapshot_id: int) -> dict | None:
     return json.loads(p.read_text())
 
 
-def find_committed_run(table_dir: str, run_id: str) -> dict | None:
+def find_committed_run(table_dir: str, run_id: str, after=-1) -> dict | None:
     """Manifest of the snapshot that committed ``run_id``, walking the
-    parent chain from the current snapshot (None if never committed).
+    parent chain from the current snapshot down to ``after`` (None if absent).
 
     This is the replay-idempotence primitive: an orchestrator retrying a
     batch whose previous attempt DID commit (commit landed, ack lost —
     the classic at-least-once window) must be detected under the commit
-    lock (``commit_snapshot(once_per_run=True)``), or the batch's rows
+    lock (``commit_snapshot(once_per_run=...)``), or the batch's rows
     double-append into permanent table state.  An expired run is not
     found."""
-    return next((m for m in snapshot_chain(table_dir)
+    return next((m for m in snapshot_chain(table_dir, after)
                  if m.get("run_id") == run_id), None)
 
 
-def snapshot_chain(table_dir: str):
+def snapshot_chain(table_dir: str, after: int = -1):
     """Manifests from the current snapshot back along the parent chain
-    (newest first; stops at the first expired parent)."""
+    (newest first; stops at the first expired parent or at ``after``)."""
     m = current_snapshot(table_dir)
-    while m is not None:
+    while m is not None and m["snapshot_id"] > after:
         yield m
         pid = m.get("parent_snapshot_id")
         m = None if pid is None else read_snapshot(table_dir, pid)

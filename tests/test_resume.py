@@ -570,7 +570,7 @@ def test_snapshot_diff_detect_changes(spark, tmp_path):
 
     # rewrite: id 1 unchanged, id 2 edited, id 3 added, in NEW files
     f2 = write_run("r2", [(1, "alpha"), (2, "beta EDITED"), (3, "gamma")])
-    commit_snapshot(table, f2, [], "r2", replace=True)
+    commit_snapshot(table, f2, [], "r2", replace=current_snapshot(table))
     s2 = current_snapshot(table)["snapshot_id"]
 
     d = snapshot_diff(spark, table, s1, s2, detect_changes=True)

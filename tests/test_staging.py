@@ -131,6 +131,31 @@ def test_compaction_raises_when_an_append_lands_inside_its_commit(
     assert [m["run_id"] for m in snapshot_chain(t)] == ["c", "b", "a"]
 
 
+def test_locked_replay_check_reads_only_commits_since_the_pre_check(
+        tmp_path, monkeypatch):
+    """``commit_run`` hands ``commit_snapshot`` the head its pre-check
+    saw; under the lock the replay check walks back only to that head,
+    so it costs the commits that landed since, not the table's
+    history."""
+    t = str(tmp_path / "t")
+    for i in range(5):
+        snapmod.commit_snapshot(t, [], [], f"run-{i}")
+    reads = []
+    real = snapmod.read_snapshot
+    monkeypatch.setattr(snapmod, "read_snapshot",
+                        lambda td, i: reads.append(i) or real(td, i))
+
+    # run-3 landed after head 2: the replay gets snapshot 3 back
+    assert snapmod.commit_snapshot(t, [], [], "run-3",
+                                   once_per_run=2)["snapshot_id"] == 3
+    assert reads == [3]
+    # run-0 is at or below head 4, where the pre-check already looked
+    reads.clear()
+    assert snapmod.commit_snapshot(t, [], [], "run-0",
+                                   once_per_run=4)["snapshot_id"] == 5
+    assert reads == []
+
+
 def _calls(path):
     """``(top-level definition, call node)`` for every call in ``path``."""
     tree = ast.parse(path.read_text(), str(path))

@@ -650,8 +650,8 @@ def ingest_batch_lsh(
 
     1. band ONLY the new batch and commit its band rows to the banded
        corpus (:func:`~red_seal_ocr_spark.sources.snapshot.
-       write_banded_corpus`, which validates that the table's recorded
-       lsh params match this call's);
+       write_banded_corpus`, whose commit checks under the commit lock
+       that the table's recorded lsh params match this call's);
     2. compute this batch's candidate pairs by joining the committed
        snapshot's own files (read back from parquet, so the join input
        is byte-identical to what the table will serve future batches)
@@ -668,8 +668,8 @@ def ingest_batch_lsh(
       directory and proceeds as a crash-free run.
     - *post-commit replay* (commit landed, ack lost) or a retry racing
       a live attempt: ``commit_run`` commits the run_id once and returns
-      that snapshot, so band rows never double-append; the candidate set
-      is computed from its own files versus its parent's, as at first.
+      that snapshot, so band rows never double-append; its candidates
+      are its own files versus its parent's (raising once that expired).
 
     This is the same manifest-pointer protocol the extraction
     pipeline's resume uses (:mod:`red_seal_ocr_spark.sources.snapshot`).

@@ -21,6 +21,7 @@ Layout::
                                                         metrics rows)
       _snapshots/snap-<n>.json
       _current                              (contains "snap-<n>.json")
+      _runs/<quoted run_id>.json            (its commit's header; kept)
       _commit.lock                          (while a commit runs: the
                                              owner record)
 
@@ -38,10 +39,18 @@ import time
 import uuid
 from contextlib import contextmanager
 from pathlib import Path
+from urllib.parse import quote
+
+# whole-table manifest keys: carried forward, never changed by an APPEND
+TABLE_PROPERTIES = ("lsh_params", "train_params")
 
 
 def _snap_dir(table_dir: str) -> Path:
     return Path(table_dir) / "_snapshots"
+
+
+def _load(path: Path) -> dict | None:
+    return json.loads(path.read_text()) if path.exists() else None
 
 
 def current_snapshot(table_dir: str) -> dict | None:
@@ -135,46 +144,76 @@ class CommitConflict(RuntimeError):
     """A REPLACE commit whose base snapshot is no longer the current one."""
 
 
+def _publish(path: Path, text: str) -> None:
+    """Atomically replace ``path`` (under the commit lock: one tmp name)."""
+    tmp = path.with_name(path.name + ".tmp")
+    tmp.write_text(text)
+    os.rename(tmp, path)
+
+
+def _run_marker(table_dir: str, run_id: str) -> Path:
+    return Path(table_dir) / "_runs" / f"{quote(run_id, safe='')}.json"
+
+
+def _record_run(table_dir: str, manifest: dict) -> None:
+    """Write ``manifest`` without its file lists as its run id's marker."""
+    marker = _run_marker(table_dir, manifest["run_id"])
+    marker.parent.mkdir(exist_ok=True)
+    _publish(marker, json.dumps({k: v for k, v in manifest.items()
+                                 if k not in ("data_files", "lineage_files")}))
+
+
 def commit_snapshot(table_dir: str, data_files: list[str],
                     lineage_files: list[str], run_id: str,
                     extra: dict | None = None,
                     lock_timeout_sec: float = 60.0,
                     replace: dict | None = None,
-                    once_per_run: int | None = None) -> dict:
+                    once_per_run: bool = False) -> dict:
     """Publish a new snapshot = parent files + this run's files (atomic).
 
-    Concurrent committers are serialized by the commit lock
-    (:func:`_commit_lock`): each commit reads the parent *inside* the
-    critical section, so two simultaneous appends both land (no lost
-    update) — the pointer rename stays atomic for readers.  On an object
-    store this would be a conditional-put / swap-if-parent instead.
+    Commits are serialized by the commit lock (:func:`_commit_lock`) and
+    read their parent inside it, so simultaneous appends both land; the
+    ``_current`` rename keeps readers atomic (an object store would use
+    a conditional put).
 
     ``replace``, the manifest a rewrite was computed from (``{}`` for an
-    empty table), publishes a REWRITE snapshot: ``data_files`` is the
-    complete new file list instead of parent+new (the compaction commit
-    shape — Iceberg's rewrite_data_files).  It raises
-    :class:`CommitConflict` and publishes nothing once another commit
-    has landed since that base (swap-if-parent).  Lineage history is
-    always carried forward.
+    empty table), makes ``data_files`` the complete new file list (Iceberg
+    ``rewrite_data_files``); if another commit has landed since that base
+    it raises :class:`CommitConflict`.  Lineage is always carried forward,
+    and so are the :data:`TABLE_PROPERTIES` ``extra`` leaves unset; an
+    APPEND changing one raises ``ValueError``.
 
-    ``once_per_run`` (set by :func:`commit_run`): the head id its check
-    saw, -1 if none; a ``run_id`` committed since returns that manifest
-    (the walk stops at that head), before the REPLACE base check.
+    ``once_per_run`` (set by :func:`commit_run`): an already committed
+    ``run_id`` returns :func:`find_committed_run`, before the REPLACE
+    base check.  The ``_runs/`` marker is written after the ``_current``
+    flip; a commit that finds its parent's missing (this one was killed
+    in between) writes every missing marker on the chain.
     """
     table = Path(table_dir)
     table.mkdir(parents=True, exist_ok=True)
     with _commit_lock(table, lock_timeout_sec):
-        if once_per_run is not None:
-            committed = find_committed_run(table_dir, run_id, once_per_run)
+        parent = current_snapshot(table_dir) or {}
+        if parent and not _run_marker(table_dir, parent["run_id"]).exists():
+            for m in snapshot_chain(table_dir):  # or a table from before _runs/
+                if not _run_marker(table_dir, m["run_id"]).exists():
+                    _record_run(table_dir, m)
+        if once_per_run:
+            committed = find_committed_run(table_dir, run_id)
             if committed is not None:
                 return committed
-        parent = current_snapshot(table_dir) or {}
         if (replace is not None
                 and replace.get("snapshot_id") != parent.get("snapshot_id")):
             raise CommitConflict(
                 f"{table_dir}: REPLACE of snapshot "
                 f"{replace.get('snapshot_id')} by run {run_id}, but snapshot "
                 f"{parent.get('snapshot_id')} is current")
+        extra = {**{k: parent[k] for k in TABLE_PROPERTIES if k in parent},
+                 **(extra or {})}
+        for k in TABLE_PROPERTIES:
+            if replace is None and parent and extra.get(k) != parent.get(k):
+                raise ValueError(
+                    f"{table_dir} has {k} {parent.get(k)}; refusing to "
+                    f"append rows committed with {extra[k]}")
         snap_id = parent.get("snapshot_id", -1) + 1
         manifest = {
             "snapshot_id": snap_id,
@@ -187,15 +226,14 @@ def commit_snapshot(table_dir: str, data_files: list[str],
             "lineage_files": sorted(
                 parent.get("lineage_files", []) + list(lineage_files)
             ),
-            **(extra or {}),
+            **extra,
         }
         sd = _snap_dir(table_dir)
         sd.mkdir(parents=True, exist_ok=True)
         name = f"snap-{snap_id}.json"
         (sd / name).write_text(json.dumps(manifest, indent=1))
-        tmp = table / "_current.tmp"  # one name: a killed commit's is reused
-        tmp.write_text(name)
-        os.rename(tmp, table / "_current")  # atomic publish
+        _publish(table / "_current", name)
+        _record_run(table_dir, manifest)
         return manifest
 
 
@@ -226,7 +264,6 @@ def commit_run(table_dir: str, run_id: str, data, lineage=None,
     Zero-row parts are kept: a table whose parts are all empty still
     reads back with its schema.  A run id commits once (checked before
     any write and again under the lock): a replay gets its manifest."""
-    seen = (current_snapshot(table_dir) or {}).get("snapshot_id", -1)
     committed = find_committed_run(table_dir, run_id)
     if committed is not None:
         return committed
@@ -240,25 +277,30 @@ def commit_run(table_dir: str, run_id: str, data, lineage=None,
         lineage_files = list_run_files(lineage_dir)
     return commit_snapshot(table_dir, list_run_files(data_dir), lineage_files,
                            run_id, extra=extra, replace=replace,
-                           once_per_run=seen)
+                           once_per_run=True)
 
 
 def run_files(table_dir: str, manifest: dict,
               kind: str = "data_files") -> tuple[list[str], list[str]]:
     """``(parent's files, files manifest added)`` of one kind: what the
-    committing run itself wrote, and what it committed on top of."""
+    committing run itself wrote, and what it committed on top of.
+    Raises ``ValueError`` once the parent has expired."""
     pid = manifest.get("parent_snapshot_id")
-    parent = read_snapshot(table_dir, pid) if pid is not None else None
-    before = parent[kind] if parent else []
-    return before, sorted(set(manifest[kind]) - set(before))
+    parent = {kind: []} if pid is None else read_snapshot(table_dir, pid)
+    if parent is None or kind not in manifest:
+        gone = pid if parent is None else manifest["snapshot_id"]
+        raise ValueError(f"{table_dir}: snapshot {gone} has expired, so the "
+                         f"files run {manifest['run_id']} added are unknown")
+    return parent[kind], sorted(set(manifest[kind]) - set(parent[kind]))
 
 
 def drop_empty_files(files: list[str]) -> list[str]:
     """Drop zero-row part files (Spark emits them for empty write
     partitions) before ``run_extract`` commits: they carry no data, and
     dropping them keeps its manifest <-> lineage invariant exact (every
-    committed data file has a lineage row).  Deletes them and returns the rest.  Footer-only check,
-    O(files) driver-side per commit — bounded per batch at any scale."""
+    committed data file has a lineage row).  Deletes them and returns the
+    rest.  Footer-only check, O(files) driver-side per commit — bounded
+    per batch at any scale."""
     import pyarrow.parquet as pq
 
     kept = []
@@ -272,31 +314,26 @@ def drop_empty_files(files: list[str]) -> list[str]:
 
 def read_snapshot(table_dir: str, snapshot_id: int) -> dict | None:
     """Manifest of a specific historical snapshot (time travel)."""
-    p = _snap_dir(table_dir) / f"snap-{snapshot_id}.json"
-    if not p.exists():
-        return None
-    return json.loads(p.read_text())
+    return _load(_snap_dir(table_dir) / f"snap-{snapshot_id}.json")
 
 
-def find_committed_run(table_dir: str, run_id: str, after=-1) -> dict | None:
-    """Manifest of the snapshot that committed ``run_id``, walking the
-    parent chain from the current snapshot down to ``after`` (None if absent).
-
-    This is the replay-idempotence primitive: an orchestrator retrying a
-    batch whose previous attempt DID commit (commit landed, ack lost —
-    the classic at-least-once window) must be detected under the commit
-    lock (``commit_snapshot(once_per_run=...)``), or the batch's rows
-    double-append into permanent table state.  An expired run is not
-    found."""
-    return next((m for m in snapshot_chain(table_dir, after)
-                 if m.get("run_id") == run_id), None)
+def find_committed_run(table_dir: str, run_id: str) -> dict | None:
+    """Manifest of the latest snapshot that committed ``run_id`` (None if
+    none did): one ``_runs/`` marker read, whatever the history; once
+    that snapshot has expired, the marker's header (the manifest less
+    its file lists).  The replay-idempotence primitive: a retried batch
+    whose earlier attempt DID commit (ack lost) must be caught under the
+    commit lock (``commit_snapshot(once_per_run=True)``), or its rows
+    double-append."""
+    header = _load(_run_marker(table_dir, run_id))
+    return header and (read_snapshot(table_dir, header["snapshot_id"]) or header)
 
 
-def snapshot_chain(table_dir: str, after: int = -1):
+def snapshot_chain(table_dir: str):
     """Manifests from the current snapshot back along the parent chain
-    (newest first; stops at the first expired parent or at ``after``)."""
+    (newest first; stops at the first expired parent)."""
     m = current_snapshot(table_dir)
-    while m is not None and m["snapshot_id"] > after:
+    while m is not None:
         yield m
         pid = m.get("parent_snapshot_id")
         m = None if pid is None else read_snapshot(table_dir, pid)
@@ -333,38 +370,35 @@ def read_table(spark, table_dir: str, lineage: bool = False,
 # ---------------------------------------------------------------------------
 
 
+def _checked_current(table_dir: str, key: str, expect: dict | None):
+    """The current manifest (None for an empty table); ``ValueError`` if
+    ``expect`` is given and is not its ``key`` table property."""
+    snap = current_snapshot(table_dir)
+    if snap is not None and expect is not None and snap.get(key) != dict(expect):
+        raise ValueError(
+            f"{table_dir}: {key} {snap.get(key)} != expected {dict(expect)}")
+    return snap
+
+
 def write_banded_corpus(banded, table_dir: str, run_id: str,
                         lsh_params: dict) -> dict:
     """Append one batch's LSH band rows ``(id, band, bucket)`` to the
-    banded-corpus snapshot table and commit atomically.
+    banded-corpus snapshot table through :func:`commit_run`.
 
     This is the persistence layer :func:`~red_seal_ocr_spark.operators.
-    dedup.incremental_lsh_candidates` documents: the corpus side's band
-    rows are computed ONCE per document (when its batch is ingested) and
-    every later ingest joins against the stored rows instead of
-    re-hashing corpus text.  ``lsh_params`` (num_hashes/bands/shingle_k
-    ...) is recorded in the manifest and must match the table's existing
-    params — band rows from different hash families must never mix.
+    dedup.incremental_lsh_candidates` documents: band rows are computed
+    ONCE per document, and every later ingest joins against the stored
+    rows instead of re-hashing corpus text.  ``lsh_params``
+    (num_hashes/bands/shingle_k ...) is a :data:`TABLE_PROPERTIES` key:
+    under the commit lock, an append under other params raises, so band
+    rows from two hash families never mix.
 
-    Rows are repartitioned by (band, bucket) before the write so the
-    parquet layout is co-clustered with the candidate join's shuffle key;
-    at cluster scale this would be ``bucketBy(band, bucket)`` on a real
-    catalog table, letting the ingest join prune to its own buckets.
-    Staging and commit go through :func:`commit_run`.  A crash after
-    the parquet write but before the commit leaves orphan files no
-    snapshot references, and re-running the same ingest batch is the
-    resume story (property-tested in test_dedup_similarity): the retry
-    stages under its own attempt directory.  A replay of a committed
-    ``run_id`` (or one racing a live attempt) gets that snapshot back
-    untouched (no double-append): :func:`commit_run` commits it once.
+    Rows are repartitioned by (band, bucket), co-clustering the parquet
+    layout with the candidate join's shuffle key (``bucketBy`` on a real
+    catalog).  A crash before the commit leaves orphan files no snapshot
+    references, and the rerun stages under its own attempt directory; a
+    replay of a committed ``run_id`` gets that snapshot back untouched.
     """
-    cur = current_snapshot(table_dir)
-    if cur is not None and cur.get("lsh_params") != dict(lsh_params):
-        raise ValueError(
-            f"banded corpus at {table_dir} has lsh_params "
-            f"{cur.get('lsh_params')}; refusing to append rows hashed "
-            f"with {dict(lsh_params)}"
-        )
     return commit_run(table_dir, run_id, banded.repartition("band", "bucket"),
                       extra={"lsh_params": dict(lsh_params)})
 
@@ -374,42 +408,27 @@ def read_banded_corpus(spark, table_dir: str,
     """DataFrame over the committed banded corpus (None for an empty
     table).  ``expect_params`` guards against joining band rows produced
     under a different hash family — a silent-recall killer."""
-    snap = current_snapshot(table_dir)
-    if snap is None:
-        return None
-    if expect_params is not None and snap.get("lsh_params") != dict(expect_params):
-        raise ValueError(
-            f"banded corpus lsh_params {snap.get('lsh_params')} != "
-            f"expected {dict(expect_params)}"
-        )
-    return read_table(spark, table_dir)
+    snap = _checked_current(table_dir, "lsh_params", expect_params)
+    return snap and read_table(spark, table_dir, snapshot_id=snap["snapshot_id"])
 
 
 def write_tokenizer_merges(spark, merges: list, table_dir: str,
                            run_id: str, train_params: dict) -> dict:
-    """Persist a trained BPE merge list as a snapshot-committed artifact
-    table ``(rank, a, b)`` — the tokenizer is corpus-derived state with
-    exactly the banded-corpus lifecycle: trained once per corpus
-    snapshot, reused by every later encode job, resumable.
+    """Persist a trained BPE merge list as the artifact table
+    ``(rank, a, b)``: corpus-derived state with the banded corpus's
+    lifecycle (trained once per corpus snapshot, reused by every encode
+    job, resumable; a replayed ``run_id`` returns its snapshot).
 
-    Same idempotence contract as :func:`write_banded_corpus`: replaying
-    a committed ``run_id`` returns that snapshot untouched (encoders
-    keep a stable artifact), and a pre-commit crash leaves orphans the
-    retry never references.  ``train_params`` (n_merges, corpus
-    snapshot id, tokenization...) is recorded so an encode job can
-    refuse a merge list trained under different rules — mixing
-    tokenizers is the silent-corruption analog of mixing LSH hash
-    families.
+    A retrain REPLACEs the whole list: an append would interleave two
+    trainings' ranks.  ``train_params`` (n_merges, corpus snapshot id,
+    tokenization ...) is a :data:`TABLE_PROPERTIES` key, so an encode
+    job can refuse a merge list trained under other rules.
     """
     base = current_snapshot(table_dir) or {}
     df = spark.createDataFrame(
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     )
-    # REPLACE: the tokenizer is a WHOLE-artifact table — a retrain
-    # supersedes the previous merge list entirely (an appending commit
-    # would interleave two trainings' rows with duplicate ranks, the
-    # silent-corruption case the docstring warns about)
     return commit_run(table_dir, run_id, df.coalesce(1),
                       extra={"train_params": dict(train_params)}, replace=base)
 
@@ -418,16 +437,11 @@ def read_tokenizer_merges(spark, table_dir: str,
                           expect_params: dict | None = None) -> list | None:
     """The committed merge list, rank-ordered (None for an empty table).
     ``expect_params`` must match the training manifest exactly."""
-    snap = current_snapshot(table_dir)
+    snap = _checked_current(table_dir, "train_params", expect_params)
     if snap is None:
         return None
-    if expect_params is not None and snap.get("train_params") != dict(expect_params):
-        raise ValueError(
-            f"tokenizer train_params {snap.get('train_params')} != "
-            f"expected {dict(expect_params)}"
-        )
-    rows = read_table(spark, table_dir).orderBy("rank").collect()
-    return [(r.a, r.b) for r in rows]
+    rows = read_table(spark, table_dir, snapshot_id=snap["snapshot_id"])
+    return [(r.a, r.b) for r in rows.orderBy("rank").collect()]
 
 
 # ---------------------------------------------------------------------------
@@ -440,16 +454,13 @@ def compact_table(spark, table_dir: str,
     """Rewrite the current snapshot's data files into ~target-sized files
     and publish a REPLACE snapshot (Iceberg ``rewrite_data_files``).
 
-    At 10^12-document scale, incremental/batched commits accumulate many
-    small part files; scans then pay per-file open cost and lose
-    ``maxPartitionBytes`` packing.  Compaction is a pure rewrite: row
-    content is untouched (verified by test content-hash), historical
-    snapshots still reference the pre-compaction files (time travel keeps
-    working) until :func:`expire_snapshots` reclaims them.
-
-    Returns the new manifest.  No-op (returns the current manifest) if
-    the table is empty.  Raises :class:`CommitConflict` if a commit
-    lands between the read and the commit.
+    Batched commits accumulate small part files, and scans pay a file
+    open for each.  Compaction is a pure rewrite: rows and table
+    properties are unchanged, and older snapshots keep the pre-compaction
+    files (time travel works) until :func:`expire_snapshots` reclaims
+    them.  Returns the new manifest (the current one, or ``{}``, for a
+    table without data); raises :class:`CommitConflict` if a commit lands
+    after the read.
     """
     snap = current_snapshot(table_dir)
     if snap is None or not snap["data_files"]:
@@ -468,15 +479,14 @@ def compact_table(spark, table_dir: str,
 def expire_snapshots(table_dir: str, keep_last: int = 2,
                      lock_timeout_sec: float = 60.0) -> dict:
     """Expire all but the newest ``keep_last`` snapshots of the chain
-    from ``_current`` and delete data / lineage files no retained
-    snapshot references (Iceberg ``expire_snapshots`` semantics: the
-    current snapshot is always retained; time travel to an expired id
-    fails; shared files survive).
+    from ``_current`` and delete the data / lineage files no kept
+    snapshot references (Iceberg ``expire_snapshots``: time travel to an
+    expired id fails, shared files survive).  The ``_runs/`` markers
+    stay, so an expired run id still counts as committed.
 
-    Runs under the commit lock so a concurrent commit can't publish a
-    snapshot referencing files being deleted.  A manifest above the
-    current id was left by a commit killed before its ``_current`` flip
-    (possibly half-written); it is deleted.  Returns
+    Runs under the commit lock, so no commit publishes a file being
+    deleted, and deletes any manifest above the current id (left, maybe
+    torn, by a commit killed before its ``_current`` flip).  Returns
     ``{"expired": [ids], "deleted_files": n, "kept": [ids]}``.
     """
     if keep_last < 1:

@@ -21,7 +21,9 @@ count because a file-source micro-batch delivers each document exactly
 once.  Replayed batches (foreachBatch is at-least-once after a crash)
 would double-count, so every commit's run id is ``batch-<batch_id>`` and
 ``snapshot.commit_run`` commits a run id once: a replayed batch merges
-nothing — stats updates are exactly-once.
+nothing — stats updates are exactly-once.  That rule reads the ``_runs/``
+index, not the history, so both tables expire to :data:`KEEP_LAST`
+snapshots after each commit: per-batch cost and snapshot count stay flat.
 
 Scale shape: the stats table holds distinct (site, line) pairs — the
 aggregated vocabulary, orders of magnitude smaller than the corpus; the
@@ -48,6 +50,8 @@ from ..operators.html_extract import (
 )
 from ..sources import snapshot as snap
 
+KEEP_LAST = 1  # snapshots a streaming table keeps after each commit
+
 
 def _merge_batch_stats(
     spark: SparkSession,
@@ -67,7 +71,8 @@ def _merge_batch_stats(
     SAME batch_id (the at-least-once window this module documents); the
     replay stages under its own attempt directory, so the dead attempt's
     files stay orphans.  The merge REPLACEs the snapshot it read
-    (``snapshot.CommitConflict`` if another commit landed)."""
+    (``snapshot.CommitConflict`` if another commit landed); older
+    versions expire."""
     cur = snap.current_snapshot(stats_dir)
     old = cur and snap.read_table(spark, stats_dir,
                                   snapshot_id=cur["snapshot_id"])
@@ -80,6 +85,7 @@ def _merge_batch_stats(
     )
     snap.commit_run(stats_dir, f"batch-{batch_id}", merged,
                     replace=cur or {})
+    snap.expire_snapshots(stats_dir, KEEP_LAST)
     return snap.read_table(spark, stats_dir)
 
 
@@ -133,6 +139,7 @@ def run_site_strip_stream(
                 id_col=id_col, site_col=site_col, text_col=text_col,
             )
             snap.commit_run(table_dir, f"batch-{batch_id}", stripped)
+            snap.expire_snapshots(table_dir, KEEP_LAST)
         finally:
             batch_df.unpersist()
 

@@ -895,6 +895,25 @@ def test_banded_corpus_param_mismatch_rejected(spark, tmp_path):
         )
 
 
+def test_banded_corpus_survives_compaction(spark, tmp_path):
+    """``compact_table`` carries the table's ``lsh_params`` forward: a
+    later ingest and a checked read both still accept the corpus."""
+    from red_seal_ocr_spark.operators.dedup import ingest_batch_lsh
+    from red_seal_ocr_spark.sources.snapshot import (
+        compact_table,
+        read_banded_corpus,
+    )
+
+    b1, b2 = _ingest_batches(spark)
+    t = str(tmp_path / "banded")
+    ingest_batch_lsh(spark, b1, t)
+    params = {"num_hashes": 32, "bands": 8, "shingle_k": 3, "id_col": "doc_id"}
+    assert compact_table(spark, t)["lsh_params"] == params
+    pairs = {(r.a_id, r.b_id) for r in ingest_batch_lsh(spark, b2, t).collect()}
+    assert {(10, 1), (10, 2), (11, 1), (11, 2), (10, 11)} <= pairs
+    assert read_banded_corpus(spark, t, expect_params=params).count() > 0
+
+
 def test_quantize_embeddings_codes_and_zero_vector(spark):
     from red_seal_ocr_spark.operators.similarity import quantize_embeddings
 

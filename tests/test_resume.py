@@ -184,7 +184,8 @@ def test_dead_owner_commit_lock_is_broken(tmp_path):
     m = commit_snapshot(str(table), ["file-0"], [], "run-0", lock_timeout_sec=0.2)
     assert m["snapshot_id"] == 0
     assert not lock.exists()
-    assert sorted(p.name for p in table.iterdir()) == ["_current", "_snapshots"]
+    assert sorted(p.name for p in table.iterdir()) == [
+        "_current", "_runs", "_snapshots"]
 
 
 def test_commit_lock_stress_with_owners_killed_inside(tmp_path):
@@ -220,7 +221,7 @@ def test_commit_lock_stress_with_owners_killed_inside(tmp_path):
     assert sorted(cur["data_files"]) == sorted(expected)
     assert cur["snapshot_id"] == len(expected) - 1
     assert {p.name for p in table.iterdir()} <= {
-        "_current", "_snapshots", "_commit.lock"}
+        "_current", "_runs", "_snapshots", "_commit.lock"}
 
 
 def test_many_sequential_commits_and_time_travel(spark, tmp_path):

@@ -7,6 +7,7 @@ a snapshot table's files or keeps its own replay rule."""
 
 import ast
 import os
+import shutil
 from pathlib import Path
 
 import pytest
@@ -131,29 +132,96 @@ def test_compaction_raises_when_an_append_lands_inside_its_commit(
     assert [m["run_id"] for m in snapshot_chain(t)] == ["c", "b", "a"]
 
 
-def test_locked_replay_check_reads_only_commits_since_the_pre_check(
-        tmp_path, monkeypatch):
-    """``commit_run`` hands ``commit_snapshot`` the head its pre-check
-    saw; under the lock the replay check walks back only to that head,
-    so it costs the commits that landed since, not the table's
-    history."""
+@pytest.mark.parametrize("n", [10, 1000])
+def test_replay_check_reads_only_the_manifest_its_marker_names(
+        tmp_path, monkeypatch, n):
+    """The replay check is one ``_runs/`` marker read plus the manifest
+    the marker names, however long the history: under the lock a commit
+    reads its parent and nothing else of the chain."""
     t = str(tmp_path / "t")
-    for i in range(5):
+    for i in range(n):
         snapmod.commit_snapshot(t, [], [], f"run-{i}")
     reads = []
-    real = snapmod.read_snapshot
-    monkeypatch.setattr(snapmod, "read_snapshot",
-                        lambda td, i: reads.append(i) or real(td, i))
+    real = Path.read_text
+    monkeypatch.setattr(Path, "read_text",
+                        lambda self, *a, **k: reads.append(self.name)
+                        or real(self, *a, **k))
 
-    # run-3 landed after head 2: the replay gets snapshot 3 back
-    assert snapmod.commit_snapshot(t, [], [], "run-3",
-                                   once_per_run=2)["snapshot_id"] == 3
-    assert reads == [3]
-    # run-0 is at or below head 4, where the pre-check already looked
+    assert snapmod.find_committed_run(t, "run-3")["snapshot_id"] == 3
+    assert reads == ["run-3.json", "snap-3.json"]
     reads.clear()
-    assert snapmod.commit_snapshot(t, [], [], "run-0",
-                                   once_per_run=4)["snapshot_id"] == 5
+    assert snapmod.find_committed_run(t, "absent") is None
     assert reads == []
+    # a replay under the lock: the parent, the marker, its manifest
+    reads.clear()
+    assert snapmod.commit_snapshot(t, [], [], "run-3",
+                                   once_per_run=True)["snapshot_id"] == 3
+    assert reads == ["_current", f"snap-{n - 1}.json", "run-3.json",
+                     "snap-3.json"]
+
+
+def test_commit_indexes_a_table_written_before_the_run_index(tmp_path):
+    """A table whose commits left no ``_runs/`` markers gets them all on
+    its next commit, so none of its run ids commits again."""
+    t = str(tmp_path / "t")
+    for i in range(3):
+        snapmod.commit_snapshot(t, [], [], f"run-{i}")
+    shutil.rmtree(Path(t) / "_runs")
+    assert snapmod.commit_snapshot(t, [], [], "run-0",
+                                   once_per_run=True)["snapshot_id"] == 0
+    assert sorted(os.listdir(Path(t) / "_runs")) == [
+        "run-0.json", "run-1.json", "run-2.json"]
+
+
+def test_replay_after_expiry_returns_the_original_commit(spark, tmp_path):
+    """A run id stays committed after ``expire_snapshots`` drops its
+    snapshot: the replay gets the original snapshot id, run id and
+    extra back and adds no rows."""
+    from red_seal_ocr_spark.sources.snapshot import commit_run, expire_snapshots
+
+    t = str(tmp_path / "t")
+    for i in range(3):
+        commit_run(t, f"r{i}", spark.createDataFrame([(i,)], "doc_id bigint"),
+                   extra={"job": f"job-{i}"})
+    assert expire_snapshots(t, keep_last=1)["expired"] == [0, 1]
+    m = commit_run(t, "r0", spark.createDataFrame([(9,)], "doc_id bigint"),
+                   extra={"job": "again"})
+    assert (m["snapshot_id"], m["run_id"], m["job"]) == (0, "r0", "job-0")
+    assert current_snapshot(t)["snapshot_id"] == 2
+    assert sorted(r.doc_id for r in read_table(spark, t).collect()) == [0, 1, 2]
+
+
+def test_params_race_commits_no_mixed_band_rows(spark, tmp_path, monkeypatch):
+    """An ingest under other ``lsh_params`` that commits inside this
+    ingest's commit makes this one raise under the lock: the table holds
+    one hash family's band rows."""
+    from red_seal_ocr_spark.sources.snapshot import write_banded_corpus
+
+    t = str(tmp_path / "banded")
+    rows = spark.createDataFrame([(1, 0, 5), (2, 1, 7)],
+                                 "doc_id bigint, band int, bucket long")
+    p32 = {"num_hashes": 32, "bands": 8, "shingle_k": 3, "id_col": "doc_id"}
+    p16 = {**p32, "num_hashes": 16, "bands": 4}
+    _retry_inside_first_commit(
+        monkeypatch, lambda: write_banded_corpus(rows, t, "ingest-16", p16))
+    with pytest.raises(ValueError, match="lsh_params .*refusing to append"):
+        write_banded_corpus(rows, t, "ingest-32", p32)
+    assert [m["run_id"] for m in snapshot_chain(t)] == ["ingest-16"]
+    assert current_snapshot(t)["lsh_params"] == p16
+    assert read_table(spark, t).count() == 2
+
+
+def test_run_files_raises_once_the_parent_has_expired(tmp_path):
+    """Without its parent a commit's own files are unknown: ``run_files``
+    raises naming the expired snapshot instead of calling every file of
+    the table the run's own."""
+    t = str(tmp_path / "t")
+    for i in range(3):
+        snapmod.commit_snapshot(t, [f"{t}/f{i}a", f"{t}/f{i}b"], [],
+                                f"run-{i}")
+    snapmod.expire_snapshots(t, keep_last=1)
+    with pytest.raises(ValueError, match="snapshot 1 has expired"):
+        snapmod.run_files(t, current_snapshot(t))
 
 
 def _calls(path):

@@ -3,13 +3,14 @@
 NOT the driver contract — ``bench.py`` stays frozen.  This harness exists
 for the optimization loop: time any subset of declared queries in one warm
 session with the noop sink, optionally capture ``explain("formatted")``
-per query into a directory (plans/r07/...), repeat runs for noise.
+per query into a directory (a scratch one: the dumps are not kept in the
+repository), repeat runs for noise.
 
 Usage::
 
     python bench_extra.py --sf-dir /root/testdata/sf1.0 \
         --queries q33d_dsir_weights,q18b_quantized_ann --repeats 3 \
-        --explain-dir plans/r07 --explain-suffix _before
+        --explain-dir /tmp/plans --explain-suffix _before
 
     python bench_extra.py --all --repeats 1          # full sweep, timings only
 """

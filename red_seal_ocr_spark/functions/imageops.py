@@ -147,26 +147,18 @@ def red_mask(
     return in_h & (s >= sat_min) & (v >= val_min)
 
 
-_MIN_DELTA_LUTS: dict[int, np.ndarray] = {}
-
-
+@functools.cache
 def _min_delta_lut(sat_min: int) -> np.ndarray:
     """Per-V smallest delta with floor(255*delta/v + 0.5) >= sat_min
     (at v == 0: 0 when sat_min == 0, else 1 > v, which nothing passes)."""
-    lut = _MIN_DELTA_LUTS.get(sat_min)
-    if lut is None:
-        v = np.arange(256, dtype=np.float64)
-        d = np.arange(256, dtype=np.float64)
-        s = np.floor(255.0 * d[None, :] / np.maximum(v[:, None], 1e-9) + 0.5)
-        ok = s >= sat_min
-        lut = np.where(ok.any(axis=1), ok.argmax(axis=1), 255).astype(np.uint8)
-        _MIN_DELTA_LUTS[sat_min] = lut
-    return lut
+    v = np.arange(256, dtype=np.float64)
+    d = np.arange(256, dtype=np.float64)
+    s = np.floor(255.0 * d[None, :] / np.maximum(v[:, None], 1e-9) + 0.5)
+    ok = s >= sat_min
+    return np.where(ok.any(axis=1), ok.argmax(axis=1), 255).astype(np.uint8)
 
 
-_MAX_MIN_LUTS: dict[tuple[int, int], np.ndarray] = {}
-
-
+@functools.cache
 def _max_min_lut(sat_min: int, val_min: int) -> np.ndarray:
     """LUT[v] = largest channel minimum ``mn`` passing both the S and V
     thresholds given max-channel value v, i.e. the S/V test collapses
@@ -178,14 +170,10 @@ def _max_min_lut(sat_min: int, val_min: int) -> np.ndarray:
     with -1 when v < val_min or min_delta[v] > v (no pixel can pass).
     int16, so the bound of r = 255 at sat_min = 0 (255) and "none" (-1)
     both fit."""
-    key = (sat_min, val_min)
-    lut = _MAX_MIN_LUTS.get(key)
-    if lut is None:
-        md = _min_delta_lut(sat_min).astype(np.int16)
-        v = np.arange(256, dtype=np.int16)
-        lut = v - md
-        lut[(v < val_min) | (md > v)] = -1
-        _MAX_MIN_LUTS[key] = lut
+    md = _min_delta_lut(sat_min).astype(np.int16)
+    v = np.arange(256, dtype=np.int16)
+    lut = v - md
+    lut[(v < val_min) | (md > v)] = -1
     return lut
 
 

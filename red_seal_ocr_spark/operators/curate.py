@@ -35,7 +35,6 @@ def curate_documents(
     keep_langs: tuple[str, ...] | None = None,
     min_quality_pct: int = 40,
     near_dup_jaccard_pct: int = 80,
-    cache_intermediates: bool = True,
     site_template_col: str | None = None,
     max_surprisal_milli: int | None = None,
     require_gopher_pass: bool = False,
@@ -46,11 +45,11 @@ def curate_documents(
     columns attached.  ``funnel``: one row per stage with documents
     remaining after it (the curation report).
 
-    ``cache_intermediates`` persists the stage boundaries so the funnel
-    counts and the multi-use candidate set don't recompute the scoring /
-    minhash expressions (at production scale you would instead commit
-    each stage to a table and resume between them — the snapshot layer
-    exists for exactly that).
+    The stage boundaries are cached, so the funnel counts and the
+    multi-use candidate set don't recompute the scoring / minhash
+    expressions (at production scale you would instead commit each
+    stage to a table and resume between them — the snapshot layer exists
+    for exactly that).
 
     ``site_template_col`` (opt-in) names a site-key column and engages
     :func:`html_extract.site_template_strip` as stage 0: shared nav /
@@ -89,9 +88,7 @@ def curate_documents(
             .join(stripped, on=id_col)
             .withColumnRenamed("main_text", text_col)
         )
-    scored = quality_score(language_id(docs, text_col), text_col)
-    if cache_intermediates:
-        scored = scored.cache()
+    scored = quality_score(language_id(docs, text_col), text_col).cache()
 
     lang_pred = (
         F.col("pred_lang").isin(*keep_langs) if keep_langs else F.lit(True)
@@ -115,9 +112,8 @@ def curate_documents(
                 )
             )
             .drop("surprisal_milli")
+            .cache()
         )
-        if cache_intermediates:
-            stage2 = stage2.cache()
         lm_stage = stage2
 
     gopher_stage = None
@@ -128,9 +124,7 @@ def curate_documents(
         # derive the added columns instead of hardcoding the flag list —
         # a new rule column must not silently leak into kept_docs
         added = [c for c in flagged.columns if c not in stage2.columns]
-        stage2 = flagged.filter(F.col("gopher_pass")).drop(*added)
-        if cache_intermediates:
-            stage2 = stage2.cache()
+        stage2 = flagged.filter(F.col("gopher_pass")).drop(*added).cache()
         gopher_stage = stage2
 
     # exact dedup: drop all but the min-id member of each fingerprint group
@@ -138,9 +132,7 @@ def curate_documents(
         exact_dedup(stage2, id_col, text_col)
         .select(F.explode(F.expr("slice(doc_ids, 2, size(doc_ids))")).alias(id_col))
     )
-    stage3 = stage2.join(exact_losers, on=id_col, how="left_anti")
-    if cache_intermediates:
-        stage3 = stage3.cache()
+    stage3 = stage2.join(exact_losers, on=id_col, how="left_anti").cache()
 
     # near-dup: LSH candidates -> exact Jaccard verify (per candidate pair
     # ONLY — two equi-joins attach the texts; never an all-pairs join over

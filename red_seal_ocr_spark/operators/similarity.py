@@ -324,7 +324,8 @@ def ivf_topk(
 
 # above this many plan literals (n_bits * dim), the expression form's own
 # PLAN becomes the bottleneck: measured 102.8 s of analysis alone at
-# 256 x 768 vs 0.71 s total for the GEMM form (BENCH/banding_bench.json)
+# 256 x 768 vs 0.71 s total for the GEMM form (tools/banding_bench.py ->
+# BENCH/banding_bench.json)
 _EXPR_LITERAL_BUDGET = 16384
 
 
@@ -604,7 +605,6 @@ def semantic_dedup(
     seed: int = 42,
     centroids=None,
     max_cluster_size: int | None = None,
-    cache_assignments: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
     at web-scale through semantic deduplication", arXiv:2303.09540):
@@ -641,13 +641,11 @@ def semantic_dedup(
         centers = np.asarray(centroids, dtype=np.float64)
     spark = vectors.sparkSession
     assign1 = nearest_lists_udf(spark, centers, 1)
+    # cached: referenced by the a-side, b-side AND the final keep-join;
+    # without persistence the pandas-UDF GEMM assignment runs 3x
     assigned = vec.select(
         "_id", "_emb", assign1(F.col("_emb"))[0].alias("list_id")
-    )
-    if cache_assignments:
-        # referenced by the a-side, b-side AND the final keep-join:
-        # without persistence the pandas-UDF GEMM assignment runs 3x
-        assigned = assigned.cache()
+    ).cache()
     pair_src = assigned
     if max_cluster_size is not None:
         from .dedup import drop_hot_buckets

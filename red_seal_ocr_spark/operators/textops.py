@@ -67,13 +67,6 @@ def _argmax_lang(scores_col):
     return F.when(best <= 0, F.lit("und")).otherwise(pred)
 
 
-def predict_lang(text_col):
-    """Single-expression variant (scores inlined); prefer
-    :func:`language_id` in plans — it materializes the scores struct once
-    instead of re-inlining the tokenize+score expression per comparison."""
-    return _argmax_lang(lang_scores(text_col))
-
-
 def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds ``pred_lang`` to the documents DataFrame.
 
@@ -143,13 +136,6 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
         punct_pct.alias("punct_pct"),
         (len_ok + stop_ok + tok_ok).cast("int").alias("quality_pct"),
     )
-
-
-def doc_fingerprint(text_col):
-    """Whole-document normalized fingerprint (md5 of squashed lowercase) —
-    the same key exact_dedup groups on (dedup.normalized_fingerprint);
-    this Column-input variant serves expression composition."""
-    return F.md5(F.lower(F.regexp_replace(text_col, r"\s+", " ")))
 
 
 def winnowing_fingerprints(

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import socket
 import time
 import uuid
@@ -476,13 +477,26 @@ def compact_table(spark, table_dir: str,
     )
 
 
+def _attempt_dir(root: str, f: str) -> str | None:
+    """The ``data/`` or ``_lineage/`` :func:`run_attempt` directory of
+    the table at absolute path ``root`` that holds file ``f``, or None."""
+    parts = os.path.relpath(os.path.abspath(f), root).split(os.sep)
+    if len(parts) > 2 and parts[0] in ("data", "_lineage") \
+            and parts[1].startswith("run-"):
+        return os.path.join(root, parts[0], parts[1])
+    return None
+
+
 def expire_snapshots(table_dir: str, keep_last: int = 2,
                      lock_timeout_sec: float = 60.0) -> dict:
     """Expire all but the newest ``keep_last`` snapshots of the chain
     from ``_current`` and delete the data / lineage files no kept
     snapshot references (Iceberg ``expire_snapshots``: time travel to an
-    expired id fails, shared files survive).  The ``_runs/`` markers
-    stay, so an expired run id still counts as committed.
+    expired id fails, shared files survive), then each attempt directory
+    an expired manifest lists once no kept file lies in it (with its
+    ``_SUCCESS`` / ``.crc`` files; a staging directory no manifest
+    names is left alone).  The ``_runs/`` markers stay, so an expired
+    run id still counts as committed.
 
     Runs under the commit lock, so no commit publishes a file being
     deleted, and deletes any manifest above the current id (left, maybe
@@ -501,13 +515,20 @@ def expire_snapshots(table_dir: str, keep_last: int = 2,
         kept, expired = chain[:keep_last], chain[keep_last:][::-1]
         referenced = {f for m in kept
                       for f in m["data_files"] + m["lineage_files"]}
+        root = os.path.abspath(table_dir)
+        kept_dirs = {_attempt_dir(root, f) for f in referenced}
+        expired_dirs = set()
         deleted = 0
         for m in expired:
             for f in set(m["data_files"]) | set(m["lineage_files"]):
                 if f not in referenced and os.path.exists(f):
                     os.remove(f)
                     deleted += 1
+                expired_dirs.add(_attempt_dir(root, f))
             os.remove(sd / f"snap-{m['snapshot_id']}.json")
+        for d in expired_dirs - kept_dirs - {None}:
+            if os.path.isdir(d):
+                shutil.rmtree(d)
         return {"expired": [m["snapshot_id"] for m in expired],
                 "deleted_files": deleted,
                 "kept": sorted(m["snapshot_id"] for m in kept)}

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _make_fake_fetcher():
+def _stub_fetcher():
     """Deterministic fake, built inside a function so cloudpickle
     serializes it by value (executors cannot import the tests module)."""
 
@@ -32,7 +32,7 @@ def test_fetch_media_semantics(spark):
     ]
     df = spark.createDataFrame(rows, "media_ref string, url string")
     out = {r.media_ref: r for r in
-           fetch_media(df, fetcher=_make_fake_fetcher(), max_size_mb=1).collect()}
+           fetch_media(df, fetcher=_stub_fetcher(), max_size_mb=1).collect()}
     assert out["m1"].n_bytes == 1000 and out["m1"].error is None
     assert out["m2"].content is None and "cap" in out["m2"].error
     assert out["m3"].content is None and "TimeoutError" in out["m3"].error
@@ -46,7 +46,7 @@ def test_fetch_parallelism_repartitions(spark):
         [(f"m{i}", f"fake://ok/{i+1}") for i in range(20)],
         "media_ref string, url string",
     )
-    out = fetch_media(df, fetcher=_make_fake_fetcher(), parallelism=5)
+    out = fetch_media(df, fetcher=_stub_fetcher(), parallelism=5)
     assert out.rdd.getNumPartitions() == 5
     assert out.filter("error is null").count() == 20
 

@@ -67,9 +67,10 @@ def test_main_content_fault_isolation(spark):
 
 
 def test_pdf_layout_parse(spark):
-    from red_seal_ocr_spark.operators.multimodal import make_fake_pdf, pdf_text
+    from red_seal_ocr_spark.operators.multimodal import encode_pdf, pdf_text
 
-    rows = [(f"p{i}", make_fake_pdf(f"p{i}", n_pages=i + 1)) for i in range(4)]
+    rows = [(f"p{i}", encode_pdf([f"page {p} of p{i}" for p in range(i + 1)]))
+            for i in range(4)]
     rows.append(("bad", b"%PDF-not-really"))
     df = spark.createDataFrame(rows, "media_ref string, content binary")
     out = {r.media_ref: r for r in pdf_text(df).collect()}
@@ -79,13 +80,6 @@ def test_pdf_layout_parse(spark):
         assert f"page {i} of p{i}" in r.text
         assert r.n_chars == len(r.text)
     assert not out["bad"].ok
-
-
-def test_fake_pdf_deterministic():
-    from red_seal_ocr_spark.operators.multimodal import make_fake_pdf
-
-    assert make_fake_pdf("x") == make_fake_pdf("x")
-    assert make_fake_pdf("x") != make_fake_pdf("y")
 
 
 def test_site_template_strip_semantics(spark):

@@ -82,13 +82,15 @@ def test_no_batch_loop_outside_the_items_module():
 
 
 def test_truncated_pdf_gives_one_failure_row(spark):
-    """A FAKP payload cut inside its last page: one ok=false row, never
-    ok=true rows for the pages before the cut."""
-    from red_seal_ocr_spark.operators.multimodal import make_fake_pdf, pdf_pages
+    """A PDF cut inside its last page's content stream: one ok=false row,
+    never ok=true rows for the pages before the cut."""
+    from red_seal_ocr_spark.operators.multimodal import encode_pdf, pdf_pages
 
+    pdf = encode_pdf(["page 0", "page 1", "page 2"])
+    end = pdf.rindex(b"endstream")  # the last object is page 2's contents
+    cut = pdf[: (pdf.rindex(b"stream", 0, end) + end) // 2]
     media = spark.createDataFrame(
-        [("good", make_fake_pdf("good")), ("cut", make_fake_pdf("cut")[:-5])],
-        "media_ref string, content binary",
+        [("good", pdf), ("cut", cut)], "media_ref string, content binary",
     )
     rows = sorted(pdf_pages(media).collect(),
                   key=lambda r: (r.media_ref, r.page_idx or 0))
@@ -99,15 +101,24 @@ def test_truncated_pdf_gives_one_failure_row(spark):
 
 
 def test_truncated_video_gives_one_failure_row(spark):
-    """A FAKV payload cut inside its last frame: one ok=false row, never
-    ok=true rows for the frames before the cut."""
+    """An AVI cut inside its last frame: one ok=false row, never ok=true
+    rows for the frames before the cut."""
+    import struct
+
+    import numpy as np
+
     from red_seal_ocr_spark.operators.multimodal import (
-        make_fake_video,
+        encode_avi_mjpeg,
         sample_video_frames,
     )
 
+    rng = np.random.default_rng(7)
+    avi = encode_avi_mjpeg(
+        [rng.integers(0, 256, (16, 16, 3), dtype=np.uint8) for _ in range(6)])
+    last = avi.rindex(b"00dc", 0, avi.index(b"idx1"))  # the last movi chunk
+    (size,) = struct.unpack("<I", avi[last + 4 : last + 8])
     media = spark.createDataFrame(
-        [("good", make_fake_video("good")), ("cut", make_fake_video("cut")[:-5])],
+        [("good", avi), ("cut", avi[: last + 8 + size // 2])],
         "media_ref string, content binary",
     )
     rows = sorted(sample_video_frames(media, every_nth=1).collect(),

@@ -428,6 +428,11 @@ def test_expire_snapshots_reclaims_only_unreferenced(spark, tmp_path):
     assert canon(read_table(spark, table)) == before  # current unaffected
     lin = read_table(spark, table, lineage=True)
     assert {r.run_id for r in lin.collect()} == {"a", "b"}
+    # the expired attempts' directories go too, with their _SUCCESS and
+    # .crc files; the kept snapshot's data and lineage directories stay
+    assert [d.startswith("run-compact-1-")
+            for d in os.listdir(f"{table}/data")] == [True]
+    assert sorted(d.split("-")[1] for d in os.listdir(f"{table}/_lineage")) == ["a", "b"]
     # time travel to an expired snapshot now fails loudly
     with _pytest.raises(ValueError):
         read_table(spark, table, snapshot_id=0)

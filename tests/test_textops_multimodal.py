@@ -95,9 +95,14 @@ def test_image_thumbnails(spark, media):
 
 
 def test_audio_metadata(spark):
-    from red_seal_ocr_spark.operators.multimodal import audio_metadata, make_fake_audio
+    import numpy as np
 
-    rows = [(f"a{i}", make_fake_audio(f"a{i}")) for i in range(5)]
+    from red_seal_ocr_spark.operators.multimodal import audio_metadata, encode_wav
+
+    rng = np.random.default_rng(42)
+    rows = [(f"a{i}", encode_wav(0.25 * rng.standard_normal(int(rng.integers(100, 2000))),
+                                 rate=int(rng.choice([8000, 16000, 44100]))))
+            for i in range(5)]
     rows.append(("bad", b"not-audio"))
     df = spark.createDataFrame(rows, "media_ref string, content binary")
     out = {r.media_ref: r for r in audio_metadata(df).collect()}
@@ -111,10 +116,15 @@ def test_audio_metadata(spark):
 
 
 def test_video_frame_sampling(spark):
-    from red_seal_ocr_spark.functions.png import decode_png
-    from red_seal_ocr_spark.operators.multimodal import make_fake_video, sample_video_frames
+    import numpy as np
 
-    rows = [("v0", make_fake_video("v0", n_frames=6)), ("bad", b"junk")]
+    from red_seal_ocr_spark.functions.png import decode_png
+    from red_seal_ocr_spark.operators.multimodal import encode_avi_mjpeg, sample_video_frames
+
+    rng = np.random.default_rng(0)
+    video = encode_avi_mjpeg(
+        [rng.integers(0, 256, (16, 16, 3), dtype=np.uint8) for _ in range(6)])
+    rows = [("v0", video), ("bad", b"junk")]
     df = spark.createDataFrame(rows, "media_ref string, content binary")
     out = sample_video_frames(df, every_nth=2).collect()
     good = [r for r in out if r.ok]
@@ -124,18 +134,11 @@ def test_video_frame_sampling(spark):
     assert any(not r.ok for r in out)
 
 
-def test_deterministic_fake_payloads():
-    from red_seal_ocr_spark.operators.multimodal import make_fake_audio, make_fake_video
-
-    assert make_fake_audio("x") == make_fake_audio("x")
-    assert make_fake_video("x") == make_fake_video("x")
-    assert make_fake_audio("x") != make_fake_audio("y")
-
-
 # ---------------------------------------------------------------------------
-# HAVE_*_LIBS contract: the import-try flags flip between the real decoder
-# branch and the deterministic fake, both ways (VERDICT r01 item 10).
-# The real branches are exercised by injecting fake library modules.
+# HAVE_*_LIBS contract: a payload the engine's parser rejects goes to the
+# optional library when its import-try flag is set, and raises when it is
+# not; the engine's parser decodes real payloads either way (VERDICT r01
+# item 10).  The library branches run against injected fake modules.
 # ---------------------------------------------------------------------------
 
 
@@ -161,14 +164,23 @@ def test_audio_flag_flips_to_real_decoder(monkeypatch):
     assert rate == 22050
     assert calls["data"] == b"OPAQUE-REAL-AUDIO"
     assert np.allclose(samples, [0.2, 0.3])  # channel-averaged
+    # a RIFF/WAVE the engine's parser rejects (no fmt/data chunk) goes
+    # to soundfile too
+    bad_wav = b"RIFF\x00\x00\x00\x00WAVEgarbage"
+    assert mm._decode_audio(bad_wav)[0] == 22050
+    assert calls["data"] == bad_wav
+    # a WAV the engine parses never reaches soundfile
+    assert mm._decode_audio(mm.encode_wav([0.5, -0.5], 8000))[0] == 8000
+    assert calls["data"] == bad_wav
 
-    # flag off -> the FAKA fake path rejects the same payload
+    # flag off -> both rejected payloads raise; real WAV still decodes
     monkeypatch.setattr(mm, "HAVE_AUDIO_LIBS", False)
     import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        mm._decode_audio(b"OPAQUE-REAL-AUDIO")
-    assert mm._decode_audio(mm.make_fake_audio("m-1"))[0] in (8000, 16000, 44100)
+    for payload in (b"OPAQUE-REAL-AUDIO", bad_wav):
+        with _pytest.raises(ValueError):
+            mm._decode_audio(payload)
+    assert mm._decode_audio(mm.encode_wav([0.1, 0.2], 16000))[0] == 16000
 
 
 def test_video_flag_flips_to_real_demux(monkeypatch):
@@ -207,8 +219,8 @@ def test_video_flag_flips_to_real_demux(monkeypatch):
     assert np.array_equal(decode_png(frames[0]), frame_px)
 
     monkeypatch.setattr(mm, "HAVE_VIDEO_LIBS", False)
-    fake = mm.make_fake_video("m-2", n_frames=3)
-    assert len(list(mm._iter_video_frames(fake))) == 3
+    avi = mm.encode_avi_mjpeg([frame_px] * 3)
+    assert len(list(mm._iter_video_frames(avi))) == 3
 
 
 def test_pdf_flag_flips_to_real_parser(monkeypatch):
@@ -235,7 +247,7 @@ def test_pdf_flag_flips_to_real_parser(monkeypatch):
     assert list(mm._iter_pdf_pages(b"OPAQUE-REAL-PDF")) == ["alpha", ""]
 
     monkeypatch.setattr(mm, "HAVE_PDF_LIBS", False)
-    pages = list(mm._iter_pdf_pages(mm.make_fake_pdf("m-3", n_pages=2)))
+    pages = list(mm._iter_pdf_pages(mm.encode_pdf(["page 0 of m-3", "page 1 of m-3"])))
     assert len(pages) == 2 and pages[0].startswith("page 0 of m-3")
 
 
@@ -307,7 +319,7 @@ def test_wav_error_contract():
 
 def test_audio_metadata_on_real_wav_through_spark(spark):
     """q27-style metadata computed from real PCM bytes in-sandbox: the
-    audio tier no longer needs the FAKA fake or soundfile."""
+    audio tier needs no soundfile."""
     import numpy as np
 
     from red_seal_ocr_spark.operators.multimodal import audio_metadata, encode_wav

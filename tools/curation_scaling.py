@@ -35,8 +35,8 @@ Ops measured (each a corpus-scale job over the replicated corpus):
 - ``bpe_join``  the corpus-scale half of bpe_token_counts (explode +
   equi-join on the word key + per-doc sum) against a pre-encoded
   vocabulary.  The OTHER half — the iterative vocabulary encode — is
-  corpus-INDEPENDENT (vocab-bound: tools/curation_tier_stress.py shows
-  50k docs cost the same rounds as 500), so its wall time is reported
+  corpus-INDEPENDENT (vocab-bound: 50k docs cost the same rounds as
+  500, PLANS.md "q16d BPE encode"), so its wall time is reported
   once per level as ``bpe_encode_constant_sec`` and excluded from the
   scaling ratio: at 10^12 docs it is a constant prefix, not a scaling
   term.
